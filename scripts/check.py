@@ -23,12 +23,6 @@ import pandas as pd
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
-def canon(v):
-    if isinstance(v, float):
-        return v
-    return v
-
-
 def rows_key(row):
     return tuple((x is None, str(x)) for x in row)
 

@@ -1,19 +1,9 @@
 package graft
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // compression defaults (zstd level 3 etc.) live in ONE place,
-    // sys-prop-overridable for A/B probes: graft.util.EngineDefaults
-    val spark = graft.util.EngineDefaults.withCompression(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.EngineDefaults.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Noop sink materializes every row/column of the plan (count() lets
     // Catalyst prune computed projections — it would time row counting).
     // Failures are COUNTED, not swallowed: a broken query would otherwise

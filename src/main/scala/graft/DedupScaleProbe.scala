@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.dedup.{Dedup, DedupProbe}
@@ -18,15 +17,7 @@ object DedupScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val mode = if (args.length > 1) args(1) else "cands"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    // compression defaults (zstd level 3 etc.) live in ONE place,
-    // sys-prop-overridable for A/B probes: graft.util.EngineDefaults
-    val spark = graft.util.EngineDefaults.withCompression(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.EngineDefaults.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt)
     val docs = Tables.documents(spark, sfDir)
     lazy val sets = Dedup.hashedShingleSets(docs).filter(col("sz") > 0).localCheckpoint()
     lazy val sig = Dedup.withSignature(sets).localCheckpoint()

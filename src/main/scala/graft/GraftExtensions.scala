@@ -1,142 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{Args, BinaryFunctions, BloomFunctions, BmpStats, BpeCounts, BpeFunctions, ByteStride, LangIdFunctions, LangIdHits, MediaDecodeFunctions, PngStats, RepetitionStats, ShingleHashFunctions, SortedIntersectCount, TextFunctions, VecDot, VectorFunctions, WavStats, Winnow, WinnowFunctions, WordShingleHashes, WordShingles}
-
-/** `spark.sql.extensions=graft.GraftExtensions` injects the engine's native
-  * functions at session build time — the config-file route to the same
-  * registration `VectorFunctions.ensureRegistered` performs at runtime.
-  * Scalar config parameters (shingle width, stride, winnow k/w) are
-  * validated as foldable INT literals ([[graft.functions.Args]]) so a
-  * column or mistyped literal fails analysis with the function name, not a
-  * ClassCastException.
+/** `spark.sql.extensions=graft.GraftExtensions` injects every native
+  * function at session build: the config-file route to the same table
+  * [[graft.functions.Natives.install]] registers at runtime.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier(VectorFunctions.dotName),
-      new ExpressionInfo(classOf[VecDot].getName, VectorFunctions.dotName),
-      (exprs: Seq[Expression]) => VecDot(exprs(0), exprs(1)),
-    ))
-    ext.injectFunction((
-      FunctionIdentifier(TextFunctions.shinglesName),
-      new ExpressionInfo(classOf[WordShingles].getName, TextFunctions.shinglesName),
-      (exprs: Seq[Expression]) =>
-        WordShingles(exprs.head, Args.intLiteral(TextFunctions.shinglesName, exprs, 1)),
-    ))
-    ext.injectFunction((
-      FunctionIdentifier(BinaryFunctions.strideName),
-      new ExpressionInfo(classOf[ByteStride].getName, BinaryFunctions.strideName),
-      (exprs: Seq[Expression]) =>
-        ByteStride(exprs.head, Args.intLiteral(BinaryFunctions.strideName, exprs, 1)),
-    ))
-    ext.injectFunction((
-      FunctionIdentifier(WinnowFunctions.winnowName),
-      new ExpressionInfo(classOf[Winnow].getName, WinnowFunctions.winnowName),
-      (exprs: Seq[Expression]) => Winnow(exprs.head,
-        Args.intLiteral(WinnowFunctions.winnowName, exprs, 1),
-        Args.intLiteral(WinnowFunctions.winnowName, exprs, 2)),
-    ))
-    ext.injectFunction((
-      FunctionIdentifier(ShingleHashFunctions.shingleHashesName),
-      new ExpressionInfo(
-        classOf[WordShingleHashes].getName, ShingleHashFunctions.shingleHashesName),
-      (exprs: Seq[Expression]) => WordShingleHashes(exprs.head,
-        Args.intLiteral(ShingleHashFunctions.shingleHashesName, exprs, 1)),
-    ))
-    ext.injectFunction((
-      FunctionIdentifier(ShingleHashFunctions.intersectName),
-      new ExpressionInfo(
-        classOf[SortedIntersectCount].getName, ShingleHashFunctions.intersectName),
-      (exprs: Seq[Expression]) => SortedIntersectCount(exprs(0), exprs(1)),
-    ))
-    ext.injectFunction((
-      FunctionIdentifier(LangIdFunctions.hitsName),
-      new ExpressionInfo(classOf[LangIdHits].getName, LangIdFunctions.hitsName),
-      (exprs: Seq[Expression]) => LangIdHits(exprs.head),
-    ))
-    ext.injectFunction((
-      FunctionIdentifier(TextFunctions.repetitionName),
-      new ExpressionInfo(classOf[RepetitionStats].getName, TextFunctions.repetitionName),
-      (exprs: Seq[Expression]) => RepetitionStats(exprs.head),
-    ))
-    ext.injectFunction((
-      FunctionIdentifier(BpeFunctions.countsName),
-      new ExpressionInfo(classOf[BpeCounts].getName, BpeFunctions.countsName),
-      (exprs: Seq[Expression]) => BpeCounts(exprs.head),
-    ))
-    ext.injectFunction((
-      FunctionIdentifier(BpeFunctions.totalName),
-      new ExpressionInfo(
-        classOf[graft.functions.BpeTotal].getName, BpeFunctions.totalName),
-      (exprs: Seq[Expression]) => graft.functions.BpeTotal(exprs.head),
-    ))
-    ext.injectFunction((
-      FunctionIdentifier(VectorFunctions.pqArgminName),
-      new ExpressionInfo(
-        classOf[graft.functions.PqArgmin].getName, VectorFunctions.pqArgminName),
-      (exprs: Seq[Expression]) => graft.functions.PqArgmin(exprs(0), exprs(1)),
-    ))
-    ext.injectFunction((
-      FunctionIdentifier(graft.functions.JpegFunctions.statsName),
-      new ExpressionInfo(
-        classOf[graft.functions.JpegStats].getName,
-        graft.functions.JpegFunctions.statsName),
-      (exprs: Seq[Expression]) => graft.functions.JpegStats(exprs.head),
-    ))
-    ext.injectFunction((
-      FunctionIdentifier(MediaDecodeFunctions.pngName),
-      new ExpressionInfo(classOf[PngStats].getName, MediaDecodeFunctions.pngName),
-      (exprs: Seq[Expression]) => PngStats(exprs.head),
-    ))
-    ext.injectFunction((
-      FunctionIdentifier(MediaDecodeFunctions.bmpName),
-      new ExpressionInfo(classOf[BmpStats].getName, MediaDecodeFunctions.bmpName),
-      (exprs: Seq[Expression]) => BmpStats(exprs.head),
-    ))
-    ext.injectFunction((
-      FunctionIdentifier(MediaDecodeFunctions.wavName),
-      new ExpressionInfo(classOf[WavStats].getName, MediaDecodeFunctions.wavName),
-      (exprs: Seq[Expression]) => WavStats(exprs.head),
-    ))
-    ext.injectFunction((
-      FunctionIdentifier(BloomFunctions.aggName),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        BloomFunctions.aggName),
-      (exprs: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          exprs(0), exprs(1), exprs(2)),
-    ))
-    Seq[(String, Class[_], Seq[Expression] => Expression)](
-      (graft.multimodal.MediaSynthFunctions.pngName,
-        classOf[graft.multimodal.PngSynth], es => graft.multimodal.PngSynth(es.head)),
-      (graft.multimodal.MediaSynthFunctions.pngFixedName,
-        classOf[graft.multimodal.PngFixedSynth], es => graft.multimodal.PngFixedSynth(es.head)),
-      (graft.multimodal.MediaSynthFunctions.pngDynamicName,
-        classOf[graft.multimodal.PngDynamicSynth], es => graft.multimodal.PngDynamicSynth(es.head)),
-      (graft.multimodal.MediaSynthFunctions.jpegName,
-        classOf[graft.multimodal.JpegSynth], es => graft.multimodal.JpegSynth(es.head)),
-      (graft.multimodal.MediaSynthFunctions.jpegAcName,
-        classOf[graft.multimodal.JpegAcSynth], es => graft.multimodal.JpegAcSynth(es.head)),
-      (graft.multimodal.MediaSynthFunctions.bmpName,
-        classOf[graft.multimodal.BmpSynth], es => graft.multimodal.BmpSynth(es.head)),
-      (graft.multimodal.MediaSynthFunctions.wavName,
-        classOf[graft.multimodal.WavSynth], es => graft.multimodal.WavSynth(es.head)),
-    ).foreach { case (name, cls, builder) =>
-      ext.injectFunction((
-        FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
-    }
-    ext.injectFunction((
-      FunctionIdentifier(BloomFunctions.containsName),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        BloomFunctions.containsName),
-      (exprs: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(exprs(0), exprs(1)),
-    ))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    graft.functions.Natives.all.foreach(ext.injectFunction)
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.io.{IncrementalView, SnapshotTable}
@@ -24,15 +23,7 @@ object MvScaleProbe {
   def main(args: Array[String]): Unit = {
     val Array(work, rowsS) = args.take(2)
     val n = rowsS.toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // compression defaults (zstd level 3 etc.) live in ONE place,
-    // sys-prop-overridable for A/B probes: graft.util.EngineDefaults
-    val spark = graft.util.EngineDefaults.withCompression(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.EngineDefaults.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()
       val r = f

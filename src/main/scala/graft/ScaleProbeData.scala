@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-probe data amplifier: writes a FACTOR× copy of a testdata
@@ -164,15 +164,7 @@ object ScaleProbeData {
         ("crawl", args(4).split(":").lift(1).map(_.toInt).getOrElse(1))
       else ("tagged", 0)
     val factor = factorS.toInt
-    // compression defaults (zstd level 3 etc.) live in ONE place,
-    // sys-prop-overridable for A/B probes: graft.util.EngineDefaults
-    val spark = graft.util.EngineDefaults.withCompression(SparkSession.builder())
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.EngineDefaults.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     // key bases first (max+1 per shifted key column, on its OWNER table) —
     // restricted to the bases the SELECTED tables actually shift by, so a
     // probe-of-a-probe (whose source dir holds only the subset's tables,

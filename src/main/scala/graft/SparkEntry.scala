@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.functions.Natives
 import graft.util.Q
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -67,12 +68,19 @@ object SparkEntry {
     * validate/quarantine → 3-pass dedup → top-10 report) on the fixture
     * document. Driver smoke-checks rows>0 (7 report rows).
     */
-  def entry(spark: SparkSession): DataFrame =
+  def entry(spark: SparkSession): DataFrame = {
+    Natives.install(spark)
     graft.etl.AdPipeline.fixtureRun(spark).report
+  }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each closure
+    * installs the native functions first: the caller's session may not
+    * come from [[graft.util.EngineDefaults.local]].
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(q => q.name -> q.run).toMap
+    modules.map { q =>
+      q.name -> { (s: SparkSession, d: String) => Natives.install(s); q.run(s, d) }
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.

@@ -73,7 +73,6 @@ object Dedup {
     * path.
     */
   def shingleSets(docs: DataFrame): DataFrame = {
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       // coalesce: the HOF formulation mapped NULL text to an empty set (its
       // when().otherwise() fell through); keep that contract
@@ -96,7 +95,6 @@ object Dedup {
     * Same repartition / no-filter rationale as [[shingleSets]].
     */
   def hashedShingleSets(docs: DataFrame): DataFrame = {
-    graft.functions.ShingleHashFunctions.ensureRegistered(docs.sparkSession)
     docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id"),
         coalesce(graft.functions.ShingleHashFunctions.wordShingleHashes(col("text"), 3),
@@ -1034,7 +1032,6 @@ object Dedup {
       ORDER BY g.doc_id
     """),
   ) { (s, d) =>
-    graft.functions.ShingleHashFunctions.ensureRegistered(s)
     // windows carry as 64-bit xxhash64 values (the fused shingle+hash
     // kernel at n = 20), not ~120-byte strings — the window-key shuffle is
     // the whole cost here, and the hash layout is the jaccard family's
@@ -1073,7 +1070,6 @@ object Dedup {
       ORDER BY canonical_id
     """),
   ) { (s, d) =>
-    graft.functions.TextFunctions.ensureRegistered(s)
     Tables.documents(s, d)
       .groupBy(md5(TextAnalysis.normalize(col("text")).cast(BinaryType)).as("fingerprint"))
       .agg(min(col("doc_id")).as("canonical_id"), count(lit(1)).as("n_copies"))
@@ -1116,7 +1112,6 @@ object Dedup {
     * the signature frame (kernel returns null; filtered here).
     */
   def withSignature(sets: DataFrame): DataFrame = {
-    graft.functions.ShingleHashFunctions.ensureRegistered(sets.sparkSession)
     // sz (when the caller's frame has it) rides along for the signature
     // prefilter's size-ratio bound — free here, one less join later
     val keep =
@@ -1585,7 +1580,6 @@ object Dedup {
     * pay even once more than necessary.
     */
   private def unshuffledSets(docs: DataFrame): DataFrame = {
-    graft.functions.ShingleHashFunctions.ensureRegistered(docs.sparkSession)
     balancedIfNarrow(docs).select(col("doc_id"),
       coalesce(graft.functions.ShingleHashFunctions.wordShingleHashes(col("text"), 3),
         array().cast(ArrayType(LongType))).as("shh"))

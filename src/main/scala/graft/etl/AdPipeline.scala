@@ -15,8 +15,13 @@ object AdPipeline {
 
   final case class Outputs(curated: DataFrame, quarantine: DataFrame, report: DataFrame)
 
-  /** In-memory run over raw JSON documents (used by fixtures and entry). */
-  def run(rawDocs: DataFrame, now: Instant): Outputs = {
+  /** In-memory run over raw JSON documents (used by fixtures and entry).
+    * The parsed frame stays persisted: callers read the outputs lazily.
+    */
+  def run(rawDocs: DataFrame, now: Instant): Outputs = persistedRun(rawDocs, now)._2
+
+  /** The run plus the frame it persisted, for callers that can release it. */
+  private def persistedRun(rawDocs: DataFrame, now: Instant): (DataFrame, Outputs) = {
     val parsed = Transform.derive(Transform.flatten(rawDocs))
     // One pass, two outputs: persist the flagged frame so the valid and
     // quarantine branches don't recompute the scan (SURVEY §4).
@@ -24,7 +29,7 @@ object AdPipeline {
     val (valid, quarantine) = Transform.validate(parsed)
     val curated = Transform.dedup(valid)
       .select(AdSchema.validated.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-    Outputs(curated, quarantine, Report.report(curated, now))
+    (parsed, Outputs(curated, quarantine, Report.report(curated, now)))
   }
 
   /** File-based run: landing dir of raw JSON documents → output dirs. */
@@ -36,9 +41,13 @@ object AdPipeline {
       reportDir: String,
       now: Instant,
   ): Unit = {
-    val out = run(Sources.rawAdsJson(spark, rawJsonPath), now)
-    Sinks.quarantineJson(out.quarantine, quarantineDir)
-    Sinks.curatedParquet(out.curated, curatedDir)
+    val (parsed, out) = persistedRun(Sources.rawAdsJson(spark, rawJsonPath), now)
+    // the report reads curated back from parquet, so once both sinks have
+    // written nothing reads the persisted frame again: release it
+    try {
+      Sinks.quarantineJson(out.quarantine, quarantineDir)
+      Sinks.curatedParquet(out.curated, curatedDir)
+    } finally parsed.unpersist()
     Sinks.reportCsv(Sources.curatedParquet(spark, curatedDir)
       .transform(Report.report(_, now)), reportDir)
   }

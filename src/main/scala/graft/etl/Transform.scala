@@ -70,8 +70,10 @@ object Transform {
 
     // P4 text (transform_raw_data.py:121-131): first card's body for
     // DCO/CAROUSEL else snapshot.body.text; any missing path → "" (row kept).
+    // `get`, not `element_at`: an empty `cards` array is a missing path
+    // (NULL), where ANSI element_at would fail the whole batch.
     val adText = coalesce(
-      when(fmt.isin("DCO", "CAROUSEL"), element_at(cards, 1).getField("body"))
+      when(fmt.isin("DCO", "CAROUSEL"), get(cards, lit(0)).getField("body"))
         .otherwise(ad.getField("snapshot").getField("body").getField("text")),
       lit(""),
     )
@@ -92,7 +94,6 @@ object Transform {
       lit(0L),
     )
 
-    graft.functions.LangIdFunctions.ensureRegistered(flat.sparkSession)
     flat.select(
       col("doc_id"), col("group_idx"), col("pos"),
       ad.getField("ad_archive_id").as("ad_id"),

@@ -4,16 +4,7 @@ import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.types.IntegerType
 
-/** Builder-time argument validation shared by every native-function
-  * registration (`ensureRegistered` / [[graft.GraftExtensions]]).
-  *
-  * The registry builders receive raw analyzed expressions; blindly calling
-  * `exprs(i).eval().asInstanceOf[Int]` on a column argument or a non-Int
-  * literal (`3L`, `'3'`) dies with a bare ClassCastException/NPE deep in
-  * analysis. These parameters configure codegen (shingle width, stride,
-  * winnow window) so they MUST be integer literals — reject anything else
-  * with an AnalysisException naming the function and position.
-  */
+/** The foldable-INT-literal guard of the [[Natives]] builders. */
 private[graft] object Args {
 
   def intLiteral(fn: String, exprs: Seq[Expression], pos: Int): Int = {

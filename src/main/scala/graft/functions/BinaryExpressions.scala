@@ -53,16 +53,12 @@ object ByteStride {
   }
 }
 
-/** Session registration, same contract as [[VectorFunctions]]. */
+/** SQL names and Column handles; [[Natives]] registers the kernels. */
 object BinaryFunctions {
 
   val strideName = "graft_byte_stride"
 
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      strideName,
-      exprs => ByteStride(exprs.head, Args.intLiteral(strideName, exprs, 1)),
-      "built-in")
+  def ensureRegistered(spark: SparkSession): Unit = Natives.install(spark)
 
   def byteStride(payload: Column, k: Int): Column =
     call_function(strideName, payload, org.apache.spark.sql.functions.lit(k))

@@ -1,11 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions.{call_function, lit}
 
-/** Session registration for Spark's bloom-filter expressions.
+/** SQL names and Column handles for Spark's bloom-filter expressions.
   *
   * Catalyst ships BloomFilterAggregate / BloomFilterMightContain for its
   * own runtime filtering (InjectRuntimeFilter) but does not register them
@@ -23,16 +21,7 @@ object BloomFunctions {
   val aggName = "graft_bloom_agg"
   val containsName = "graft_might_contain"
 
-  def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      aggName,
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      containsName,
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)),
-      "built-in")
-  }
+  def ensureRegistered(spark: SparkSession): Unit = Natives.install(spark)
 
   /** Aggregate an xxhash64-of-key column into a bloom filter sized for
     * `expectedItems` keys over `numBits` bits.

@@ -425,18 +425,13 @@ object BpeTotal {
   }
 }
 
-/** Session registration, same contract as [[VectorFunctions]]. */
+/** SQL names and Column handles; [[Natives]] registers the kernels. */
 object BpeFunctions {
 
   val countsName = "graft_bpe_counts"
   val totalName = "graft_bpe_total"
 
-  def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      countsName, exprs => BpeCounts(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      totalName, exprs => BpeTotal(exprs.head), "built-in")
-  }
+  def ensureRegistered(spark: SparkSession): Unit = Natives.install(spark)
 
   def bpeCounts(text: Column): Column = call_function(countsName, text)
 

@@ -1696,15 +1696,11 @@ case class JpegColorStats(child: Expression) extends UnaryExpression {
   override def prettyName: String = "graft_jpeg_color_stats"
 }
 
+/** SQL names and Column handles; [[Natives]] registers the kernels. */
 object JpegFunctions {
   val statsName = "graft_jpeg_stats"
   val colorStatsName = "graft_jpeg_color_stats"
-  def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      statsName, exprs => JpegStats(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      colorStatsName, exprs => JpegColorStats(exprs.head), "built-in")
-  }
+  def ensureRegistered(spark: SparkSession): Unit = Natives.install(spark)
   def jpegStats(payload: Column): Column = call_function(statsName, payload)
   def jpegColorStats(payload: Column): Column = call_function(colorStatsName, payload)
 }

@@ -261,7 +261,6 @@ object LangId {
     */
   def withLangId(df: org.apache.spark.sql.DataFrame, text: Column, out: String)
       : org.apache.spark.sql.DataFrame = {
-    LangIdFunctions.ensureRegistered(df.sparkSession)
     df.withColumn(out, langId(text))
   }
 
@@ -375,12 +374,10 @@ object LangIdHits {
   }
 }
 
-/** Session registration, same contract as [[VectorFunctions]]. */
+/** SQL names and Column handles; [[Natives]] registers the kernels. */
 object LangIdFunctions {
 
   val hitsName = "graft_langid_hits"
 
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      hitsName, exprs => LangIdHits(exprs.head), "built-in")
+  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = Natives.install(spark)
 }

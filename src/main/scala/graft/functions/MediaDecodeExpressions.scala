@@ -726,7 +726,7 @@ case class WavStats(child: Expression) extends MediaDecodeExpression {
   override def prettyName: String = "graft_wav_stats"
 }
 
-/** Session registration, same contract as [[VectorFunctions]]. */
+/** SQL names and Column handles; [[Natives]] registers the kernels. */
 object MediaDecodeFunctions {
 
   val pngName = "graft_png_stats"
@@ -734,13 +734,7 @@ object MediaDecodeFunctions {
   val wavName = "graft_wav_stats"
   val embedName = "graft_media_embed"
 
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(pngName, exprs => PngStats(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(bmpName, exprs => BmpStats(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(wavName, exprs => WavStats(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(embedName, exprs => MediaEmbedding(exprs.head), "built-in")
-  }
+  def ensureRegistered(spark: SparkSession): Unit = Natives.install(spark)
 
   def pngStats(payload: Column): Column = call_function(pngName, payload)
   def bmpStats(payload: Column): Column = call_function(bmpName, payload)

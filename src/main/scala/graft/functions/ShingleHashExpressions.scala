@@ -374,7 +374,7 @@ object MinHashSignature {
   }
 }
 
-/** Session registration, same contract as [[VectorFunctions]]. */
+/** SQL names and Column handles; [[Natives]] registers the kernels. */
 object ShingleHashFunctions {
 
   val shingleHashesName = "graft_word_shingle_hashes"
@@ -382,24 +382,7 @@ object ShingleHashFunctions {
   val minHashSigName = "graft_minhash_signature"
   val byteLaneAgreeName = "graft_byte_lane_agree"
 
-  def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      shingleHashesName,
-      exprs => WordShingleHashes(exprs.head, Args.intLiteral(shingleHashesName, exprs, 1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      intersectName,
-      exprs => SortedIntersectCount(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      minHashSigName,
-      exprs => MinHashSignature(exprs.head, Args.intLiteral(minHashSigName, exprs, 1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      byteLaneAgreeName,
-      exprs => ByteLaneAgree(exprs(0), exprs(1)),
-      "built-in")
-  }
+  def ensureRegistered(spark: SparkSession): Unit = Natives.install(spark)
 
   def wordShingleHashes(text: Column, n: Int): Column =
     call_function(shingleHashesName, text, org.apache.spark.sql.functions.lit(n))

@@ -293,23 +293,14 @@ object NormalizeText {
   }
 }
 
-/** Session registration, same contract as [[VectorFunctions]]. */
+/** SQL names and Column handles; [[Natives]] registers the kernels. */
 object TextFunctions {
 
   val shinglesName = "graft_word_shingles"
   val repetitionName = "graft_repetition_stats"
   val normalizeName = "graft_normalize_text"
 
-  def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      shinglesName,
-      exprs => WordShingles(exprs.head, Args.intLiteral(shinglesName, exprs, 1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      repetitionName, exprs => RepetitionStats(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      normalizeName, exprs => NormalizeText(exprs.head), "built-in")
-  }
+  def ensureRegistered(spark: SparkSession): Unit = Natives.install(spark)
 
   /** Column-level handle (n baked in as a literal). */
   def wordShingles(text: Column, n: Int): Column =

@@ -84,11 +84,6 @@ case class VecDot(left: Expression, right: Expression) extends BinaryExpression 
   override def prettyName: String = "graft_vec_dot"
 }
 
-/** Session registration for the native kernels. Idempotent — callers invoke
-  * it at plan-construction time with whatever session the driver hands
-  * them, so the library works without any spark.sql.extensions config
-  * (and [[graft.GraftExtensions]] offers the config route too).
-  */
 /** Argmin-by-L2 over a FOLDABLE codebook (kernel 16, for product
   * quantization): one call scans all ksub centroids in a tight primitive
   * loop and returns (dist, code, dotxc, c2) of the nearest one. The
@@ -508,6 +503,7 @@ object NearestVec {
   }
 }
 
+/** SQL names and Column handles; [[Natives]] registers the kernels. */
 object VectorFunctions {
 
   val dotName = "graft_vec_dot"
@@ -516,24 +512,7 @@ object VectorFunctions {
   val nearestCellsName = "graft_nearest_cells"
   val nearestVecName = "graft_nearest_vec"
 
-  def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      dotName, exprs => VecDot(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      pqArgminName, exprs => PqArgmin(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      signBucketsName,
-      exprs => SignBuckets(exprs(0), exprs(1),
-        Args.intLiteral(signBucketsName, exprs, 2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      nearestCellsName,
-      exprs => NearestCells(exprs(0), exprs(1),
-        Args.intLiteral(nearestCellsName, exprs, 2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      nearestVecName, exprs => NearestVec(exprs(0), exprs(1)), "built-in")
-  }
+  def ensureRegistered(spark: SparkSession): Unit = Natives.install(spark)
 
   /** Column-level handle (resolves against the session registry). */
   def vecDot(a: Column, b: Column): Column = call_function(dotName, a, b)

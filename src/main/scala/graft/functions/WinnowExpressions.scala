@@ -193,17 +193,12 @@ object Winnow {
   }
 }
 
-/** Session registration, same contract as [[VectorFunctions]]. */
+/** SQL names and Column handles; [[Natives]] registers the kernels. */
 object WinnowFunctions {
 
   val winnowName = "graft_winnow"
 
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      winnowName,
-      exprs => Winnow(exprs.head,
-        Args.intLiteral(winnowName, exprs, 1), Args.intLiteral(winnowName, exprs, 2)),
-      "built-in")
+  def ensureRegistered(spark: SparkSession): Unit = Natives.install(spark)
 
   def winnow(text: Column, k: Int, w: Int): Column =
     call_function(winnowName, text, org.apache.spark.sql.functions.lit(k),

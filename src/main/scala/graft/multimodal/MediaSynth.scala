@@ -1773,7 +1773,7 @@ case class WavSynth(child: Expression) extends MediaSynthExpression {
   override def prettyName: String = "graft_wav_synth"
 }
 
-/** Session registration, same contract as the functions-package kernels. */
+/** SQL names and Column handles; [[graft.functions.Natives]] registers the kernels. */
 object MediaSynthFunctions {
 
   val pngName = "graft_png_synth"
@@ -1799,33 +1799,10 @@ object MediaSynthFunctions {
   def jpegSampledName(geom: String, progressive: Boolean, ri: Int): String =
     s"graft_jpeg_color${geom}_${if (progressive) "prog" else "base"}_ri${ri}_synth"
 
-  private val sampledVariants: Seq[(String, Int, Int)] =
+  private[graft] val sampledVariants: Seq[(String, Int, Int)] =
     Seq(("422", 2, 1), ("440", 1, 2))
 
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(pngName, exprs => PngSynth(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(pngFixedName, exprs => PngFixedSynth(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(pngDynamicName, exprs => PngDynamicSynth(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(jpegName, exprs => JpegSynth(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(jpegAcName, exprs => JpegAcSynth(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(jpegProgressiveName, exprs => JpegProgressiveSynth(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(jpegRestartName, exprs => JpegRestartSynth(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(jpegProgressiveRestartName, exprs => JpegProgressiveRestartSynth(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(jpegColorName, exprs => JpegColorSynth(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(jpegColor420Name, exprs => JpegColor420Synth(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(jpegColorProgressiveName, exprs => JpegColorProgressiveSynth(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(jpegColor420ProgressiveName, exprs => JpegColor420ProgressiveSynth(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(bmpName, exprs => BmpSynth(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(wavName, exprs => WavSynth(exprs.head), "built-in")
-    for ((geom, hs, vs) <- sampledVariants; prog <- Seq(false, true); ri <- Seq(0, 2))
-      reg.createOrReplaceTempFunction(jpegSampledName(geom, prog, ri),
-        exprs => JpegSampledSynth(exprs.head, hs, vs, ri, prog), "built-in")
-    reg.createOrReplaceTempFunction(jpegColor420ProgressiveRestartName,
-      exprs => JpegSampledSynth(exprs.head, 2, 2, 2, progressive = true), "built-in")
-    reg.createOrReplaceTempFunction(jpegArithName,
-      exprs => JpegArithSynth(exprs.head), "built-in")
-  }
+  def ensureRegistered(spark: SparkSession): Unit = graft.functions.Natives.install(spark)
 
   def jpegSampledSynth(geom: String, progressive: Boolean, ri: Int)(docId: Column): Column =
     call_function(jpegSampledName(geom, progressive, ri), docId)

@@ -97,7 +97,6 @@ object Multimodal {
     * with payload bytes, not row count).
     */
   def realMediaTable(docs: DataFrame): DataFrame = {
-    MediaSynthFunctions.ensureRegistered(docs.sparkSession)
     val id = col("doc_id")
     val m = pmod(id, lit(3))
     // the jpeg third sub-routes across the decoder ladder (round 15): a
@@ -156,7 +155,6 @@ object Multimodal {
     * the md5-over-bytes checks stay hash-green on genuine files.
     */
   def rawMediaTable(docs: DataFrame): DataFrame = {
-    MediaSynthFunctions.ensureRegistered(docs.sparkSession)
     val id = col("doc_id")
     val even = pmod(id, lit(2)) === 0
     docs
@@ -180,7 +178,6 @@ object Multimodal {
     // one compiled byte-array build per row ([[MediaSynth.wav]], same
     // fields the declarative concat/hex construction emitted); the bytes
     // stay pinned by MultimodalSpec's java.nio reference decode
-    MediaSynthFunctions.ensureRegistered(docs.sparkSession)
     docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id").as("media_id"),
@@ -199,7 +196,6 @@ object Multimodal {
     * java.nio reference decode.
     */
   def imageTable(docs: DataFrame): DataFrame = {
-    MediaSynthFunctions.ensureRegistered(docs.sparkSession)
     docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id").as("media_id"),
@@ -222,7 +218,6 @@ object Multimodal {
     * the compiled per-row builder.
     */
   def pngTable(docs: DataFrame): DataFrame = {
-    MediaSynthFunctions.ensureRegistered(docs.sparkSession)
     docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id").as("media_id"),
@@ -237,7 +232,6 @@ object Multimodal {
     * decodes these files byte-identically (MultimodalSpec).
     */
   def pngFixedTable(docs: DataFrame): DataFrame = {
-    MediaSynthFunctions.ensureRegistered(docs.sparkSession)
     docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id").as("media_id"),
@@ -251,7 +245,6 @@ object Multimodal {
     * [[MediaSynth.jpeg]].
     */
   def jpegTable(docs: DataFrame): DataFrame = {
-    MediaSynthFunctions.ensureRegistered(docs.sparkSession)
     docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id").as("media_id"),
@@ -263,7 +256,6 @@ object Multimodal {
     * integer-exact — the payloads behind [[q_mm_jpeg_pixels_ac]].
     */
   def jpegAcTable(docs: DataFrame): DataFrame = {
-    MediaSynthFunctions.ensureRegistered(docs.sparkSession)
     docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id").as("media_id"),
@@ -277,7 +269,6 @@ object Multimodal {
     * [[q_mm_jpeg_progressive]].
     */
   def jpegProgressiveTable(docs: DataFrame): DataFrame = {
-    MediaSynthFunctions.ensureRegistered(docs.sparkSession)
     docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id").as("media_id"),
@@ -289,7 +280,6 @@ object Multimodal {
     * [[q_mm_jpeg_color]].
     */
   def jpegColorTable(docs: DataFrame): DataFrame = {
-    MediaSynthFunctions.ensureRegistered(docs.sparkSession)
     docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id").as("media_id"),
@@ -302,7 +292,6 @@ object Multimodal {
     * [[q_mm_jpeg_color420]].
     */
   def jpegColor420Table(docs: DataFrame): DataFrame = {
-    MediaSynthFunctions.ensureRegistered(docs.sparkSession)
     docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id").as("media_id"),
@@ -316,7 +305,6 @@ object Multimodal {
     * [[q_mm_jpeg_color_prog]].
     */
   def jpegColorProgressiveTable(docs: DataFrame): DataFrame = {
-    MediaSynthFunctions.ensureRegistered(docs.sparkSession)
     docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id").as("media_id"),
@@ -330,7 +318,6 @@ object Multimodal {
     * [[MediaSynth.pngDynamic]].
     */
   def pngDynamicTable(docs: DataFrame): DataFrame = {
-    MediaSynthFunctions.ensureRegistered(docs.sparkSession)
     docs
       .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id").as("media_id"),
@@ -476,7 +463,6 @@ object Multimodal {
     * payloads yield a null vector (honest routing, as the decoders).
     */
   def mediaFeatures(media: DataFrame): DataFrame = {
-    graft.functions.MediaDecodeFunctions.ensureRegistered(media.sparkSession)
     // the tag's contract is "which encoder PRODUCED this vector", so it is
     // gated on the vector existing: an undecodable row (or an unknown
     // declared format) carries a null tag alongside its null feature
@@ -934,7 +920,6 @@ object Multimodal {
       ORDER BY media_id
     """),
   ) { (s, d) =>
-    graft.functions.BinaryFunctions.ensureRegistered(s)
     val resized = graft.functions.BinaryFunctions.byteStride(col("payload"), 4)
     rawMediaTable(Tables.documents(s, d))
       .select(
@@ -990,7 +975,6 @@ object Multimodal {
     // data-chunk length, LE signed sample decode, and all four folds —
     // the interpreted transform/aggregate lambdas this replaces paid ~3
     // allocations per sample (graft.functions.MediaDecode.wav)
-    graft.functions.MediaDecodeFunctions.ensureRegistered(s)
     audioTable(Tables.documents(s, d))
       .select(col("media_id"),
         graft.functions.MediaDecodeFunctions.wavStats(col("payload")).as("st"))
@@ -1055,7 +1039,6 @@ object Multimodal {
     // BGR stride walk, channel sums + the position-weighted checksum —
     // the interpreted aggregate lambda this replaces re-evaluated a struct
     // expression per pixel (graft.functions.MediaDecode.bmp)
-    graft.functions.MediaDecodeFunctions.ensureRegistered(s)
     imageTable(Tables.documents(s, d))
       .select(col("media_id"),
         graft.functions.MediaDecodeFunctions.bmpStats(col("payload")).as("st"))
@@ -1252,7 +1235,6 @@ object Multimodal {
       FROM v GROUP BY doc_id ORDER BY media_id
     """),
   ) { (s, d) =>
-    graft.functions.JpegFunctions.ensureRegistered(s)
     jpegTable(Tables.documents(s, d))
       .select(col("media_id"),
         graft.functions.JpegFunctions.jpegStats(col("payload")).as("st"))
@@ -1309,7 +1291,6 @@ object Multimodal {
       FROM v GROUP BY doc_id ORDER BY media_id
     """),
   ) { (s, d) =>
-    graft.functions.JpegFunctions.ensureRegistered(s)
     jpegAcTable(Tables.documents(s, d))
       .select(col("media_id"),
         graft.functions.JpegFunctions.jpegStats(col("payload")).as("st"))
@@ -1369,7 +1350,6 @@ object Multimodal {
       FROM v GROUP BY doc_id ORDER BY media_id
     """),
   ) { (s, d) =>
-    graft.functions.JpegFunctions.ensureRegistered(s)
     jpegProgressiveTable(Tables.documents(s, d))
       .select(col("media_id"),
         graft.functions.JpegFunctions.jpegStats(col("payload")).as("st"))
@@ -1440,7 +1420,6 @@ object Multimodal {
       FROM rgb GROUP BY doc_id ORDER BY media_id
     """),
   ) { (s, d) =>
-    graft.functions.JpegFunctions.ensureRegistered(s)
     jpegColorTable(Tables.documents(s, d))
       .select(col("media_id"),
         graft.functions.JpegFunctions.jpegColorStats(col("payload")).as("st"))
@@ -1528,7 +1507,6 @@ object Multimodal {
       FROM rgb GROUP BY doc_id ORDER BY media_id
     """),
   ) { (s, d) =>
-    graft.functions.JpegFunctions.ensureRegistered(s)
     jpegColorProgressiveTable(Tables.documents(s, d))
       .select(col("media_id"),
         graft.functions.JpegFunctions.jpegColorStats(col("payload")).as("st"))
@@ -1626,7 +1604,6 @@ object Multimodal {
       FROM rgb GROUP BY doc_id ORDER BY media_id
     """),
   ) { (s, d) =>
-    graft.functions.JpegFunctions.ensureRegistered(s)
     jpegColor420Table(Tables.documents(s, d))
       .select(col("media_id"),
         graft.functions.JpegFunctions.jpegColorStats(col("payload")).as("st"))
@@ -1742,8 +1719,6 @@ object Multimodal {
       FROM rgb GROUP BY doc_id ORDER BY media_id
     """),
   ) { (s, d) =>
-    graft.functions.JpegFunctions.ensureRegistered(s)
-    MediaSynthFunctions.ensureRegistered(s)
     val id = col("doc_id")
     val geom422 = pmod(id, lit(2)) === 0
     val prog = pmod(floor(id / lit(2)).cast("long"), lit(2)) === 1
@@ -1796,7 +1771,6 @@ object Multimodal {
     // re-evaluated a 7-field struct expression per payload byte
     // (graft.functions.MediaDecode.png; corruption semantics pinned there
     // and exercised by MultimodalSpec's flipped-byte cases)
-    graft.functions.MediaDecodeFunctions.ensureRegistered(media.sparkSession)
     media
       .select(col("media_id"),
         graft.functions.MediaDecodeFunctions.pngStats(col("payload")).as("st"))

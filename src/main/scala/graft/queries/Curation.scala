@@ -155,8 +155,6 @@ object Curation {
     // repetition bound inlines repetitionGates' exact thresholds, with
     // kernel-null (zero tokens) folding to false exactly as the dropped
     // row did through the old left join.
-    graft.functions.LangIdFunctions.ensureRegistered(corpus.sparkSession)
-    graft.functions.TextFunctions.ensureRegistered(corpus.sparkSession)
     val st = graft.functions.TextFunctions.repetitionStats(
       filter(split(lower(col("text")), TextAnalysis.wsRe), t => t =!= ""))
     val repOk = st.isNotNull &&
@@ -368,7 +366,6 @@ object Curation {
     """),
   ) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    Bpe.ensureRegistered(s)
     val docs = Tables.documents(s, d)
     val corpus = docs.filter(col("doc_id") >= 20).select("doc_id", "text", "n_chars")
     val bench = docs.filter(col("doc_id") < 20)
@@ -409,7 +406,6 @@ object Curation {
     */
   val q_pipeline_e2e_lsh: Q = Q("q_pipeline_e2e_lsh", None) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    Bpe.ensureRegistered(s)
     val docs = Tables.documents(s, d)
     val corpus = docs.filter(col("doc_id") >= 20).select("doc_id", "text", "n_chars")
     val bench = docs.filter(col("doc_id") < 20)
@@ -488,7 +484,6 @@ object Curation {
     """),
   ) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    Bpe.ensureRegistered(s)
     val budget = 256
     val toks = Tables.documents(s, d).select(
       col("doc_id"), col("source"),
@@ -576,7 +571,6 @@ object Curation {
       ORDER BY w.source
     """),
   ) { (s, d) =>
-    Bpe.ensureRegistered(s)
     val t = Tables.documents(s, d).select(col("doc_id"), col("source"),
       Bpe.totalCount(col("text")).as("nt"))
     val srcStats = t.groupBy("source")

@@ -649,7 +649,6 @@ object Relational {
   def bloomPreJoin(
       fact: DataFrame, dim: DataFrame, factKey: String, dimKey: String,
       expectedItems: Long = 1000000L, numBits: Long = 8388608L): DataFrame = {
-    graft.functions.BloomFunctions.ensureRegistered(fact.sparkSession)
     // might_contain demands a CONSTANT (or scalar subquery) sketch, so the
     // aggregate materializes at plan-build time and embeds as a literal —
     // one distributed pass over the dim keys whose only driver payload is

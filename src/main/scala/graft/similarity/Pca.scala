@@ -193,7 +193,6 @@ object Pca {
     * products against literal loading rows minus the constant mean offset.
     */
   def project(emb: DataFrame, model: PcaModel): DataFrame = {
-    graft.functions.VectorFunctions.ensureRegistered(emb.sparkSession)
     val e = col("embedding").cast("array<double>")
     val cols = model.loadings.zipWithIndex.map { case (row, j) =>
       val offset = row.indices.map(i => row(i) * model.mean(i)).sum

@@ -110,7 +110,6 @@ object Pq {
   /** The distributed Lloyd refinement shared by both seeders. */
   def lloydRefine(emb: DataFrame, seed: Array[Array[Array[Double]]],
       lloydIters: Int): Array[Array[Array[Double]]] = {
-    VectorFunctions.ensureRegistered(emb.sparkSession)
     val m = seed.length
     val ksub = seed(0).length
     val ds = seed(0)(0).length
@@ -147,7 +146,6 @@ object Pq {
     */
   def encode(emb: DataFrame, books: Array[Array[Array[Double]]],
       carry: Seq[String] = Nil): DataFrame = {
-    VectorFunctions.ensureRegistered(emb.sparkSession)
     val m = books.length
     val ds = books(0)(0).length
     val e = col("embedding")
@@ -177,7 +175,6 @@ object Pq {
     */
   def withPackedCodes(df: DataFrame,
       books: Array[Array[Array[Double]]]): DataFrame = {
-    VectorFunctions.ensureRegistered(df.sparkSession)
     val m = books.length
     val ksub = books(0).length
     require(ksub == 16, s"packed codes are 4-bit nibbles; ksub must be 16, got $ksub")
@@ -242,7 +239,6 @@ object Pq {
     */
   def adcTopK(queries: DataFrame, corpus: DataFrame, books: Array[Array[Array[Double]]],
       k: Int): DataFrame = {
-    VectorFunctions.ensureRegistered(corpus.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val m = books.length
     val ds = books(0)(0).length
@@ -301,7 +297,6 @@ object Pq {
   def ivfAdcTopK(queries: DataFrame, corpus: DataFrame,
       books: Array[Array[Array[Double]]], k: Int,
       numCells: Int = 16, nprobe: Int = 4): DataFrame = {
-    VectorFunctions.ensureRegistered(corpus.sparkSession)
     val cents = Similarity.ivfCentroids(corpus, numCells).localCheckpoint(eager = false)
     // the coded inverted file: (cid, cell, codes, r2) — cell assignment and
     // codes in ONE row-local scan (withCells keeps the embedding on the
@@ -374,7 +369,6 @@ object Pq {
     */
   def ivfpqBuildIndex(corpus: DataFrame, dir: String, numCells: Int = 16,
       m: Int = 8, ksub: Int = 16): Unit = {
-    VectorFunctions.ensureRegistered(corpus.sparkSession)
     val spark = corpus.sparkSession
     val cents = Similarity.ivfCentroids(corpus, numCells).localCheckpoint()
     graft.io.SnapshotTable.create(cents, s"$dir/centroids")
@@ -398,7 +392,6 @@ object Pq {
   def ivfpqProbeIndex(queries: DataFrame, dir: String, k: Int,
       nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
-    VectorFunctions.ensureRegistered(spark)
     val cents = graft.io.SnapshotTable.read(spark, s"$dir/centroids")
     val bookRows = graft.io.SnapshotTable.read(spark, s"$dir/codebooks")
       .select("s", "code", "cvec").collect()
@@ -447,7 +440,6 @@ object Pq {
     */
   def ivfpqResidualTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       numCells: Int = 16, nprobe: Int = 4, m: Int = 8, ksub: Int = 16): DataFrame = {
-    VectorFunctions.ensureRegistered(corpus.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val spark = corpus.sparkSession
     val cents = Similarity.ivfCentroids(corpus, numCells).localCheckpoint(eager = false)

@@ -24,9 +24,7 @@ object Similarity {
   /** Sequential-fold dot product: the native codegen'd kernel
     * (graft.functions.VecDot) — bit-identical to the HOF form
     * `aggregate(zip_with(a,b,*))` it replaced, but inside whole-stage
-    * codegen with no lambda dispatch or intermediate array. Callers must
-    * have run VectorFunctions.ensureRegistered on the session (every
-    * DataFrame entry point below does).
+    * codegen with no lambda dispatch or intermediate array.
     */
   def dot(a: Column, b: Column): Column = VectorFunctions.vecDot(a, b)
 
@@ -38,7 +36,6 @@ object Similarity {
     * broadcast nested-loop scan, the correct plan for exact ANN ground truth.
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
-    VectorFunctions.ensureRegistered(corpus.sparkSession)
     val q = broadcast(queries.select(col("vec_id").as("qid"), col("embedding").as("qe")))
     // Repartition the streaming side: cosine scoring is compute-bound and a
     // small corpus is one scan partition — spread it before the BNLJ.
@@ -192,7 +189,6 @@ object Similarity {
   def annTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       numPlanes: Int = defaultPlanes, numTables: Int = defaultTables): DataFrame = {
     require(numPlanes * numTables <= maxPlanes, "not enough fixed hyperplanes")
-    VectorFunctions.ensureRegistered(corpus.sparkSession)
     val c = corpus
       .repartition(corpus.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
       .select(col("vec_id").as("cid"), col("embedding").as("ce"),
@@ -244,7 +240,6 @@ object Similarity {
     * passes are pure map work.
     */
   def ivfCentroids(corpus: DataFrame, numCells: Int, lloydIters: Int = 1): DataFrame = {
-    VectorFunctions.ensureRegistered(corpus.sparkSession)
     var cents = corpus
       .select(col("vec_id"), col("embedding"))
       .orderBy(xxhash64(col("vec_id")), col("vec_id"))
@@ -300,7 +295,6 @@ object Similarity {
     * round-13 20M-vector disk death) disappears.
     */
   def withCells(vectors: DataFrame, cents: DataFrame): DataFrame = {
-    VectorFunctions.ensureRegistered(vectors.sparkSession)
     val (ids, book) = collectCents(cents)
     vectors.withColumn("cell", element_at(cellsCol(ids, book, 1), 1))
   }
@@ -319,7 +313,6 @@ object Similarity {
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       numCells: Int = 16, nprobe: Int = 4): DataFrame = {
-    VectorFunctions.ensureRegistered(corpus.sparkSession)
     // localCheckpoint, not persist: the tiny centroid frame (numCells rows)
     // is consumed twice (file + probes) and must not recompute differently,
     // but a CacheManager persist with no owner leaks an entry per call in a
@@ -367,7 +360,6 @@ object Similarity {
     * snapshot table: a re-ingest writes v2 while v1 stays readable.
     */
   def ivfBuildIndex(corpus: DataFrame, dir: String, numCells: Int = 16): Unit = {
-    VectorFunctions.ensureRegistered(corpus.sparkSession)
     val cents = ivfCentroids(corpus, numCells).localCheckpoint(eager = false)
     graft.io.SnapshotTable.create(cents, s"$dir/centroids")
     val file = withCells(corpus, cents)
@@ -383,7 +375,6 @@ object Similarity {
     */
   def ivfProbeIndex(queries: DataFrame, dir: String, k: Int, nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
-    VectorFunctions.ensureRegistered(spark)
     val cents = graft.io.SnapshotTable.read(spark, s"$dir/centroids")
     val file = graft.io.SnapshotTable.read(spark, s"$dir/file")
       .select(col("cid"), col("cell"), col("ce"))
@@ -418,7 +409,6 @@ object Similarity {
     * is [[embeddingNearDupLsh]].
     */
   def embeddingNearDupExact(emb: DataFrame, t: Double): DataFrame = {
-    VectorFunctions.ensureRegistered(emb.sparkSession)
     val a = normedSide(emb, "i")
     val b = normedSide(emb, "j")
     broadcast(a).join(b, col("i") < col("j"))
@@ -442,7 +432,6 @@ object Similarity {
     */
   def embeddingNearDupLsh(emb: DataFrame, t: Double,
       numPlanes: Int = defaultPlanes, numTables: Int = defaultTables): DataFrame = {
-    VectorFunctions.ensureRegistered(emb.sparkSession)
     val bucketed = emb
       .repartition(emb.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
       .select(col("vec_id"), col("embedding"),
@@ -523,7 +512,6 @@ object Similarity {
     * query, which swaps only the pair-scan representation.
     */
   private def seedAssign(emb: DataFrame, k: Int): DataFrame = {
-    VectorFunctions.ensureRegistered(emb.sparkSession)
     // codebook-scale driver collect (precedent: Pq centroids) — k rows
     val seeds: Array[Seq[Double]] = emb.filter(col("vec_id") < k)
       .select("vec_id", "embedding").collect()
@@ -584,7 +572,6 @@ object Similarity {
     */
   def semanticDedupTrained(emb: DataFrame, k: Int, t: Double,
       lloydIters: Int = 1): DataFrame = {
-    VectorFunctions.ensureRegistered(emb.sparkSession)
     val cents = ivfCentroids(emb, k, lloydIters).localCheckpoint(eager = false)
     val asg = withCells(emb.select(col("vec_id"), col("embedding")), cents)
       .select(col("vec_id"), col("embedding"),
@@ -677,7 +664,6 @@ object Similarity {
       lloydIters: Int = 1, nprobe: Int = 2, m: Int = 8,
       sampleCap: Int = 1 << 18, gate: Double = Double.NaN,
       corpusSize: Long = -1L): DataFrame = {
-    VectorFunctions.ensureRegistered(emb.sparkSession)
     val ksub = 16 // 4-bit packing; see Pq.withPackedCodes
     // deterministic bounded training sample by hash-modulus filter — a
     // pure scan-side predicate, so NOTHING corpus-scale approaches the
@@ -987,7 +973,6 @@ object Similarity {
         sqrt(VectorFunctions.vecDot(col("embedding"), col("embedding")))
           .as("nrm"),
         col("cluster"))): (DataFrame, DataFrame) = {
-    VectorFunctions.ensureRegistered(emb.sparkSession)
     val spark = emb.sparkSession
     val kc = math.max(1, math.ceil(math.sqrt(k.toDouble)).toInt)
     val kf = math.max(1, math.ceil(k.toDouble / kc).toInt)
@@ -1472,7 +1457,6 @@ object Similarity {
       ORDER BY qid, rn
     """),
   ) { (s, d) =>
-    VectorFunctions.ensureRegistered(s)
     val emb = Tables.embeddings(s, d)
     val q = broadcast(emb.filter(col("vec_id") < 50)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"),

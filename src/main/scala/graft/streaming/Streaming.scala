@@ -221,7 +221,6 @@ object Streaming {
     */
   def dedupDocsByFingerprint(
       docs: DataFrame, watermarkDelay: String = "24 hours"): DataFrame = {
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     docs
       .withWatermark("ts", watermarkDelay)
       .withColumn("fingerprint",

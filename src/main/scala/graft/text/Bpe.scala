@@ -68,14 +68,11 @@ object Bpe {
   // the whitespace set the BpeCounts kernel skips — see TextAnalysis.wsRe
   private val otherRe = "[0-9]+|[^a-z0-9\\s]"
 
-  /** The kernel call (callers must [[ensureRegistered]] first). Null text
-    * → null struct, so the count accessors coalesce to 0 as the fold did.
+  /** The kernel call. Null text → null struct, so the count accessors
+    * coalesce to 0 as the fold did.
     */
   private def counts(text: Column): Column =
     graft.functions.BpeFunctions.bpeCounts(text)
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    graft.functions.BpeFunctions.ensureRegistered(spark)
 
   /** Subword token count over letter-run words. */
   def bpeCount(text: Column): Column =
@@ -253,7 +250,6 @@ object Bpe {
       ORDER BY d.doc_id
     """),
   ) { (s, d) =>
-    ensureRegistered(s)
     Tables.documents(s, d).select(
       col("doc_id"),
       bpeCount(col("text")).as("n_bpe"),

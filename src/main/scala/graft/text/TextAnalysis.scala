@@ -175,7 +175,6 @@ object TextAnalysis {
       ORDER BY doc_id
     """),
   ) { (s, d) =>
-    graft.functions.TextFunctions.ensureRegistered(s)
     Tables.documents(s, d)
       .select(col("doc_id"), md5(normalize(col("text")).cast(BinaryType)).as("fingerprint"))
       .orderBy("doc_id")
@@ -440,7 +439,6 @@ object TextAnalysis {
     // whole token stream twice — zero shuffles at any corpus size. Null
     // kernel result = zero tokens = no row in the groupBy formulation;
     // null bigram fields mirror the bigram side's empty left join.
-    graft.functions.TextFunctions.ensureRegistered(docs.sparkSession)
     docs
       // bound toks projection: no CSE through lambda bodies
       .select(col("doc_id"),
@@ -522,8 +520,6 @@ object TextAnalysis {
     "q_text_winnow",
     Some(graft.functions.Winnow.countOracleSql(normalizeSql, 8, 16)),
   ) { (s, d) =>
-    graft.functions.WinnowFunctions.ensureRegistered(s)
-    graft.functions.TextFunctions.ensureRegistered(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
         graft.functions.WinnowFunctions.winnow(normalize(col("text")), 8, 16).as("fp"))

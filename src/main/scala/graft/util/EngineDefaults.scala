@@ -47,4 +47,20 @@ object EngineDefaults {
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
         sys.props.getOrElse(
           "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k"))
+
+  /** The engine's one session factory: [[withCompression]], `local[cpus]`,
+    * one shuffle partition per core, UTC, no UI, WARN logging, and every
+    * native function installed ([[graft.functions.Natives]]).
+    */
+  def local(cpus: Int): SparkSession = {
+    val spark = withCompression(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    graft.functions.Natives.install(spark)
+    spark
+  }
 }

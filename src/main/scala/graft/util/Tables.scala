@@ -97,21 +97,13 @@ object Tables {
     "events" -> events _,
   ).withDefault(name => (s, d) => table(s, d, name))
 
-  /** SQL façade: registers every synthetic table as a temp view (and the
-    * native functions), so the full inventory is addressable via
-    * `spark.sql(...)` with the same scan behavior as the DataFrame API.
+  /** SQL façade: registers every synthetic table as a temp view and
+    * installs the native functions ([[graft.functions.Natives]]), so the
+    * full inventory is addressable via `spark.sql(...)` with the same scan
+    * behavior as the DataFrame API.
     */
   def registerViews(s: SparkSession, sfDir: String): Unit = {
-    // the complete native-function surface, same set GraftExtensions injects
-    graft.functions.VectorFunctions.ensureRegistered(s)
-    graft.functions.TextFunctions.ensureRegistered(s)
-    graft.functions.BinaryFunctions.ensureRegistered(s)
-    graft.functions.WinnowFunctions.ensureRegistered(s)
-    graft.functions.ShingleHashFunctions.ensureRegistered(s)
-    graft.functions.LangIdFunctions.ensureRegistered(s)
-    graft.functions.BloomFunctions.ensureRegistered(s)
-    graft.functions.BpeFunctions.ensureRegistered(s)
-    graft.functions.MediaDecodeFunctions.ensureRegistered(s)
+    graft.functions.Natives.install(s)
     names.foreach(n => loaders(n)(s, sfDir).createOrReplaceTempView(n))
   }
 }

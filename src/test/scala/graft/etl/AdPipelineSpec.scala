@@ -68,6 +68,14 @@ class AdPipelineSpec extends SparkSpec {
     assert(txt("1004") === "le chat et le chien sont ici")
     assert(txt("1005") === "")
     assert(txt("1001") === "hello world this is english text")
+    // an EMPTY cards array is a missing path too: both formats keep the row
+    val emptyCards = Seq("DCO", "CAROUSEL").map(f =>
+      s"""{"ad_archive_id": "e$f", "is_active": true, "start_date": 1717100000,
+         |"snapshot": {"display_format": "$f", "cards": []}}""".stripMargin)
+    val parsed = Transform.derive(Transform.flatten(graft.io.Sources.rawAdsFromStrings(
+      spark, Seq(("e", emptyCards.mkString("[[", ",", "]]"))))))
+    assert(parsed.select("ad_id", "ad_text").collect().map(r => r.getString(0) -> r.getString(1))
+      .toMap === Map("eDCO" -> "", "eCAROUSEL" -> ""))
   }
 
   test("language id: deterministic heuristic incl. zh + undetected") {
@@ -116,8 +124,11 @@ class AdPipelineSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-etl").toString
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$tmp/raw.json"), AdFixture.json)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
     AdPipeline.runFiles(spark, s"$tmp/raw.json",
       s"$tmp/curated", s"$tmp/quarantine", s"$tmp/report", AdFixture.frozenNow)
+    // the file run releases the frame it persisted
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(cachedBefore))
     val back = spark.read.parquet(s"$tmp/curated")
     assert(back.count() === 8L)
     assert(back.schema.fieldNames.toSeq === AdSchema.validated.fieldNames.toSeq)

@@ -22,8 +22,6 @@ class ExtensionsSpec extends SparkSpec {
 
   test("builder guards: non-literal / mistyped scalar args fail analysis, not cast") {
     import org.apache.spark.sql.functions.{col, lit}
-    TextFunctions.ensureRegistered(spark)
-    ShingleHashFunctions.ensureRegistered(spark)
     import spark.implicits._
     val df = Seq(("a b c d", 3)).toDF("text", "n")
     // a column where an INT literal is required

@@ -34,7 +34,6 @@ class KernelPropertySpec extends SparkSpec {
     val texts = samples(genText, 300).distinct
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val hof = graft.dedup.Dedup.shingles(split(col("text"), " "))
-    TextFunctions.ensureRegistered(spark)
     val native = coalesce(TextFunctions.wordShingles(col("text"), 3),
       array().cast(org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.StringType)))
@@ -61,7 +60,6 @@ class KernelPropertySpec extends SparkSpec {
     val texts = samples(gen, 400).distinct ++
       Seq("", " ", "  a  ", "A.B,C", "ßKİ x")
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    TextFunctions.ensureRegistered(spark)
     val regex = trim(regexp_replace(
       regexp_replace(lower(col("text")), "[^a-z0-9 ]", ""), " +", " "))
     val diff = df.select(col("doc_id"), col("text"),
@@ -74,8 +72,6 @@ class KernelPropertySpec extends SparkSpec {
     import spark.implicits._
     val texts = samples(genText, 300).distinct
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
-    TextFunctions.ensureRegistered(spark)
-    ShingleHashFunctions.ensureRegistered(spark)
     val viaStrings = array_sort(array_distinct(
       transform(TextFunctions.wordShingles(col("text"), 3), s => xxhash64(s))))
     val native = ShingleHashFunctions.wordShingleHashes(col("text"), 3)
@@ -91,7 +87,6 @@ class KernelPropertySpec extends SparkSpec {
         Gen.listOfN(n, Gen.chooseNum(-50L, 50L)).map(_.distinct.sorted.toSeq))
     val pairs = samples(Gen.zip(genArr, genArr), 250)
     val df = pairs.toDF("a", "b")
-    ShingleHashFunctions.ensureRegistered(spark)
     val diff = df.select(
         size(array_intersect(col("a"), col("b"))).as("ref"),
         ShingleHashFunctions.sortedIntersectCount(col("a"), col("b")).as("n"))
@@ -112,7 +107,6 @@ class KernelPropertySpec extends SparkSpec {
         Gen.listOfN(n, Gen.chooseNum(-2000L, 2000L)).map(_.distinct.sorted.toSeq))
     val pairs = samples(Gen.zip(genSmall, genBig), 120)
     val df = pairs.toDF("a", "b")
-    ShingleHashFunctions.ensureRegistered(spark)
     val diff = df.select(
         size(array_intersect(col("a"), col("b"))).as("ref"),
         ShingleHashFunctions.sortedIntersectCount(col("a"), col("b")).as("n1"),
@@ -127,7 +121,6 @@ class KernelPropertySpec extends SparkSpec {
       Gen.chooseNum(0, 25).flatMap(n =>
         Gen.listOfN(n, Gen.oneOf("a", "b", "bb", "é", "嗨", "x1")).map(_.toSeq))
     val lists = samples(genToks, 300)
-    TextFunctions.ensureRegistered(spark)
     val rows = lists.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "toks")
       .select(col("id"), TextFunctions.repetitionStats(col("toks")).as("st"))
@@ -173,7 +166,6 @@ class KernelPropertySpec extends SparkSpec {
       (toks.size.toLong, toks.count(_.length > 1).toLong, nOther)
     }
     val texts = samples(genDoc, 300)
-    BpeFunctions.ensureRegistered(spark)
     val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "text")
       .select(col("id"), BpeFunctions.bpeCounts(col("text")).as("st"))

@@ -11,9 +11,6 @@ import graft.SparkSpec
   */
 class LangIdSpec extends SparkSpec {
 
-  // the scorer kernel resolves through the session function registry
-  LangIdFunctions.ensureRegistered(spark)
-
   private val goldens: Seq[(String, String)] = Seq(
     "en" -> "the cat and the dog sat in this house for hours",
     "es" -> "el perro y la casa que es de un pueblo",

@@ -9,7 +9,6 @@ import graft.util.Tables
 class VectorExpressionsSpec extends SparkSpec {
 
   test("native vec_dot is bit-identical to the HOF fold it replaced") {
-    VectorFunctions.ensureRegistered(spark)
     val emb = Tables.embeddings(spark, sf()).limit(50)
     def hofDot(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       aggregate(zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
@@ -26,7 +25,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("word shingles addressable from SQL and null-safe") {
-    TextFunctions.ensureRegistered(spark)
     import spark.implicits._
     Seq(("a b c d", 1)).toDF("text", "id").createOrReplaceTempView("ws_t")
     val viaSql = spark.sql(
@@ -41,7 +39,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("pq_argmin nulls out a codebook-dimension mismatch instead of guessing") {
-    VectorFunctions.ensureRegistered(spark)
     import spark.implicits._
     val book = Seq(Seq(0.0, 0.0), Seq(1.0, 1.0))
     val df = Seq(Seq(0.9, 1.1), Seq(0.9, 1.1, 7.0), Seq(0.9)).toDF("x")
@@ -53,7 +50,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("vec_dot handles mixed float/double arrays and nulls") {
-    VectorFunctions.ensureRegistered(spark)
     import spark.implicits._
     val df = Seq(
       (Seq(1.0f, 2.0f, 3.0f), Some(Seq(2.0, 0.5, 1.0))),
@@ -65,7 +61,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("nearest_cells equals exclude-chosen max_by rounds bit-for-bit") {
-    VectorFunctions.ensureRegistered(spark)
     val emb = Tables.embeddings(spark, sf()).limit(200)
     // book = 7 real corpus vectors (adversarial: self-assignments produce
     // exact cosine ties at 1.0 only for the seed itself)
@@ -107,7 +102,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("nearest_vec equals a per-row max_by over the same book; null on empty") {
-    VectorFunctions.ensureRegistered(spark)
     import spark.implicits._
     val emb = Tables.embeddings(spark, sf()).limit(100)
     val book: Seq[Seq[Double]] = emb.filter(col("vec_id") >= 3 && col("vec_id") < 9)

@@ -129,7 +129,6 @@ class MultimodalSpec extends SparkSpec {
     assert(byId(1L).getInt(0) === 240 && byId(1L).getInt(1) === 120)
     assert(byId(1L).getBoolean(2) === true, "SOF2 must flag progressive")
     assert(byId(2L).getBoolean(2) === false, "SOF0 must flag baseline")
-    graft.functions.JpegFunctions.ensureRegistered(spark)
     val dec = Seq((1L, prog)).toDF("id", "p")
       .select(graft.functions.JpegFunctions.jpegColorStats(col("p")).as("s"))
       .head()
@@ -350,7 +349,6 @@ class MultimodalSpec extends SparkSpec {
     val goodSum = decoded(3L).getLong(5)
     val bad = sample.clone()
     bad(bad.length - 4) = (bad(bad.length - 4) ^ 0x40).toByte
-    graft.functions.JpegFunctions.ensureRegistered(spark)
     val badRow = Seq((3L, bad)).toDF("media_id", "payload")
       .select(graft.functions.JpegFunctions.jpegStats(col("payload")).as("st"))
       .select("st.w", "st.sum_luma").collect().head
@@ -366,7 +364,6 @@ class MultimodalSpec extends SparkSpec {
 
   test("restart-interval JPEGs: pixel-identical to no-DRI twins, ImageIO parity, strict RSTm") {
     import spark.implicits._
-    graft.functions.JpegFunctions.ensureRegistered(spark)
     // baseline + DRI(Ri=1): same planted DC field as jpeg(id), so decoded
     // sums must be BIT-EQUAL to the plain twin's — the restart machinery
     // (byte-align, marker verify, predictor reset) must be transparent

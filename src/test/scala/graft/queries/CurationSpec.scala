@@ -73,7 +73,6 @@ class CurationSpec extends SparkSpec {
     // to coincide because the 89-merge vocab made every frequent corpus
     // word a single piece — the 8192-merge vocabulary doesn't)
     val budget = 256
-    graft.text.Bpe.ensureRegistered(spark)
     val toks = Tables.documents(spark, sf())
       .select(col("doc_id"), col("source"),
         graft.text.Bpe.totalCount(col("text")).as("n_tokens"))

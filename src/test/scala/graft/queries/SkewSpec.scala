@@ -45,7 +45,6 @@ class SkewSpec extends SparkSpec {
       "false positives must be cleared by the exact join")
     // the prefilter alone is a superset of the true matches and (at this
     // sizing) a strict subset of the fact side — it actually prunes
-    graft.functions.BloomFunctions.ensureRegistered(spark)
     val sketch = urgent.agg(graft.functions.BloomFunctions
         .bloomAgg(xxhash64(col("o_orderkey")), 1000000L, 8388608L).as("bf"))
       .head().getAs[Array[Byte]]("bf")

@@ -336,7 +336,6 @@ class SimilaritySpec extends SparkSpec {
     // kernel swap must keep answering probes bucketed after it
     import org.apache.spark.sql.functions.{typedlit, when}
     val emb = Tables.embeddings(spark, sf("sf0.01"))
-    graft.functions.VectorFunctions.ensureRegistered(spark)
     val viaExpr = org.apache.spark.sql.functions.array(
       (0 until Similarity.defaultTables).map { tau =>
         (0 until Similarity.defaultPlanes).map { b =>

@@ -24,7 +24,6 @@ class BpeSpec extends SparkSpec {
 
   private def sparkCounts(texts: Seq[String]): Seq[(Long, Long, Long)] = {
     import spark.implicits._
-    Bpe.ensureRegistered(spark)
     texts.toDF("text")
       .select(Bpe.bpeCount(col("text")), Bpe.mergedCount(col("text")),
         Bpe.otherCount(col("text")))
@@ -178,7 +177,6 @@ class BpeSpec extends SparkSpec {
   test("pack budget consumes the tokenizer totals (count composition)") {
     val Seq((nb, _, no)) = sparkCounts(Seq("pack 2 streams: go!"))
     import spark.implicits._
-    Bpe.ensureRegistered(spark)
     val total = Seq("pack 2 streams: go!").toDF("text")
       .select(Bpe.totalCount(col("text"))).as[Long].head()
     assert(total === nb + no)

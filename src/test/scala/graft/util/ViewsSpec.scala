@@ -43,5 +43,23 @@ class ViewsSpec extends SparkSpec {
       "SELECT graft_wav_stats(payload) AS st FROM (SELECT CAST(NULL AS BINARY) AS payload)")
       .collect()
     assert(shapes.length === 1) // null payload -> null struct, no error
+    // a fresh session sees the WHOLE table through the SQL entry point
+    val fresh = spark.newSession()
+    Tables.registerViews(fresh, sf())
+    val natives = graft.functions.Natives.all.map(_._1.funcName)
+    assert(natives.distinct.size === natives.size, "a name has two rows")
+    val missing = natives.filterNot(fresh.catalog.functionExists)
+    assert(missing.isEmpty, s"not resolvable after registerViews: $missing")
+    // a second install registers nothing: the name set stays, and an entry
+    // already present (here a stand-in builder) is not overwritten
+    val reg = fresh.sessionState.functionRegistry
+    val (id, info, _) = graft.functions.Natives.all.head
+    val standIn: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
+      org.apache.spark.sql.catalyst.expressions.Expression = _.head
+    reg.registerFunction(id, info, standIn)
+    val names = reg.listFunction().toSet
+    graft.functions.Natives.install(fresh)
+    assert(reg.listFunction().toSet === names)
+    assert(reg.lookupFunctionBuilder(id).exists(_ eq standIn))
   }
 }
