@@ -11,7 +11,7 @@ import graft.util.Tables
   * signature-prefilter survivor counts. Performance diagnostics over a
   * probe directory — never a correctness input.
   *
-  * Usage: runMain graft.DedupScaleProbe <sfDir> [buckets|cands]
+  * Usage: runMain graft.DedupScaleProbe <sfDir> [buckets|cands|bottomk2]
   */
 object DedupScaleProbe {
   def main(args: Array[String]): Unit = {
@@ -43,52 +43,7 @@ object DedupScaleProbe {
       println(s"[bottomk2] n_cands=${cands.count()}")
       spark.stop(); return
     }
-    if (mode == "bottomk") {
-      // stage decomposition of containmentBottomKJoin (r13 agg+anti-join
-      // shape) at the probe scale, with the SAME DISK_ONLY checkpoint the
-      // real join uses and nothing else resident: where does the
-      // heap-constrained run actually spend its time?
-      def t[T](name: String)(body: => T): T = {
-        val t0 = System.nanoTime(); val r = body
-        println(f"[bottomk] $name: ${(System.nanoTime() - t0) / 1e9}%.1f s"); r
-      }
-      val k = 16; val dfCap = 64; val tThr = 0.8
-      def kEffOf(sz: org.apache.spark.sql.Column) = least(sz, lit(k))
-      def bkAlpha(sz: org.apache.spark.sql.Column) =
-        ceil((lit(tThr) - lit(0.3)) * kEffOf(sz) - lit(1e-9))
-      val bkSets = t("sets checkpoint (DISK_ONLY)")(
-        Dedup.hashedShingleSets(docs).filter(col("sz") > 0)
-          .localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY))
-      val probes = bkSets.select(col("doc_id").as("i"),
-        explode(slice(col("shh"), lit(1),
-          (kEffOf(col("sz")) - bkAlpha(col("sz")) + 1).cast("int"))).as("h"))
-      val posting = Dedup.hashedPosting(bkSets).select(col("doc_id").as("j"), col("h"))
-      val hubs = posting.groupBy("h").agg(count(lit(1)).as("df"))
-        .filter(col("df") > dfCap).select("h")
-      t("hub blacklist agg")(println(s"[bottomk] n_hubs=${hubs.count()}"))
-      val postingCapped = posting.join(broadcast(hubs), Seq("h"), "left_anti")
-      val cands = t("cands (anti + hash probe join + distinct)")(
-        probes.hint("shuffle_hash").join(postingCapped, Seq("h"))
-          .filter(col("i") =!= col("j")).select("i", "j").distinct()
-          .localCheckpoint())
-      println(s"[bottomk] n_cands=${cands.count()}")
-      val candIds = cands.select(col("i").as("doc_id"))
-        .union(cands.select(col("j").as("doc_id"))).distinct()
-      val candSets = bkSets.join(broadcast(candIds), Seq("doc_id"), "left_semi")
-      val bkHits = graft.functions.ShingleHashFunctions.sortedIntersectCount(
-        slice(col("shh_i"), lit(1), kEffOf(col("sz_i")).cast("int")), col("shh_j"))
-      val inter = graft.functions.ShingleHashFunctions
-        .sortedIntersectCount(col("shh_i"), col("shh_j"))
-      t("rescore join (id-pruned)")(cands
-        .join(candSets.select(col("doc_id").as("i"), col("shh").as("shh_i"),
-          col("sz").as("sz_i")), "i")
-        .join(candSets.select(col("doc_id").as("j"), col("shh").as("shh_j")), "j")
-        .filter(bkHits >= bkAlpha(col("sz_i")))
-        .withColumn("containment", inter * lit(1.0) / col("sz_i"))
-        .filter(col("containment") >= tThr)
-        .select("i", "j", "containment")
-        .write.format("noop").mode("overwrite").save())
-    } else if (mode == "buckets") {
+    if (mode == "buckets") {
       // bucket-size histogram per band geometry: where SMJ compare counts
       // and pre-cap candidate volumes come from
       def hist(name: String, banded: org.apache.spark.sql.DataFrame): Unit = {
@@ -107,9 +62,12 @@ object DedupScaleProbe {
       hist("jaccard-16x4", DedupProbe.banded(sig, Dedup.numBands, Dedup.rowsPerBand))
       hist("containment-32x2", DedupProbe.banded(sig, Dedup.cSketchBands, Dedup.cSketchRows))
     } else {
-      val jc = DedupProbe.minhashCandidates(docs).localCheckpoint()
+      // the inputs minHashLshJoin builds, then its own candidate stage
+      val jSets = Dedup.hashedShingleSets(docs).localCheckpoint()
+      val compact = Dedup.sigCompact(Dedup.withSignature(jSets)).localCheckpoint()
+      val jc = Dedup.lshCandidates(compact).localCheckpoint()
       val jn = jc.count()
-      val jk = DedupProbe.prefiltered(jc, DedupProbe.sigBytes(sig),
+      val jk = DedupProbe.prefiltered(jc, compact.select("doc_id", "sz", "sigb"),
         (_, _) => lit(0.5), Dedup.rowsPerBand * 0.5).count()
       println(s"JACCARD t=0.5: candidates=$jn prefilter_survivors=$jk")
       val cc = DedupProbe.containmentCandidates(sets, sig).localCheckpoint()

@@ -1224,22 +1224,18 @@ object Dedup {
     * signature frame is what keeps the join inside an 8 GB heap at the
     * 5M-doc probe scale (the full-width sig checkpoint OOMed there).
     */
-  private def sigCompact(sig: DataFrame): DataFrame =
+  private[graft] def sigCompact(sig: DataFrame): DataFrame =
     sig.select(col("doc_id"), col("sz"), packedSigBytes.as("sigb"),
       bandHashArray(numBands, rowsPerBand).as("band_hashes"))
 
-  def minHashLshJoin(docs: DataFrame, t: Double): DataFrame = {
-    // sets feeds the signature AND both rescore sides; banded feeds both
-    // sides of the candidate self-join. localCheckpoint, not persist:
-    // materialized once, ContextCleaner-owned, no CacheManager leak (see
-    // setSimilarityJoin).
-    val sets = hashedShingleSets(docs).localCheckpoint()
-    // ONE signature kernel pass (the family's measured cost floor at
-    // scale), materialized in its COMPACT projection — band hashes +
-    // packed prefilter bytes, 24 longs/doc instead of the raw 64 minima —
-    // which both banding and the prefilter read
-    val compact = sigCompact(withSignature(sets)).localCheckpoint()
+  /** The symmetric LSH candidate stage of [[minHashLshJoin]]: distinct
+    * (i < j) pairs sharing a band hash of the [[sigCompact]] frame
+    * `compact`, hub-capped. [[graft.DedupScaleProbe]] counts this same
+    * stage, so the probe measures what the join runs.
+    */
+  private[graft] def lshCandidates(compact: DataFrame): DataFrame = {
     val bucket = Window.partitionBy("band", "band_hash")
+    // banded feeds both sides of the self-join: checkpointed once
     val banded = compact
       .select(col("doc_id"),
         posexplode(col("band_hashes")).as(Seq("band", "band_hash")))
@@ -1251,7 +1247,7 @@ object Dedup {
     // its rep's star instead of the full i<j cross product; the window
     // stats ride the exchange+sort the self-join needs anyway
     val dense = col("a.n") > bandBucketCap
-    val cands = banded.as("a")
+    banded.as("a")
       .join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash")
           && col("a.doc_id") < col("b.doc_id")
@@ -1259,6 +1255,19 @@ object Dedup {
             || col("b.doc_id") === col("b.rep")))
       .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
       .distinct()
+  }
+
+  def minHashLshJoin(docs: DataFrame, t: Double): DataFrame = {
+    // sets feeds the signature AND both rescore sides. localCheckpoint,
+    // not persist: materialized once, ContextCleaner-owned, no
+    // CacheManager leak (see setSimilarityJoin).
+    val sets = hashedShingleSets(docs).localCheckpoint()
+    // ONE signature kernel pass (the family's measured cost floor at
+    // scale), materialized in its COMPACT projection — band hashes +
+    // packed prefilter bytes, 24 longs/doc instead of the raw 64 minima —
+    // which both banding and the prefilter read
+    val compact = sigCompact(withSignature(sets)).localCheckpoint()
+    val cands = lshCandidates(compact)
     // any pair the rescore keeps has Jaccard ≥ t, so lit(t) is the exact
     // algebraic floor the prefilter margin subtracts from; the selection
     // correction prices out the fired band's rowsPerBand free lanes

@@ -1,8 +1,6 @@
 package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
 /** Package-access bridge for [[graft.DedupScaleProbe]]: exposes the banded
   * joins' internal stages (candidate generation, the signature prefilter)
@@ -10,28 +8,6 @@ import org.apache.spark.sql.functions._
   * [[Dedup]]'s own API. Diagnostics only — not part of the query surface.
   */
 object DedupProbe {
-
-  /** The symmetric Jaccard LSH candidate stage exactly as
-    * [[Dedup.minHashLshJoin]] builds it (banding, window stats, hub cap),
-    * stopping before the prefilter + rescore.
-    */
-  def minhashCandidates(docs: DataFrame): DataFrame = {
-    val sets = Dedup.hashedShingleSets(docs).localCheckpoint()
-    val bucket = Window.partitionBy("band", "band_hash")
-    val banded = Dedup.bandedHashes(
-        Dedup.withSignature(sets), Dedup.numBands, Dedup.rowsPerBand)
-      .withColumn("n", count(lit(1)).over(bucket))
-      .withColumn("rep", min("doc_id").over(bucket))
-    val dense = col("a.n") > Dedup.bandBucketCap
-    banded.as("a")
-      .join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash")
-          && col("a.doc_id") < col("b.doc_id")
-          && (!dense || col("a.doc_id") === col("a.rep")
-            || col("b.doc_id") === col("b.rep")))
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
-      .distinct()
-  }
 
   def banded(sig: DataFrame, bands: Int, rowsPer: Int): DataFrame =
     Dedup.bandedHashes(sig, bands, rowsPer)

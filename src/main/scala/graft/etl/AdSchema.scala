@@ -65,20 +65,3 @@ object AdSchema {
   val minEpoch: Long = -62135596800L
   val maxEpoch: Long = 253402300799L
 }
-
-/** Typed veneer over the strict schema (Dataset[ValidatedAd] at the
-  * validation boundary only — SURVEY §1.3).
-  */
-final case class ValidatedAd(
-    ad_id: String,
-    is_active: Boolean,
-    start_date_ts: Long,
-    end_date_ts: Option[Long],
-    total_active_time_sec: Option[Long],
-    ad_group_id: Option[String],
-    grouped_ads_count: Option[Long],
-    display_format: String,
-    media_mix: String,
-    ad_text: String,
-    ad_lang_code: String,
-)

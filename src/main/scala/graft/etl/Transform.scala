@@ -1,6 +1,6 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -170,26 +170,4 @@ object Transform {
     */
   def dedup(valid: DataFrame): DataFrame =
     Seq("ad_id", "ad_group_id", "ad_text").foldLeft(valid)(keepFirst)
-
-  // --------------------------------------------------------------- pipeline
-
-  /** Full transform from raw documents; returns (curated, quarantine).
-    * Drops the ordinal columns from the curated output (they exist to pin
-    * order; the reference's parquet has only the 11 validated columns).
-    */
-  def transform(rawDocs: DataFrame): (DataFrame, DataFrame) = {
-    val parsed = derive(flatten(rawDocs))
-    val (valid, quarantine) = validate(parsed)
-    val curated = dedup(valid)
-      .select(AdSchema.validated.fieldNames.map(col).toIndexedSeq: _*)
-    (curated, quarantine)
-  }
-
-  /** Typed veneer at the validation boundary (SURVEY §1.3). */
-  def asValidated(curated: DataFrame)(implicit spark: SparkSession): Dataset[ValidatedAd] = {
-    import spark.implicits._
-    curated
-      .withColumn("start_date_ts", col("start_date_ts").cast(LongType))
-      .as[ValidatedAd]
-  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
-import graft.multimodal.{BmpSynth, JpegAcSynth, JpegArithSynth, JpegColor420ProgressiveSynth, JpegColor420Synth, JpegColorProgressiveSynth, JpegColorSynth, JpegProgressiveRestartSynth, JpegProgressiveSynth, JpegRestartSynth, JpegSampledSynth, JpegSynth, MediaSynthFunctions => MS, PngDynamicSynth, PngFixedSynth, PngSynth, WavSynth}
+import graft.multimodal.{BmpSynth, JpegAcSynth, JpegArithSynth, JpegColorProgressiveSynth, JpegColorSynth, JpegProgressiveRestartSynth, JpegProgressiveSynth, JpegRestartSynth, JpegSampledSynth, JpegSynth, MediaSynthFunctions => MS, PngDynamicSynth, PngFixedSynth, PngSynth, WavSynth}
 
 /** The engine's native functions: ONE table with one row (identifier,
   * info, builder) per SQL name. The `*Functions` objects only name their
@@ -92,19 +92,23 @@ object Natives {
     row(MS.jpegProgressiveRestartName, classOf[JpegProgressiveRestartSynth])(es =>
       JpegProgressiveRestartSynth(es.head)),
     row(MS.jpegColorName, classOf[JpegColorSynth])(es => JpegColorSynth(es.head)),
-    row(MS.jpegColor420Name, classOf[JpegColor420Synth])(es => JpegColor420Synth(es.head)),
+    row(MS.jpegColor420Name, classOf[JpegSampledSynth])(es =>
+      JpegSampledSynth(es.head, MS.jpegColor420Name, 2, 2, 0, progressive = false)),
     row(MS.jpegColorProgressiveName, classOf[JpegColorProgressiveSynth])(es =>
       JpegColorProgressiveSynth(es.head)),
-    row(MS.jpegColor420ProgressiveName, classOf[JpegColor420ProgressiveSynth])(es =>
-      JpegColor420ProgressiveSynth(es.head)),
+    row(MS.jpegColor420ProgressiveName, classOf[JpegSampledSynth])(es =>
+      JpegSampledSynth(es.head, MS.jpegColor420ProgressiveName, 2, 2, 0, progressive = true)),
     row(MS.bmpName, classOf[BmpSynth])(es => BmpSynth(es.head)),
     row(MS.wavName, classOf[WavSynth])(es => WavSynth(es.head)),
     row(MS.jpegColor420ProgressiveRestartName, classOf[JpegSampledSynth])(es =>
-      JpegSampledSynth(es.head, 2, 2, 2, progressive = true)),
+      JpegSampledSynth(es.head, MS.jpegColor420ProgressiveRestartName, 2, 2, 2,
+        progressive = true)),
     row(MS.jpegArithName, classOf[JpegArithSynth])(es => JpegArithSynth(es.head)),
   ) ++ (for ((geom, hs, vs) <- MS.sampledVariants; prog <- Seq(false, true); ri <- Seq(0, 2))
-    yield row(MS.jpegSampledName(geom, prog, ri), classOf[JpegSampledSynth])(es =>
-      JpegSampledSynth(es.head, hs, vs, ri, prog)))
+    yield {
+      val name = MS.jpegSampledName(geom, prog, ri)
+      row(name, classOf[JpegSampledSynth])(es => JpegSampledSynth(es.head, name, hs, vs, ri, prog))
+    })
 
   val all: Seq[SparkSessionExtensions#FunctionDescription] = kernels ++ synthesizers
 

@@ -136,7 +136,7 @@ object MediaSynth {
       var i = len - 1
       while (i >= 0) { putBit((code >> i) & 1); i -= 1 }
     }
-    def putBits(v: Int, len: Int): Unit = {
+    def putField(v: Int, len: Int): Unit = {
       var i = 0
       while (i < len) { putBit((v >> i) & 1); i += 1 }
     }
@@ -147,14 +147,14 @@ object MediaSynth {
       while (encLenBase(li) > len) li -= 1
       val sym = 257 + li
       if (sym <= 279) putCode(sym - 256, 7) else putCode(0xC0 + (sym - 280), 8)
-      putBits(len - encLenBase(li), encLenExtra(li))
+      putField(len - encLenBase(li), encLenExtra(li))
       var di = encDistBase.length - 1
       while (encDistBase(di) > dist) di -= 1
       putCode(di, 5)
-      putBits(dist - encDistBase(di), encDistExtra(di))
+      putField(dist - encDistBase(di), encDistExtra(di))
     }
     putBit(1) // BFINAL
-    putBits(1, 2) // BTYPE=01
+    putField(1, 2) // BTYPE=01
     val h = raw.length / rowBytes
     var y = 0
     while (y < h) {
@@ -288,25 +288,337 @@ object MediaSynth {
     out
   }
 
-  // ---- baseline JPEG (ITU T.81) grayscale fixture --------------------------
+  // ---- JPEG (ITU T.81) fixtures -------------------------------------------
+  //
+  // Every JPEG encoder below writes through the one MSB-first bitstream
+  // writer [[JpegWriter]]. It stays encoder-only: the decoders in
+  // graft.functions keep their own tables and bit reader, so a table typo
+  // here cannot verify itself (the rule the deflate pair above follows).
 
   // standard Annex K DC-luminance BITS (codes per length 1..16; 12 symbols)
   private val jpegDcBits = Array(0, 0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0)
 
-  /** Canonical JPEG codes from a BITS histogram (T.81 Annex C): (code,len)
-    * per symbol in HUFFVAL order.
-    */
-  private def jpegCodes(bits: Array[Int]): Array[(Int, Int)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+  // canonical code and length per DC category 0..11, from jpegDcBits
+  // (T.81 Annex C)
+  private val dcCode = new Array[Int](12)
+  private val dcLen = new Array[Int](12)
+  locally {
     var code = 0
+    var k = 0
     var l = 1
     while (l <= 16) {
       var i = 0
-      while (i < bits(l)) { out += ((code, l)); code += 1; i += 1 }
+      while (i < jpegDcBits(l)) { dcCode(k) = code; dcLen(k) = l; k += 1; code += 1; i += 1 }
       code <<= 1
       l += 1
     }
-    out.toArray
+  }
+
+  // The AC tables: each holds one code per length 1..n, so the k-th symbol
+  // (HUFFVAL order) is 2^(k+1) − 2 on k+1 bits — 0, 10, 110, … — and no
+  // codeword is all ones, so pad bits can never alias a symbol.
+  private val acEobOnly = Array(0x00) // EOB
+  private val acRun0 = Array(0x00, 0x01) // EOB, run0/size1
+  private val acRun9 = Array(0x00, 0x91, 0x92) // EOB, run9/size1, run9/size2
+  private val acProgY = Array(0x00, 0x91, 0x10, 0x20) // EOB0, run9/size1, EOB1, EOB2
+  private val eobRuns4 = Array(0x00, 0x10, 0x20, 0x30, 0x40) // EOB0..EOB4
+  private val eobRuns2 = Array(0x00, 0x10, 0x20) // EOB0..EOB2
+
+  /** The MSB-first JPEG writer: a growable byte array, one emitter per
+    * marker segment, bit packing with 0xFF00 stuffing, 1-bit padding to a
+    * byte boundary (F.1.2.3), the DC-difference coder (F.1.2.1) and the
+    * EOB-run coder (G.1.2.2).
+    */
+  private final class JpegWriter {
+    private var buf = new Array[Byte](512)
+    private var n = 0
+    private var acc = 0 // pending bits: the low `nb` bits
+    private var nb = 0
+
+    def byte(v: Int): Unit = {
+      if (n == buf.length) buf = java.util.Arrays.copyOf(buf, n * 2)
+      buf(n) = v.toByte
+      n += 1
+    }
+    private def marker(m: Int): Unit = { byte(0xFF); byte(m) }
+    private def u16(v: Int): Unit = { byte(v >> 8); byte(v & 0xFF) }
+
+    def soi(): Unit = marker(0xD8)
+
+    /** 8-bit quantization table `tq`, Q ≡ 8 everywhere. */
+    def dqt(tq: Int): Unit = {
+      marker(0xDB); u16(67); byte(tq)
+      var i = 0
+      while (i < 64) { byte(8); i += 1 }
+    }
+
+    /** SOFn with 8-bit samples: component 1 (Y, QT 0) sampled `ySampling`;
+      * with three components, Cb (2) and Cr (3) are 1×1 on QT 1.
+      */
+    def sof(kind: Int, width: Int, height: Int, comps: Int, ySampling: Int): Unit = {
+      marker(kind); u16(8 + 3 * comps); byte(8); u16(height); u16(width); byte(comps)
+      byte(1); byte(ySampling); byte(0)
+      if (comps == 3) { byte(2); byte(0x11); byte(1); byte(3); byte(0x11); byte(1) }
+    }
+
+    /** DC table `th`: the Annex K luminance BITS over categories 0..11. */
+    def dhtDc(th: Int): Unit = {
+      marker(0xC4); u16(31); byte(th)
+      var l = 1
+      while (l <= 16) { byte(jpegDcBits(l)); l += 1 }
+      var v = 0
+      while (v < 12) { byte(v); v += 1 }
+    }
+
+    /** AC table `tcth` holding `ladder`, one code per length 1..n. */
+    def dhtAc(tcth: Int, ladder: Array[Int]): Unit = {
+      marker(0xC4); u16(19 + ladder.length); byte(tcth)
+      var l = 0
+      while (l < 16) { byte(if (l < ladder.length) 1 else 0); l += 1 }
+      ladder.foreach(byte)
+    }
+
+    def dri(ri: Int): Unit = { marker(0xDD); u16(4); u16(ri) }
+
+    /** SOS for the single component `cid` with table selector `tdta`. */
+    def sos1(cid: Int, tdta: Int, ss: Int, se: Int, ahAl: Int): Unit = {
+      marker(0xDA); u16(8); byte(1)
+      byte(cid); byte(tdta)
+      byte(ss); byte(se); byte(ahAl)
+    }
+
+    /** SOS interleaving Y (tables 0/0) with Cb and Cr (selector `chroma`). */
+    def sos3(chroma: Int, ss: Int, se: Int, ahAl: Int): Unit = {
+      marker(0xDA); u16(12); byte(3)
+      byte(1); byte(0x00); byte(2); byte(chroma); byte(3); byte(chroma)
+      byte(ss); byte(se); byte(ahAl)
+    }
+
+    /** Byte-align, then the RSTm that opens data unit `unit` of a scan
+      * with restart interval `ri` (m cycles 0..7 from each scan's start).
+      */
+    def rst(unit: Int, ri: Int): Unit = { alignByte(); marker(0xD0 + (unit / ri - 1) % 8) }
+
+    /** The low `len` bits of `v`, MSB first; a 0xFF byte gets a 0x00 stuffed. */
+    def putBits(v: Int, len: Int): Unit = {
+      acc = (acc << len) | (v & ((1 << len) - 1))
+      nb += len
+      while (nb >= 8) {
+        nb -= 8
+        val b = (acc >>> nb) & 0xFF
+        byte(b)
+        if (b == 0xFF) byte(0x00)
+      }
+      acc &= (1 << nb) - 1
+    }
+
+    /** Pad with 1-bits to the next byte boundary (T.81 F.1.2.3). */
+    def alignByte(): Unit = if (nb > 0) putBits((1 << (8 - nb)) - 1, 8 - nb)
+
+    // T.81 F.1.2.1: a value's size category, and its magnitude bits
+    // (negative values as v + 2^s − 1)
+    private def category(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
+    private def magnitude(v: Int, s: Int): Int = if (v >= 0) v else v + (1 << s) - 1
+
+    /** A DC difference: its category's Annex K code, then magnitude bits. */
+    def putDcDiff(diff: Int): Unit = {
+      val s = category(diff)
+      putBits(dcCode(s), dcLen(s))
+      putBits(magnitude(diff, s), s)
+    }
+
+    def putSym(ladder: Array[Int], sym: Int): Unit = {
+      var k = 0
+      while (ladder(k) != sym) k += 1
+      putBits((2 << k) - 2, k + 1)
+    }
+
+    /** AC coefficient `v` after `run` zeros: symbol (run, size), then magnitude bits. */
+    def putCoef(ladder: Array[Int], run: Int, v: Int): Unit = {
+      val s = category(v)
+      putSym(ladder, (run << 4) | s)
+      putBits(magnitude(v, s), s)
+    }
+
+    /** A run of `run` end-of-band blocks (nothing when 0): EOBn with
+      * n = ⌊log2 run⌋, then the low n bits of the run.
+      */
+    def putEobRun(run: Int, ladder: Array[Int]): Unit = if (run > 0) {
+      val nbits = 31 - Integer.numberOfLeadingZeros(run)
+      putSym(ladder, nbits << 4)
+      putBits(run, nbits)
+    }
+
+    /** Byte-align, EOI, and the finished file. */
+    def finish(): Array[Byte] = {
+      alignByte(); marker(0xD9)
+      java.util.Arrays.copyOf(buf, n)
+    }
+  }
+
+  // the planted fields: luma/gray DC per block, chroma DCs per MCU, and
+  // the one AC coefficient at zig-zag index 10
+  private def lumaDc(id: Long, bx: Int, by: Int): Int =
+    ((id + 5L * bx + 11L * by) % 160).toInt - 80
+  private def cbDc(id: Long, mx: Int, my: Int): Int =
+    ((3L * id + 7L * mx + 13L * my) % 100).toInt - 50
+  private def crDc(id: Long, mx: Int, my: Int): Int =
+    ((5L * id + 3L * mx + 17L * my) % 100).toInt - 50
+  private def acAt10(id: Long, bx: Int, by: Int): Int = {
+    val m = (1 + (id + bx + by) % 3).toInt
+    if ((id + bx + by) % 2 == 0) m else -m
+  }
+
+  private def restartDue(unit: Int, ri: Int): Boolean = ri > 0 && unit > 0 && unit % ri == 0
+
+  /** Baseline grayscale JPEG: dims 8·(1+id%3) × 8·(1+id%2), per block the
+    * DC difference, then `ac(bx, by)` after `run` zeros unless it is 0,
+    * then EOB, all coded from the AC table `ladder`. Restarts every `ri`
+    * blocks reset the DC predictor.
+    */
+  private def grayBaseline(id: Long, ri: Int, ladder: Array[Int], run: Int,
+      ac: (Int, Int) => Int): Array[Byte] = {
+    val bw = (1 + id % 3).toInt
+    val bh = (1 + id % 2).toInt
+    val w = new JpegWriter
+    w.soi(); w.dqt(0); w.sof(0xC0, 8 * bw, 8 * bh, 1, 0x11)
+    w.dhtDc(0x00); w.dhtAc(0x10, ladder)
+    if (ri > 0) w.dri(ri)
+    w.sos1(1, 0x00, 0, 63, 0)
+    var pred = 0
+    var by = 0
+    while (by < bh) {
+      var bx = 0
+      while (bx < bw) {
+        val mcu = by * bw + bx
+        if (restartDue(mcu, ri)) { w.rst(mcu, ri); pred = 0 }
+        val dc = lumaDc(id, bx, by)
+        w.putDcDiff(dc - pred)
+        pred = dc
+        val a = ac(bx, by)
+        if (a != 0) w.putCoef(ladder, run, a)
+        w.putSym(ladder, 0x00) // EOB
+        bx += 1
+      }
+      by += 1
+    }
+    w.finish()
+  }
+
+  private final val DcBaseline = 0 // DC difference, then the block's EOB
+  private final val DcFirst = 1 // progressive DC first, point transform Al = 1
+  private final val DcRefine = 2 // progressive DC refinement: the raw bit dc & 1
+
+  /** One interleaved DC pass over an mw×mh MCU grid: per MCU the hs×vs
+    * luma units in A.2.3 order (left to right, then top to bottom), then
+    * Cb, then Cr, each component chaining its own predictor; a restart
+    * every `ri` MCUs resets all three. Luma block indices clamp to the
+    * real lbw×lbh grid, so the pad units of a partial MCU repeat the edge
+    * block. Ends byte-aligned.
+    */
+  private def colorDcPass(w: JpegWriter, id: Long, hs: Int, vs: Int, mw: Int, mh: Int,
+      lbw: Int, lbh: Int, ri: Int, mode: Int): Unit = {
+    val pred = new Array[Int](3)
+    def unit(comp: Int, dc: Int): Unit =
+      if (mode == DcRefine) w.putBits(dc & 1, 1)
+      else {
+        val t = if (mode == DcFirst) dc >> 1 else dc // arithmetic shift
+        w.putDcDiff(t - pred(comp))
+        pred(comp) = t
+        if (mode == DcBaseline) w.putSym(acEobOnly, 0x00) // EOB
+      }
+    var mcu = 0
+    var my = 0
+    while (my < mh) {
+      var mx = 0
+      while (mx < mw) {
+        if (restartDue(mcu, ri)) { w.rst(mcu, ri); java.util.Arrays.fill(pred, 0) }
+        var sy = 0
+        while (sy < vs) {
+          var sx = 0
+          while (sx < hs) {
+            unit(0, lumaDc(id, math.min(hs * mx + sx, lbw - 1), math.min(vs * my + sy, lbh - 1)))
+            sx += 1
+          }
+          sy += 1
+        }
+        unit(1, cbDc(id, mx, my))
+        unit(2, crDc(id, mx, my))
+        mcu += 1
+        mx += 1
+      }
+      my += 1
+    }
+    w.alignByte()
+  }
+
+  /** An all-zero AC band over `n` blocks as EOB runs, cut at every
+    * restart boundary (T.81 forbids a run crossing one). Ends byte-aligned.
+    */
+  private def zeroBand(w: JpegWriter, n: Int, ri: Int, ladder: Array[Int]): Unit = {
+    var done = 0
+    while (done < n) {
+      if (done > 0) w.rst(done, ri)
+      val seg = if (ri > 0) math.min(ri, n - done) else n - done
+      w.putEobRun(seg, ladder)
+      done += seg
+    }
+    w.alignByte()
+  }
+
+  /** AC first scan (band 1..63, Al = 1) over `n` blocks, each carrying one
+    * coefficient `ac(blk)` at zig-zag 10: |ac| ≥ 2 codes run-9/size-1 of
+    * |ac| >> 1, a block with |ac| = 1 vanishes entirely into the EOB run,
+    * and every block's zero tail (11..63) ends in the run. A pending run
+    * is coded before each restart. Ends byte-aligned.
+    */
+  private def acFirstScan(w: JpegWriter, n: Int, ri: Int, ac: Int => Int): Unit = {
+    var eobrun = 0
+    var blk = 0
+    while (blk < n) {
+      if (restartDue(blk, ri)) { w.putEobRun(eobrun, acProgY); eobrun = 0; w.rst(blk, ri) }
+      val a = ac(blk)
+      val t = math.abs(a) >> 1
+      if (t != 0) {
+        w.putEobRun(eobrun, acProgY)
+        eobrun = 0
+        w.putCoef(acProgY, 9, if (a >= 0) t else -t)
+      }
+      eobrun += 1
+      blk += 1
+    }
+    w.putEobRun(eobrun, acProgY)
+    w.alignByte()
+  }
+
+  /** AC refinement scan (Ah = 1, Al = 0; G.1.2.3) over the same blocks:
+    * |ac| = 1 arrives newly nonzero (run 9 over zero-history slots, size 1,
+    * sign), |ac| ≥ 2 sends only its correction bit |ac| & 1, buffered
+    * until the EOB run it rides in is coded (jcphuff.c's structure).
+    * Ends byte-aligned.
+    */
+  private def acRefineScan(w: JpegWriter, n: Int, ri: Int, ac: Int => Int): Unit = {
+    val pending = new Array[Int](math.max(n, 0))
+    var np = 0
+    var eobrun = 0
+    def codeRun(): Unit = if (eobrun > 0) {
+      w.putEobRun(eobrun, acProgY)
+      var i = 0
+      while (i < np) { w.putBits(pending(i), 1); i += 1 }
+      np = 0
+      eobrun = 0
+    }
+    var blk = 0
+    while (blk < n) {
+      if (restartDue(blk, ri)) { codeRun(); w.rst(blk, ri) }
+      val a = ac(blk)
+      if (math.abs(a) > 1) { pending(np) = math.abs(a) & 1; np += 1 }
+      else { codeRun(); w.putCoef(acProgY, 9, a) }
+      eobrun += 1
+      blk += 1
+    }
+    codeRun()
+    w.alignByte()
   }
 
   /** Baseline grayscale JPEG with DC-ONLY blocks — REAL entropy framing
@@ -334,96 +646,14 @@ object MediaSynth {
 
   /** `withAc = true` is the SPEC-ONLY variant: the AC table gains a
     * run0/size1 code and every block carries one ±1 coefficient at
-    * zig-zag position 1 — exercising the kernel's AC run-length layer
-    * and the reference IDCT, whose parity vs ImageIO is then ±1/pixel
-    * (T.81 mandates no bit-exact IDCT), pinned with a tolerance in
-    * MultimodalSpec. The oracle-checked fixture stays DC-only.
+    * zig-zag position 1 (+1 for even id+bx+by) — exercising the kernel's
+    * AC run-length layer and the reference IDCT, whose parity vs ImageIO
+    * is then ±1/pixel (T.81 mandates no bit-exact IDCT), pinned with a
+    * tolerance in MultimodalSpec. The oracle-checked fixture stays DC-only.
     */
-  private[graft] def jpeg(id: Long, withAc: Boolean, ri: Int = 0): Array[Byte] = {
-    val bw = (1 + id % 3).toInt
-    val bh = (1 + id % 2).toInt
-    val w = bw * 8
-    val h = bh * 8
-    def dcOf(bx: Int, by: Int): Int = ((id + 5L * bx + 11L * by) % 160).toInt - 80
-    val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def b(xs: Int*): Unit = xs.foreach(x => out += x.toByte)
-    b(0xFF, 0xD8) // SOI
-    b(0xFF, 0xDB, 0, 67, 0x00) // DQT, 8-bit table 0
-    (0 until 64).foreach(_ => out += 8.toByte) // Q == 8 everywhere
-    b(0xFF, 0xC0, 0, 11, 8, h >> 8, h & 0xFF, w >> 8, w & 0xFF, 1, 1, 0x11, 0) // SOF0
-    b(0xFF, 0xC4, 0, 31, 0x00) // DHT: DC table 0 (standard Annex K BITS)
-    (1 to 16).foreach(l => out += jpegDcBits(l).toByte)
-    (0 to 11).foreach(v => out += v.toByte) // HUFFVAL = categories 0..11
-    if (withAc) {
-      // AC table 0: EOB ('0', 1 bit) + run0/size1 ('10', 2 bits)
-      b(0xFF, 0xC4, 0, 21, 0x10)
-      b(1, 1); (3 to 16).foreach(_ => b(0))
-      b(0x00, 0x01)
-    } else {
-      b(0xFF, 0xC4, 0, 20, 0x10) // DHT: AC table 0 — one 1-bit code: EOB
-      b(1); (2 to 16).foreach(_ => b(0))
-      b(0x00)
-    }
-    if (ri > 0) b(0xFF, 0xDD, 0, 4, ri >> 8, ri & 0xFF) // DRI
-    b(0xFF, 0xDA, 0, 8, 1, 1, 0x00, 0, 63, 0) // SOS: comp 1, DC 0 / AC 0
-    val dcCode = jpegCodes(jpegDcBits)
-    // MSB-first bit writer with byte stuffing
-    var cur = 0
-    var nb = 0
-    def putBits(v: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        nb += 1
-        if (nb == 8) {
-          out += cur.toByte
-          if (cur == 0xFF) out += 0x00.toByte // stuff
-          cur = 0
-          nb = 0
-        }
-        i -= 1
-      }
-    }
-    def flushBits(): Unit = if (nb > 0) { // pad with 1-bits (T.81 F.1.2.3)
-      cur = (cur << (8 - nb)) | ((1 << (8 - nb)) - 1)
-      out += cur.toByte
-      if (cur == 0xFF) out += 0x00.toByte
-      cur = 0
-      nb = 0
-    }
-    var pred = 0
-    var by = 0
-    while (by < bh) {
-      var bx = 0
-      while (bx < bw) {
-        val mcu = by * bw + bx
-        if (ri > 0 && mcu > 0 && mcu % ri == 0) {
-          // restart: byte-align, RSTm (m cycles 0..7), DC predictor resets
-          flushBits()
-          b(0xFF, 0xD0 + ((mcu / ri - 1) % 8))
-          pred = 0
-        }
-        val dc = dcOf(bx, by)
-        val diff = dc - pred
-        pred = dc
-        val mag = math.abs(diff)
-        val s = 32 - Integer.numberOfLeadingZeros(mag) // category (0 for 0)
-        val (c, cl) = dcCode(s)
-        putBits(c, cl)
-        if (s > 0) putBits(if (diff >= 0) diff else diff + (1 << s) - 1, s)
-        if (withAc) {
-          putBits(2, 2) // run0/size1 code '10'
-          putBits(if ((id + bx + by) % 2 == 0) 1 else 0, 1) // ±1 magnitude
-        }
-        putBits(0, 1) // EOB
-        bx += 1
-      }
-      by += 1
-    }
-    flushBits()
-    b(0xFF, 0xD9) // EOI
-    out.toArray
-  }
+  private[graft] def jpeg(id: Long, withAc: Boolean, ri: Int = 0): Array[Byte] =
+    if (withAc) grayBaseline(id, ri, acRun0, 0, (bx, by) => if ((id + bx + by) % 2 == 0) 1 else -1)
+    else grayBaseline(id, ri, acEobOnly, 0, (_, _) => 0)
 
   /** AC-EXACT baseline grayscale JPEG — the fixture that makes the AC
     * run-length layer HASH-checkable despite T.81's no-bit-exact-IDCT
@@ -442,78 +672,7 @@ object MediaSynth {
     * run-length skip, ZRL-free, then EOB, exercising the same decode
     * branches as production scans.
     */
-  def jpegAc(id: Long): Array[Byte] = {
-    val bw = (1 + id % 3).toInt
-    val bh = (1 + id % 2).toInt
-    val w = bw * 8
-    val h = bh * 8
-    def dcOf(bx: Int, by: Int): Int = ((id + 5L * bx + 11L * by) % 160).toInt - 80
-    def acOf(bx: Int, by: Int): Int = {
-      val m = (1 + (id + bx + by) % 3).toInt
-      if ((id + bx + by) % 2 == 0) m else -m
-    }
-    val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def b(xs: Int*): Unit = xs.foreach(x => out += x.toByte)
-    b(0xFF, 0xD8) // SOI
-    b(0xFF, 0xDB, 0, 67, 0x00) // DQT, 8-bit table 0
-    (0 until 64).foreach(_ => out += 8.toByte) // Q == 8 everywhere
-    b(0xFF, 0xC0, 0, 11, 8, h >> 8, h & 0xFF, w >> 8, w & 0xFF, 1, 1, 0x11, 0) // SOF0
-    b(0xFF, 0xC4, 0, 31, 0x00) // DHT: DC table 0 (standard Annex K BITS)
-    (1 to 16).foreach(l => out += jpegDcBits(l).toByte)
-    (0 to 11).foreach(v => out += v.toByte) // HUFFVAL = categories 0..11
-    // AC table 0: EOB '0' (1 bit), 0x91 '10' (2 bits), 0x92 '110' (3 bits)
-    b(0xFF, 0xC4, 0, 22, 0x10)
-    b(1, 1, 1); (4 to 16).foreach(_ => b(0))
-    b(0x00, 0x91, 0x92)
-    b(0xFF, 0xDA, 0, 8, 1, 1, 0x00, 0, 63, 0) // SOS: comp 1, DC 0 / AC 0
-    val dcCode = jpegCodes(jpegDcBits)
-    var cur = 0
-    var nb = 0
-    def putBits(v: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        nb += 1
-        if (nb == 8) {
-          out += cur.toByte
-          if (cur == 0xFF) out += 0x00.toByte // stuff
-          cur = 0
-          nb = 0
-        }
-        i -= 1
-      }
-    }
-    def putMag(v: Int, s: Int): Unit =
-      putBits(if (v >= 0) v else v + (1 << s) - 1, s)
-    var pred = 0
-    var by = 0
-    while (by < bh) {
-      var bx = 0
-      while (bx < bw) {
-        val dc = dcOf(bx, by)
-        val diff = dc - pred
-        pred = dc
-        val mag = math.abs(diff)
-        val s = 32 - Integer.numberOfLeadingZeros(mag)
-        val (c, cl) = dcCode(s)
-        putBits(c, cl)
-        if (s > 0) putMag(diff, s)
-        val ac = acOf(bx, by)
-        if (math.abs(ac) == 1) { putBits(2, 2); putMag(ac, 1) } // 0x91
-        else { putBits(6, 3); putMag(ac, 2) } // 0x92
-        putBits(0, 1) // EOB
-        bx += 1
-      }
-      by += 1
-    }
-    if (nb > 0) { // pad the final byte with 1-bits (T.81 F.1.2.3)
-      cur = (cur << (8 - nb)) | ((1 << (8 - nb)) - 1)
-      out += cur.toByte
-      if (cur == 0xFF) out += 0x00.toByte
-    }
-    b(0xFF, 0xD9) // EOI
-    out.toArray
-  }
+  def jpegAc(id: Long): Array[Byte] = grayBaseline(id, 0, acRun9, 9, acAt10(id, _, _))
 
   /** PROGRESSIVE (SOF2) grayscale JPEG — the round-15 fixture behind the
     * progressive decode tier, planted to be INTEGER-EXACT like
@@ -559,152 +718,37 @@ object MediaSynth {
   private[graft] def jpegProgressive(id: Long, ri: Int): Array[Byte] = {
     val bw = (1 + id % 3).toInt
     val bh = (1 + id % 2).toInt
-    val w = bw * 8
-    val h = bh * 8
     val nBlocks = bw * bh
-    def dcOf(b: Int): Int = ((id + 5L * (b % bw) + 11L * (b / bw)) % 160).toInt - 80
-    def acOf(b: Int): Int = {
-      val bx = b % bw
-      val by = b / bw
-      val m = (1 + (id + bx + by) % 3).toInt
-      if ((id + bx + by) % 2 == 0) m else -m
-    }
-    val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def b(xs: Int*): Unit = xs.foreach(x => out += x.toByte)
-    b(0xFF, 0xD8) // SOI
-    b(0xFF, 0xDB, 0, 67, 0x00) // DQT, 8-bit table 0
-    (0 until 64).foreach(_ => out += 8.toByte) // Q == 8 everywhere
-    b(0xFF, 0xC2, 0, 11, 8, h >> 8, h & 0xFF, w >> 8, w & 0xFF, 1, 1, 0x11, 0) // SOF2
-    b(0xFF, 0xC4, 0, 31, 0x00) // DHT: DC table 0 (standard Annex K BITS)
-    (1 to 16).foreach(l => out += jpegDcBits(l).toByte)
-    (0 to 11).foreach(v => out += v.toByte) // HUFFVAL = categories 0..11
-    // AC table 0: EOB0 '0', run9/size1 '10', EOB1 '110', EOB2 '1110'
-    b(0xFF, 0xC4, 0, 23, 0x10)
-    b(1, 1, 1, 1); (5 to 16).foreach(_ => b(0))
-    b(0x00, 0x91, 0x10, 0x20)
-    val acSym = Map(0x00 -> (0, 1), 0x91 -> (2, 2), 0x10 -> (6, 3), 0x20 -> (14, 4))
-    val dcCode = jpegCodes(jpegDcBits)
-    // MSB-first bit writer with byte stuffing; flushed (1-padded) per scan
-    var cur = 0
-    var nb = 0
-    def putBits(v: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        nb += 1
-        if (nb == 8) {
-          out += cur.toByte
-          if (cur == 0xFF) out += 0x00.toByte // stuff
-          cur = 0
-          nb = 0
-        }
-        i -= 1
-      }
-    }
-    def flushScan(): Unit = if (nb > 0) { // pad with 1-bits (T.81 F.1.2.3)
-      cur = (cur << (8 - nb)) | ((1 << (8 - nb)) - 1)
-      out += cur.toByte
-      if (cur == 0xFF) out += 0x00.toByte
-      cur = 0
-      nb = 0
-    }
-    def putAcSym(sym: Int): Unit = { val (c, l) = acSym(sym); putBits(c, l) }
-    def sos(tdta: Int, ss: Int, se: Int, ah: Int, al: Int): Unit =
-      b(0xFF, 0xDA, 0, 8, 1, 1, tdta, ss, se, (ah << 4) | al)
-    // restart boundary inside a scan: callers flush any pending EOB run
-    // FIRST (a run may not cross a restart), then the stream byte-aligns
-    // and the marker index cycles 0..7 from 0 per scan
-    def rst(blk: Int): Boolean = ri > 0 && blk > 0 && blk % ri == 0
-    def putRst(blk: Int): Unit = {
-      flushScan()
-      b(0xFF, 0xD0 + ((blk / ri - 1) % 8))
-    }
-    if (ri > 0) b(0xFF, 0xDD, 0, 4, ri >> 8, ri & 0xFF) // DRI
-
-    // ---- scan 1: DC first, Al = 1 ----
-    sos(0x00, 0, 0, 0, 1)
+    def dc(blk: Int): Int = lumaDc(id, blk % bw, blk / bw)
+    val ac: Int => Int = blk => acAt10(id, blk % bw, blk / bw)
+    val w = new JpegWriter
+    w.soi(); w.dqt(0); w.sof(0xC2, 8 * bw, 8 * bh, 1, 0x11)
+    w.dhtDc(0x00); w.dhtAc(0x10, acProgY)
+    if (ri > 0) w.dri(ri)
+    w.sos1(1, 0x00, 0, 0, 0x01) // scan 1: DC first, Al = 1
     var pred = 0
-    for (blk <- 0 until nBlocks) {
-      if (rst(blk)) { putRst(blk); pred = 0 }
-      val t = dcOf(blk) >> 1 // point transform (arithmetic shift)
-      val diff = t - pred
+    var blk = 0
+    while (blk < nBlocks) {
+      if (restartDue(blk, ri)) { w.rst(blk, ri); pred = 0 }
+      val t = dc(blk) >> 1 // point transform (arithmetic shift)
+      w.putDcDiff(t - pred)
       pred = t
-      val mag = math.abs(diff)
-      val s = 32 - Integer.numberOfLeadingZeros(mag)
-      val (c, cl) = dcCode(s)
-      putBits(c, cl)
-      if (s > 0) putBits(if (diff >= 0) diff else diff + (1 << s) - 1, s)
+      blk += 1
     }
-    flushScan()
-
-    // ---- scan 2: AC first, band 1..63, Al = 1 ----
-    sos(0x00, 1, 63, 0, 1)
-    var eobrun = 0
-    def flushEob(): Unit = if (eobrun > 0) {
-      val nbits = 31 - Integer.numberOfLeadingZeros(eobrun)
-      putAcSym(nbits << 4)
-      if (nbits > 0) putBits(eobrun & ((1 << nbits) - 1), nbits)
-      eobrun = 0
+    w.alignByte()
+    w.sos1(1, 0x00, 1, 63, 0x01) // scan 2: AC first, Al = 1
+    acFirstScan(w, nBlocks, ri, ac)
+    w.sos1(1, 0x00, 0, 0, 0x10) // scan 3: DC refinement, Ah = 1, Al = 0
+    blk = 0
+    while (blk < nBlocks) {
+      if (restartDue(blk, ri)) w.rst(blk, ri)
+      w.putBits(dc(blk) & 1, 1)
+      blk += 1
     }
-    for (blk <- 0 until nBlocks) {
-      if (rst(blk)) { flushEob(); putRst(blk) }
-      val ac = acOf(blk)
-      val t = math.abs(ac) >> 1
-      if (t == 0) eobrun += 1 // the whole block vanishes into the run
-      else {
-        flushEob()
-        putAcSym(0x91) // run 9 (zig-zag 1..9), size 1
-        putBits(if (ac >= 0) t else ~t & 1, 1)
-        eobrun += 1 // the block's zero tail (11..63) ends it
-      }
-    }
-    flushEob()
-    flushScan()
-
-    // ---- scan 3: DC refinement, Ah = 1, Al = 0 ----
-    sos(0x00, 0, 0, 1, 0)
-    for (blk <- 0 until nBlocks) {
-      if (rst(blk)) putRst(blk)
-      putBits(dcOf(blk) & 1, 1)
-    }
-    flushScan()
-
-    // ---- scan 4: AC refinement, Ah = 1, Al = 0 (G.1.2.3) ----
-    sos(0x00, 1, 63, 1, 0)
-    val pendingBE = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def flushEobRefine(): Unit = if (eobrun > 0) {
-      val nbits = 31 - Integer.numberOfLeadingZeros(eobrun)
-      putAcSym(nbits << 4)
-      if (nbits > 0) putBits(eobrun & ((1 << nbits) - 1), nbits)
-      pendingBE.foreach(putBits(_, 1)) // run-carried correction bits
-      pendingBE.clear()
-      eobrun = 0
-    }
-    for (blk <- 0 until nBlocks) {
-      if (rst(blk)) { flushEobRefine(); putRst(blk) }
-      val ac = acOf(blk)
-      val t = math.abs(ac)
-      val br = scala.collection.mutable.ArrayBuffer.empty[Int]
-      var r = 9 // zig-zag 1..9 are zero-history zeros before the coef
-      if (t > 1) br += (t & 1) // already nonzero: correction bit only
-      else {
-        // newly nonzero: flush the pending run, then run/size + sign
-        flushEobRefine()
-        putAcSym((r << 4) | 1)
-        putBits(if (ac >= 0) 1 else 0, 1)
-        br.foreach(putBits(_, 1))
-        br.clear()
-        r = 0
-      }
-      // zig-zag 11..63 zero tail: the block closes into an EOB run
-      eobrun += 1
-      pendingBE ++= br
-    }
-    flushEobRefine()
-    flushScan()
-
-    b(0xFF, 0xD9) // EOI
-    out.toArray
+    w.alignByte()
+    w.sos1(1, 0x00, 1, 63, 0x10) // scan 4: AC refinement, Ah = 1, Al = 0
+    acRefineScan(w, nBlocks, ri, ac)
+    w.finish()
   }
 
   /** DC-exact COLOR baseline JPEG — YCbCr 4:4:4, three full-resolution
@@ -719,89 +763,11 @@ object MediaSynth {
     * integers ImageIO's native reader computes — so the color output is
     * formula-exact end to end. Planted: dims as [[jpeg]];
     * yDc = ((id + 5bx + 11by) % 160) − 80, cbDc = ((3id + 7bx + 13by)
-    * % 100) − 50, crDc = ((5id + 3bx + 17by) % 100) − 50.
+    * % 100) − 50, crDc = ((5id + 3bx + 17by) % 100) − 50. It is
+    * [[jpegColorSampled]] at 1×1 sampling on the gray grid.
     */
-  def jpegColor(id: Long): Array[Byte] = {
-    val bw = (1 + id % 3).toInt
-    val bh = (1 + id % 2).toInt
-    val w = bw * 8
-    val h = bh * 8
-    def yDc(bx: Int, by: Int): Int = ((id + 5L * bx + 11L * by) % 160).toInt - 80
-    def cbDc(bx: Int, by: Int): Int = ((3L * id + 7L * bx + 13L * by) % 100).toInt - 50
-    def crDc(bx: Int, by: Int): Int = ((5L * id + 3L * bx + 17L * by) % 100).toInt - 50
-    val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def b(xs: Int*): Unit = xs.foreach(x => out += x.toByte)
-    b(0xFF, 0xD8) // SOI
-    b(0xFF, 0xDB, 0, 67, 0x00) // DQT: 8-bit table 0 (luma), Q == 8
-    (0 until 64).foreach(_ => out += 8.toByte)
-    b(0xFF, 0xDB, 0, 67, 0x01) // DQT: 8-bit table 1 (chroma), Q == 8
-    (0 until 64).foreach(_ => out += 8.toByte)
-    // SOF0: 8-bit, THREE 1x1 components (4:4:4); Y uses QT 0, Cb/Cr QT 1
-    b(0xFF, 0xC0, 0, 17, 8, h >> 8, h & 0xFF, w >> 8, w & 0xFF, 3,
-      1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1)
-    Seq(0x00, 0x01).foreach { th => // DC tables 0 and 1 (Annex K BITS)
-      b(0xFF, 0xC4, 0, 31, th)
-      (1 to 16).foreach(l => out += jpegDcBits(l).toByte)
-      (0 to 11).foreach(v => out += v.toByte)
-    }
-    Seq(0x10, 0x11).foreach { tcth => // AC tables 0 and 1: one EOB code
-      b(0xFF, 0xC4, 0, 20, tcth)
-      b(1); (2 to 16).foreach(_ => b(0))
-      b(0x00)
-    }
-    // SOS: Y -> (DC0, AC0), Cb/Cr -> (DC1, AC1)
-    b(0xFF, 0xDA, 0, 12, 3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0)
-    val dcCode = jpegCodes(jpegDcBits)
-    var cur = 0
-    var nb = 0
-    def putBits(v: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        nb += 1
-        if (nb == 8) {
-          out += cur.toByte
-          if (cur == 0xFF) out += 0x00.toByte // stuff
-          cur = 0
-          nb = 0
-        }
-        i -= 1
-      }
-    }
-    val pred = new Array[Int](3)
-    var by = 0
-    while (by < bh) {
-      var bx = 0
-      while (bx < bw) {
-        var comp = 0
-        while (comp < 3) { // interleaved MCU: Y, Cb, Cr
-          val dc = comp match {
-            case 0 => yDc(bx, by)
-            case 1 => cbDc(bx, by)
-            case _ => crDc(bx, by)
-          }
-          val diff = dc - pred(comp)
-          pred(comp) = dc
-          val mag = math.abs(diff)
-          val s = 32 - Integer.numberOfLeadingZeros(mag)
-          val (c, cl) = dcCode(s)
-          putBits(c, cl)
-          if (s > 0) putBits(if (diff >= 0) diff else diff + (1 << s) - 1, s)
-          putBits(0, 1) // EOB
-          comp += 1
-        }
-        bx += 1
-      }
-      by += 1
-    }
-    if (nb > 0) { // pad the final byte with 1-bits (T.81 F.1.2.3)
-      cur = (cur << (8 - nb)) | ((1 << (8 - nb)) - 1)
-      out += cur.toByte
-      if (cur == 0xFF) out += 0x00.toByte
-    }
-    b(0xFF, 0xD9) // EOI
-    out.toArray
-  }
+  def jpegColor(id: Long): Array[Byte] =
+    jpegColorSampled(id, 1, 1, 0, (1 + id % 3).toInt, (1 + id % 2).toInt)
 
   /** DC-exact COLOR baseline JPEG with 4:2:0 CHROMA SUBSAMPLING — the
     * layout virtually every real photographic JPEG uses: SOF0 declares Y
@@ -821,92 +787,7 @@ object MediaSynth {
     * cbDc = ((3·id + 7·mx + 13·my) % 100) − 50,
     * crDc = ((5·id + 3·mx + 17·my) % 100) − 50.
     */
-  def jpegColor420(id: Long): Array[Byte] = {
-    val mw = (1 + id % 2).toInt // MCUs across
-    val mh = (1 + id % 3).toInt // MCUs down
-    val w = mw * 16
-    val h = mh * 16
-    def yDc(lbx: Int, lby: Int): Int = ((id + 5L * lbx + 11L * lby) % 160).toInt - 80
-    def cbDc(mx: Int, my: Int): Int = ((3L * id + 7L * mx + 13L * my) % 100).toInt - 50
-    def crDc(mx: Int, my: Int): Int = ((5L * id + 3L * mx + 17L * my) % 100).toInt - 50
-    val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def b(xs: Int*): Unit = xs.foreach(x => out += x.toByte)
-    b(0xFF, 0xD8) // SOI
-    b(0xFF, 0xDB, 0, 67, 0x00) // DQT: 8-bit table 0 (luma), Q == 8
-    (0 until 64).foreach(_ => out += 8.toByte)
-    b(0xFF, 0xDB, 0, 67, 0x01) // DQT: 8-bit table 1 (chroma), Q == 8
-    (0 until 64).foreach(_ => out += 8.toByte)
-    // SOF0: 8-bit, Y sampled 2x2 (QT 0), Cb/Cr 1x1 (QT 1) — 4:2:0
-    b(0xFF, 0xC0, 0, 17, 8, h >> 8, h & 0xFF, w >> 8, w & 0xFF, 3,
-      1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1)
-    Seq(0x00, 0x01).foreach { th => // DC tables 0 and 1 (Annex K BITS)
-      b(0xFF, 0xC4, 0, 31, th)
-      (1 to 16).foreach(l => out += jpegDcBits(l).toByte)
-      (0 to 11).foreach(v => out += v.toByte)
-    }
-    Seq(0x10, 0x11).foreach { tcth => // AC tables 0 and 1: one EOB code
-      b(0xFF, 0xC4, 0, 20, tcth)
-      b(1); (2 to 16).foreach(_ => b(0))
-      b(0x00)
-    }
-    // SOS: Y -> (DC0, AC0), Cb/Cr -> (DC1, AC1)
-    b(0xFF, 0xDA, 0, 12, 3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0)
-    val dcCode = jpegCodes(jpegDcBits)
-    var cur = 0
-    var nb = 0
-    def putBits(v: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        nb += 1
-        if (nb == 8) {
-          out += cur.toByte
-          if (cur == 0xFF) out += 0x00.toByte // stuff
-          cur = 0
-          nb = 0
-        }
-        i -= 1
-      }
-    }
-    val pred = new Array[Int](3)
-    def putDc(comp: Int, dc: Int): Unit = {
-      val diff = dc - pred(comp)
-      pred(comp) = dc
-      val mag = math.abs(diff)
-      val s = 32 - Integer.numberOfLeadingZeros(mag)
-      val (c, cl) = dcCode(s)
-      putBits(c, cl)
-      if (s > 0) putBits(if (diff >= 0) diff else diff + (1 << s) - 1, s)
-      putBits(0, 1) // EOB
-    }
-    var my = 0
-    while (my < mh) {
-      var mx = 0
-      while (mx < mw) {
-        // four Y units: left-to-right then top-to-bottom inside the MCU
-        var sy = 0
-        while (sy < 2) {
-          var sx = 0
-          while (sx < 2) {
-            putDc(0, yDc(2 * mx + sx, 2 * my + sy))
-            sx += 1
-          }
-          sy += 1
-        }
-        putDc(1, cbDc(mx, my))
-        putDc(2, crDc(mx, my))
-        mx += 1
-      }
-      my += 1
-    }
-    if (nb > 0) { // pad the final byte with 1-bits (T.81 F.1.2.3)
-      cur = (cur << (8 - nb)) | ((1 << (8 - nb)) - 1)
-      out += cur.toByte
-      if (cur == 0xFF) out += 0x00.toByte
-    }
-    b(0xFF, 0xD9) // EOI
-    out.toArray
-  }
+  def jpegColor420(id: Long): Array[Byte] = jpegColorSampled(id, 2, 2, 0)
 
   /** COLOR PROGRESSIVE (SOF2, 4:4:4) JPEG — the round-16 fixture behind
     * the color-progressive decode tier, planted to be INTEGER-EXACT like
@@ -938,155 +819,21 @@ object MediaSynth {
   def jpegColorProgressive(id: Long): Array[Byte] = {
     val bw = (1 + id % 3).toInt
     val bh = (1 + id % 2).toInt
-    val w = bw * 8
-    val h = bh * 8
     val nBlocks = bw * bh
-    def yDc(b: Int): Int = ((id + 5L * (b % bw) + 11L * (b / bw)) % 160).toInt - 80
-    def cbDc(b: Int): Int = ((3L * id + 7L * (b % bw) + 13L * (b / bw)) % 100).toInt - 50
-    def crDc(b: Int): Int = ((5L * id + 3L * (b % bw) + 17L * (b / bw)) % 100).toInt - 50
-    def acOf(b: Int): Int = {
-      val s = (id + b % bw + b / bw)
-      val m = (1 + s % 3).toInt
-      if (s % 2 == 0) m else -m
-    }
-    val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def b(xs: Int*): Unit = xs.foreach(x => out += x.toByte)
-    b(0xFF, 0xD8) // SOI
-    b(0xFF, 0xDB, 0, 67, 0x00) // DQT: 8-bit table 0 (luma), Q == 8
-    (0 until 64).foreach(_ => out += 8.toByte)
-    b(0xFF, 0xDB, 0, 67, 0x01) // DQT: 8-bit table 1 (chroma), Q == 8
-    (0 until 64).foreach(_ => out += 8.toByte)
-    // SOF2: 8-bit, THREE 1x1 components (4:4:4); Y uses QT 0, Cb/Cr QT 1
-    b(0xFF, 0xC2, 0, 17, 8, h >> 8, h & 0xFF, w >> 8, w & 0xFF, 3,
-      1, 0x11, 0, 2, 0x11, 1, 3, 0x11, 1)
-    Seq(0x00, 0x01).foreach { th => // DC tables 0 and 1 (Annex K BITS)
-      b(0xFF, 0xC4, 0, 31, th)
-      (1 to 16).foreach(l => out += jpegDcBits(l).toByte)
-      (0 to 11).foreach(v => out += v.toByte)
-    }
-    // AC table 0 (luma): EOB0 '0', run9/size1 '10', EOB1 '110', EOB2 '1110'
-    b(0xFF, 0xC4, 0, 23, 0x10)
-    b(1, 1, 1, 1); (5 to 16).foreach(_ => b(0))
-    b(0x00, 0x91, 0x10, 0x20)
-    // AC table 1 (chroma): EOB0 '0', EOB1 '10', EOB2 '110'
-    b(0xFF, 0xC4, 0, 22, 0x11)
-    b(1, 1, 1); (4 to 16).foreach(_ => b(0))
-    b(0x00, 0x10, 0x20)
-    val acSymY = Map(0x00 -> (0, 1), 0x91 -> (2, 2), 0x10 -> (6, 3), 0x20 -> (14, 4))
-    val acSymC = Map(0x00 -> (0, 1), 0x10 -> (2, 2), 0x20 -> (6, 3))
-    val dcCode = jpegCodes(jpegDcBits)
-    var cur = 0
-    var nb = 0
-    def putBits(v: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        nb += 1
-        if (nb == 8) {
-          out += cur.toByte
-          if (cur == 0xFF) out += 0x00.toByte // stuff
-          cur = 0
-          nb = 0
-        }
-        i -= 1
-      }
-    }
-    def flushScan(): Unit = if (nb > 0) { // pad with 1-bits (T.81 F.1.2.3)
-      cur = (cur << (8 - nb)) | ((1 << (8 - nb)) - 1)
-      out += cur.toByte
-      if (cur == 0xFF) out += 0x00.toByte
-      cur = 0
-      nb = 0
-    }
-    def putDcDiff(diff: Int): Unit = {
-      val mag = math.abs(diff)
-      val s = 32 - Integer.numberOfLeadingZeros(mag)
-      val (c, cl) = dcCode(s)
-      putBits(c, cl)
-      if (s > 0) putBits(if (diff >= 0) diff else diff + (1 << s) - 1, s)
-    }
-    // ---- scan 1: DC first, interleaved Y,Cb,Cr, Al = 1 ----
-    b(0xFF, 0xDA, 0, 12, 3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0x01)
-    val pred = new Array[Int](3)
-    for (blk <- 0 until nBlocks; comp <- 0 until 3) {
-      val dc = comp match {
-        case 0 => yDc(blk); case 1 => cbDc(blk); case _ => crDc(blk)
-      }
-      val t = dc >> 1 // point transform (arithmetic shift)
-      putDcDiff(t - pred(comp))
-      pred(comp) = t
-    }
-    flushScan()
-    // ---- scan 2: AC first Y, band 1..63, Al = 1 ----
-    b(0xFF, 0xDA, 0, 8, 1, 1, 0x00, 1, 63, 0x01)
-    var eobrun = 0
-    def flushEob(sym: Map[Int, (Int, Int)]): Unit = if (eobrun > 0) {
-      val nbits = 31 - Integer.numberOfLeadingZeros(eobrun)
-      val (c, l) = sym(nbits << 4)
-      putBits(c, l)
-      if (nbits > 0) putBits(eobrun & ((1 << nbits) - 1), nbits)
-      eobrun = 0
-    }
-    for (blk <- 0 until nBlocks) {
-      val ac = acOf(blk)
-      val t = math.abs(ac) >> 1
-      if (t == 0) eobrun += 1
-      else {
-        flushEob(acSymY)
-        val (c, l) = acSymY(0x91)
-        putBits(c, l)
-        putBits(if (ac >= 0) t else ~t & 1, 1)
-        eobrun += 1 // the block's zero tail ends it
-      }
-    }
-    flushEob(acSymY)
-    flushScan()
-    // ---- scans 3, 4: AC first Cb then Cr — all-zero bands, EOB runs ----
-    for (cid <- Seq(2, 3)) {
-      b(0xFF, 0xDA, 0, 8, 1, cid, 0x11, 1, 63, 0x00)
-      eobrun = nBlocks
-      flushEob(acSymC)
-      flushScan()
-    }
-    // ---- scan 5: DC refinement, interleaved, Ah = 1, Al = 0 ----
-    b(0xFF, 0xDA, 0, 12, 3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0x10)
-    for (blk <- 0 until nBlocks; comp <- 0 until 3) {
-      val dc = comp match {
-        case 0 => yDc(blk); case 1 => cbDc(blk); case _ => crDc(blk)
-      }
-      putBits(dc & 1, 1)
-    }
-    flushScan()
-    // ---- scan 6: AC refinement Y, Ah = 1, Al = 0 (G.1.2.3) ----
-    b(0xFF, 0xDA, 0, 8, 1, 1, 0x00, 1, 63, 0x10)
-    val pendingBE = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def flushEobRefine(): Unit = if (eobrun > 0) {
-      val nbits = 31 - Integer.numberOfLeadingZeros(eobrun)
-      val (c, l) = acSymY(nbits << 4)
-      putBits(c, l)
-      if (nbits > 0) putBits(eobrun & ((1 << nbits) - 1), nbits)
-      pendingBE.foreach(putBits(_, 1)) // run-carried correction bits
-      pendingBE.clear()
-      eobrun = 0
-    }
-    eobrun = 0
-    for (blk <- 0 until nBlocks) {
-      val ac = acOf(blk)
-      val t = math.abs(ac)
-      if (t > 1) pendingBE += (t & 1) // already nonzero: correction bit only
-      else {
-        // newly nonzero: flush the pending run, then run/size + sign
-        flushEobRefine()
-        val (c, l) = acSymY(0x91)
-        putBits(c, l)
-        putBits(if (ac >= 0) 1 else 0, 1)
-      }
-      eobrun += 1 // zig-zag 11..63 zero tail closes the block into a run
-    }
-    flushEobRefine()
-    flushScan()
-    b(0xFF, 0xD9) // EOI
-    out.toArray
+    val ac: Int => Int = blk => acAt10(id, blk % bw, blk / bw)
+    val w = new JpegWriter
+    w.soi(); w.dqt(0); w.dqt(1); w.sof(0xC2, 8 * bw, 8 * bh, 3, 0x11)
+    w.dhtDc(0x00); w.dhtDc(0x01); w.dhtAc(0x10, acProgY); w.dhtAc(0x11, eobRuns2)
+    w.sos3(0x10, 0, 0, 0x01)
+    colorDcPass(w, id, 1, 1, bw, bh, bw, bh, 0, DcFirst)
+    w.sos1(1, 0x00, 1, 63, 0x01)
+    acFirstScan(w, nBlocks, 0, ac)
+    for (cid <- 2 to 3) { w.sos1(cid, 0x11, 1, 63, 0x00); zeroBand(w, nBlocks, 0, eobRuns2) }
+    w.sos3(0x10, 0, 0, 0x10)
+    colorDcPass(w, id, 1, 1, bw, bh, bw, bh, 0, DcRefine)
+    w.sos1(1, 0x00, 1, 63, 0x10)
+    acRefineScan(w, nBlocks, 0, ac)
+    w.finish()
   }
 
   /** PROGRESSIVE 4:2:0 COLOR JPEG — the pixel-identical progressive TWIN
@@ -1101,131 +848,7 @@ object MediaSynth {
     * whenever w or h is not a 16-multiple), and an interleaved DC
     * refinement (dc & 1 raw bits).
     */
-  def jpegColor420Progressive(id: Long): Array[Byte] =
-    jpegColor420Progressive(id, 16 * (1 + id % 2).toInt, 16 * (1 + id % 3).toInt)
-
-  /** [[jpegColor420Progressive]] with explicit dimensions (multiples of 8,
-    * NOT necessarily of 16) — the spec probe for partial-MCU geometry:
-    * when w % 16 == 8 the padded luma grid carries a pad block column the
-    * interleaved DC scan codes (edge-replicated DC) but the
-    * non-interleaved AC scans and emission must skip. Same planted
-    * formulas, luma blocks indexed over the REAL grid.
-    */
-  private[graft] def jpegColor420Progressive(id: Long, w: Int, h: Int): Array[Byte] = {
-    require(w % 8 == 0 && h % 8 == 0, "dims must be block multiples")
-    val mw = (w + 15) / 16 // MCUs across
-    val mh = (h + 15) / 16
-    val lbw = w / 8 // REAL luma block grid
-    val lbh = h / 8
-    def yDc(lbx: Int, lby: Int): Int = {
-      // pad blocks (outside the real grid) replicate the clamped edge
-      // block so the interleaved scan has a value and predictors stay tame
-      val bx = math.min(lbx, lbw - 1)
-      val by = math.min(lby, lbh - 1)
-      ((id + 5L * bx + 11L * by) % 160).toInt - 80
-    }
-    def cbDc(mx: Int, my: Int): Int = ((3L * id + 7L * mx + 13L * my) % 100).toInt - 50
-    def crDc(mx: Int, my: Int): Int = ((5L * id + 3L * mx + 17L * my) % 100).toInt - 50
-    val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def b(xs: Int*): Unit = xs.foreach(x => out += x.toByte)
-    b(0xFF, 0xD8) // SOI
-    b(0xFF, 0xDB, 0, 67, 0x00) // DQT: 8-bit table 0 (luma), Q == 8
-    (0 until 64).foreach(_ => out += 8.toByte)
-    b(0xFF, 0xDB, 0, 67, 0x01) // DQT: 8-bit table 1 (chroma), Q == 8
-    (0 until 64).foreach(_ => out += 8.toByte)
-    // SOF2: 8-bit, Y sampled 2x2 (QT 0), Cb/Cr 1x1 (QT 1) — 4:2:0
-    b(0xFF, 0xC2, 0, 17, 8, h >> 8, h & 0xFF, w >> 8, w & 0xFF, 3,
-      1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1)
-    Seq(0x00, 0x01).foreach { th => // DC tables 0 and 1 (Annex K BITS)
-      b(0xFF, 0xC4, 0, 31, th)
-      (1 to 16).foreach(l => out += jpegDcBits(l).toByte)
-      (0 to 11).foreach(v => out += v.toByte)
-    }
-    // AC table 0 (luma): EOB0..EOB4 on the 1..5-bit ladder (a real-dims Y
-    // grid can hold up to 24 blocks -> one EOBn run needs n up to 4)
-    b(0xFF, 0xC4, 0, 24, 0x10)
-    b(1, 1, 1, 1, 1); (6 to 16).foreach(_ => b(0))
-    b(0x00, 0x10, 0x20, 0x30, 0x40)
-    // AC table 1 (chroma): EOB0 '0', EOB1 '10', EOB2 '110'
-    b(0xFF, 0xC4, 0, 22, 0x11)
-    b(1, 1, 1); (4 to 16).foreach(_ => b(0))
-    b(0x00, 0x10, 0x20)
-    val acCodeY = Array((0, 1), (2, 2), (6, 3), (14, 4), (30, 5)) // EOBn n=0..4
-    val acCodeC = Array((0, 1), (2, 2), (6, 3)) // EOBn n=0..2
-    val dcCode = jpegCodes(jpegDcBits)
-    var cur = 0
-    var nb = 0
-    def putBits(v: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        nb += 1
-        if (nb == 8) {
-          out += cur.toByte
-          if (cur == 0xFF) out += 0x00.toByte // stuff
-          cur = 0
-          nb = 0
-        }
-        i -= 1
-      }
-    }
-    def flushScan(): Unit = if (nb > 0) { // pad with 1-bits (T.81 F.1.2.3)
-      cur = (cur << (8 - nb)) | ((1 << (8 - nb)) - 1)
-      out += cur.toByte
-      if (cur == 0xFF) out += 0x00.toByte
-      cur = 0
-      nb = 0
-    }
-    def putDcDiff(diff: Int): Unit = {
-      val mag = math.abs(diff)
-      val s = 32 - Integer.numberOfLeadingZeros(mag)
-      val (c, cl) = dcCode(s)
-      putBits(c, cl)
-      if (s > 0) putBits(if (diff >= 0) diff else diff + (1 << s) - 1, s)
-    }
-    def putEobRun(run: Int, codes: Array[(Int, Int)]): Unit = if (run > 0) {
-      val nbits = 31 - Integer.numberOfLeadingZeros(run)
-      val (c, l) = codes(nbits)
-      putBits(c, l)
-      if (nbits > 0) putBits(run & ((1 << nbits) - 1), nbits)
-    }
-    // ---- scan 1: DC first, interleaved (four Y units, Cb, Cr), Al = 1 ----
-    b(0xFF, 0xDA, 0, 12, 3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0x01)
-    val pred = new Array[Int](3)
-    for (my <- 0 until mh; mx <- 0 until mw) {
-      for (sy <- 0 until 2; sx <- 0 until 2) {
-        val t = yDc(2 * mx + sx, 2 * my + sy) >> 1
-        putDcDiff(t - pred(0))
-        pred(0) = t
-      }
-      val tcb = cbDc(mx, my) >> 1
-      putDcDiff(tcb - pred(1)); pred(1) = tcb
-      val tcr = crDc(mx, my) >> 1
-      putDcDiff(tcr - pred(2)); pred(2) = tcr
-    }
-    flushScan()
-    // ---- scans 2..4: non-interleaved all-zero AC-first bands (Al = 0),
-    // one EOB run per component over its REAL block grid ----
-    b(0xFF, 0xDA, 0, 8, 1, 1, 0x00, 1, 63, 0x00)
-    putEobRun(lbw * lbh, acCodeY)
-    flushScan()
-    for (cid <- Seq(2, 3)) {
-      b(0xFF, 0xDA, 0, 8, 1, cid, 0x11, 1, 63, 0x00)
-      putEobRun(mw * mh, acCodeC)
-      flushScan()
-    }
-    // ---- scan 5: DC refinement, interleaved, Ah = 1, Al = 0 ----
-    b(0xFF, 0xDA, 0, 12, 3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0x10)
-    for (my <- 0 until mh; mx <- 0 until mw) {
-      for (sy <- 0 until 2; sx <- 0 until 2)
-        putBits(yDc(2 * mx + sx, 2 * my + sy) & 1, 1)
-      putBits(cbDc(mx, my) & 1, 1)
-      putBits(crDc(mx, my) & 1, 1)
-    }
-    flushScan()
-    b(0xFF, 0xD9) // EOI
-    out.toArray
-  }
+  def jpegColor420Progressive(id: Long): Array[Byte] = jpegColorSampledProgressive(id, 2, 2, 0)
 
   /** GENERALIZED-SAMPLING DC-exact color baseline JPEG (round 17 — the
     * 4:2:2 / 4:4:0 envelope remainder): Y sampled hs×vs (hs, vs ∈ {1,2}),
@@ -1236,104 +859,19 @@ object MediaSynth {
     * crDc = ((5id + 3mx + 17my) % 100) − 50 — so one oracle family covers
     * every geometry; dims w = 8·hs·(1+id%2), h = 8·vs·(1+id%3).
     */
-  def jpegColorSampled(id: Long, hs: Int, vs: Int,
-      ri: Int): Array[Byte] = {
-    val mw = (1 + id % 2).toInt // MCUs across
-    val mh = (1 + id % 3).toInt // MCUs down
-    val w = mw * 8 * hs
-    val h = mh * 8 * vs
-    def yDc(lbx: Int, lby: Int): Int = ((id + 5L * lbx + 11L * lby) % 160).toInt - 80
-    def cbDc(mx: Int, my: Int): Int = ((3L * id + 7L * mx + 13L * my) % 100).toInt - 50
-    def crDc(mx: Int, my: Int): Int = ((5L * id + 3L * mx + 17L * my) % 100).toInt - 50
-    val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def b(xs: Int*): Unit = xs.foreach(x => out += x.toByte)
-    b(0xFF, 0xD8) // SOI
-    b(0xFF, 0xDB, 0, 67, 0x00) // DQT: 8-bit table 0 (luma), Q == 8
-    (0 until 64).foreach(_ => out += 8.toByte)
-    b(0xFF, 0xDB, 0, 67, 0x01) // DQT: 8-bit table 1 (chroma), Q == 8
-    (0 until 64).foreach(_ => out += 8.toByte)
-    // SOF0: 8-bit, Y sampled hs×vs (QT 0), Cb/Cr 1x1 (QT 1)
-    b(0xFF, 0xC0, 0, 17, 8, h >> 8, h & 0xFF, w >> 8, w & 0xFF, 3,
-      1, (hs << 4) | vs, 0, 2, 0x11, 1, 3, 0x11, 1)
-    Seq(0x00, 0x01).foreach { th => // DC tables 0 and 1 (Annex K BITS)
-      b(0xFF, 0xC4, 0, 31, th)
-      (1 to 16).foreach(l => out += jpegDcBits(l).toByte)
-      (0 to 11).foreach(v => out += v.toByte)
-    }
-    Seq(0x10, 0x11).foreach { tcth => // AC tables 0 and 1: one EOB code
-      b(0xFF, 0xC4, 0, 20, tcth)
-      b(1); (2 to 16).foreach(_ => b(0))
-      b(0x00)
-    }
-    if (ri > 0) b(0xFF, 0xDD, 0, 4, ri >> 8, ri & 0xFF) // DRI
-    // SOS: Y -> (DC0, AC0), Cb/Cr -> (DC1, AC1)
-    b(0xFF, 0xDA, 0, 12, 3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0)
-    val dcCode = jpegCodes(jpegDcBits)
-    var cur = 0
-    var nb = 0
-    def putBits(v: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        nb += 1
-        if (nb == 8) {
-          out += cur.toByte
-          if (cur == 0xFF) out += 0x00.toByte // stuff
-          cur = 0
-          nb = 0
-        }
-        i -= 1
-      }
-    }
-    def byteAlign(): Unit = if (nb > 0) { // pad with 1-bits (T.81 F.1.2.3)
-      cur = (cur << (8 - nb)) | ((1 << (8 - nb)) - 1)
-      out += cur.toByte
-      if (cur == 0xFF) out += 0x00.toByte
-      cur = 0
-      nb = 0
-    }
-    val pred = new Array[Int](3)
-    def putDc(comp: Int, dc: Int): Unit = {
-      val diff = dc - pred(comp)
-      pred(comp) = dc
-      val mag = math.abs(diff)
-      val s = 32 - Integer.numberOfLeadingZeros(mag)
-      val (c, cl) = dcCode(s)
-      putBits(c, cl)
-      if (s > 0) putBits(if (diff >= 0) diff else diff + (1 << s) - 1, s)
-      putBits(0, 1) // EOB
-    }
-    var mcu = 0
-    var my = 0
-    while (my < mh) {
-      var mx = 0
-      while (mx < mw) {
-        if (ri > 0 && mcu > 0 && mcu % ri == 0) {
-          // restart: byte-align, RSTm (cycling 0..7), ALL predictors reset
-          byteAlign()
-          b(0xFF, 0xD0 + ((mcu / ri - 1) % 8))
-          java.util.Arrays.fill(pred, 0)
-        }
-        // Y units: left-to-right then top-to-bottom inside the MCU
-        var sy = 0
-        while (sy < vs) {
-          var sx = 0
-          while (sx < hs) {
-            putDc(0, yDc(hs * mx + sx, vs * my + sy))
-            sx += 1
-          }
-          sy += 1
-        }
-        putDc(1, cbDc(mx, my))
-        putDc(2, crDc(mx, my))
-        mcu += 1
-        mx += 1
-      }
-      my += 1
-    }
-    byteAlign()
-    b(0xFF, 0xD9) // EOI
-    out.toArray
+  def jpegColorSampled(id: Long, hs: Int, vs: Int, ri: Int): Array[Byte] =
+    jpegColorSampled(id, hs, vs, ri, (1 + id % 2).toInt, (1 + id % 3).toInt)
+
+  /** [[jpegColorSampled]] on an explicit grid of mw×mh MCUs. */
+  private def jpegColorSampled(id: Long, hs: Int, vs: Int, ri: Int,
+      mw: Int, mh: Int): Array[Byte] = {
+    val w = new JpegWriter
+    w.soi(); w.dqt(0); w.dqt(1); w.sof(0xC0, 8 * hs * mw, 8 * vs * mh, 3, (hs << 4) | vs)
+    w.dhtDc(0x00); w.dhtDc(0x01); w.dhtAc(0x10, acEobOnly); w.dhtAc(0x11, acEobOnly)
+    if (ri > 0) w.dri(ri)
+    w.sos3(0x11, 0, 63, 0)
+    colorDcPass(w, id, hs, vs, mw, mh, hs * mw, vs * mh, ri, DcBaseline)
+    w.finish()
   }
 
   /** Progressive (SOF2) pixel-identical twin of [[jpegColorSampled]] —
@@ -1344,140 +882,41 @@ object MediaSynth {
     * SEGMENTED at restart boundaries — T.81 forbids a run crossing one),
     * interleaved DC refinement. Restart markers byte-align and cycle
     * 0..7 independently per scan; interleaved scans count the interval in
-    * MCUs, non-interleaved in the component's real blocks.
+    * MCUs, non-interleaved in the component's real blocks. Huffman
+    * tables: Annex K DC BITS ×2; AC0 = EOB0..EOB4 on the 1..5-bit ladder
+    * (a Y grid holds up to 24 blocks, so one run needs EOB4); AC1 =
+    * EOB0..EOB2.
     */
-  def jpegColorSampledProgressive(id: Long, hs: Int, vs: Int,
-      ri: Int): Array[Byte] = {
-    val mw = (1 + id % 2).toInt
-    val mh = (1 + id % 3).toInt
-    val w = mw * 8 * hs
-    val h = mh * 8 * vs
-    val lbw = w / 8 // REAL luma block grid (dims are MCU multiples here)
-    val lbh = h / 8
-    def yDc(lbx: Int, lby: Int): Int = ((id + 5L * lbx + 11L * lby) % 160).toInt - 80
-    def cbDc(mx: Int, my: Int): Int = ((3L * id + 7L * mx + 13L * my) % 100).toInt - 50
-    def crDc(mx: Int, my: Int): Int = ((5L * id + 3L * mx + 17L * my) % 100).toInt - 50
-    val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def b(xs: Int*): Unit = xs.foreach(x => out += x.toByte)
-    b(0xFF, 0xD8) // SOI
-    b(0xFF, 0xDB, 0, 67, 0x00)
-    (0 until 64).foreach(_ => out += 8.toByte)
-    b(0xFF, 0xDB, 0, 67, 0x01)
-    (0 until 64).foreach(_ => out += 8.toByte)
-    b(0xFF, 0xC2, 0, 17, 8, h >> 8, h & 0xFF, w >> 8, w & 0xFF, 3,
-      1, (hs << 4) | vs, 0, 2, 0x11, 1, 3, 0x11, 1)
-    Seq(0x00, 0x01).foreach { th => // DC tables 0 and 1 (Annex K BITS)
-      b(0xFF, 0xC4, 0, 31, th)
-      (1 to 16).foreach(l => out += jpegDcBits(l).toByte)
-      (0 to 11).foreach(v => out += v.toByte)
-    }
-    // AC table 0 (luma): EOB0..EOB4 on the 1..5-bit ladder; AC table 1
-    // (chroma): EOB0..EOB2 — as [[jpegColor420Progressive]]
-    b(0xFF, 0xC4, 0, 24, 0x10)
-    b(1, 1, 1, 1, 1); (6 to 16).foreach(_ => b(0))
-    b(0x00, 0x10, 0x20, 0x30, 0x40)
-    b(0xFF, 0xC4, 0, 22, 0x11)
-    b(1, 1, 1); (4 to 16).foreach(_ => b(0))
-    b(0x00, 0x10, 0x20)
-    val acCodeY = Array((0, 1), (2, 2), (6, 3), (14, 4), (30, 5)) // EOBn n=0..4
-    val acCodeC = Array((0, 1), (2, 2), (6, 3)) // EOBn n=0..2
-    val dcCode = jpegCodes(jpegDcBits)
-    if (ri > 0) b(0xFF, 0xDD, 0, 4, ri >> 8, ri & 0xFF) // DRI
-    var cur = 0
-    var nb = 0
-    def putBits(v: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >> i) & 1)
-        nb += 1
-        if (nb == 8) {
-          out += cur.toByte
-          if (cur == 0xFF) out += 0x00.toByte // stuff
-          cur = 0
-          nb = 0
-        }
-        i -= 1
-      }
-    }
-    def flushScan(): Unit = if (nb > 0) { // pad with 1-bits (T.81 F.1.2.3)
-      cur = (cur << (8 - nb)) | ((1 << (8 - nb)) - 1)
-      out += cur.toByte
-      if (cur == 0xFF) out += 0x00.toByte
-      cur = 0
-      nb = 0
-    }
-    def putRst(unit: Int): Unit = { // byte-align + RSTm cycling per scan
-      flushScan()
-      b(0xFF, 0xD0 + ((unit / ri - 1) % 8))
-    }
-    def putDcDiff(diff: Int): Unit = {
-      val mag = math.abs(diff)
-      val s = 32 - Integer.numberOfLeadingZeros(mag)
-      val (c, cl) = dcCode(s)
-      putBits(c, cl)
-      if (s > 0) putBits(if (diff >= 0) diff else diff + (1 << s) - 1, s)
-    }
-    def putEobRun(run: Int, codes: Array[(Int, Int)]): Unit = if (run > 0) {
-      val nbits = 31 - Integer.numberOfLeadingZeros(run)
-      val (c, l) = codes(nbits)
-      putBits(c, l)
-      if (nbits > 0) putBits(run & ((1 << nbits) - 1), nbits)
-    }
-    // an all-zero AC band over n blocks as restart-segmented EOB runs
-    def putZeroBand(n: Int, codes: Array[(Int, Int)]): Unit =
-      if (ri <= 0) { putEobRun(n, codes); flushScan() }
-      else {
-        var done = 0
-        while (done < n) {
-          if (done > 0) putRst(done)
-          val seg = math.min(ri, n - done)
-          putEobRun(seg, codes)
-          done += seg
-        }
-        flushScan()
-      }
-    // ---- scan 1: DC first, interleaved (Y units, Cb, Cr), Al = 1 ----
-    b(0xFF, 0xDA, 0, 12, 3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0x01)
-    val pred = new Array[Int](3)
-    var mcu = 0
-    for (my <- 0 until mh; mx <- 0 until mw) {
-      if (ri > 0 && mcu > 0 && mcu % ri == 0) {
-        putRst(mcu)
-        java.util.Arrays.fill(pred, 0)
-      }
-      for (sy <- 0 until vs; sx <- 0 until hs) {
-        val t = yDc(hs * mx + sx, vs * my + sy) >> 1
-        putDcDiff(t - pred(0))
-        pred(0) = t
-      }
-      val tcb = cbDc(mx, my) >> 1
-      putDcDiff(tcb - pred(1)); pred(1) = tcb
-      val tcr = crDc(mx, my) >> 1
-      putDcDiff(tcr - pred(2)); pred(2) = tcr
-      mcu += 1
-    }
-    flushScan()
-    // ---- scans 2..4: non-interleaved all-zero AC-first bands (Al = 0) ----
-    b(0xFF, 0xDA, 0, 8, 1, 1, 0x00, 1, 63, 0x00)
-    putZeroBand(lbw * lbh, acCodeY)
-    for (cid <- Seq(2, 3)) {
-      b(0xFF, 0xDA, 0, 8, 1, cid, 0x11, 1, 63, 0x00)
-      putZeroBand(mw * mh, acCodeC)
-    }
-    // ---- scan 5: DC refinement, interleaved, Ah = 1, Al = 0 ----
-    b(0xFF, 0xDA, 0, 12, 3, 1, 0x00, 2, 0x10, 3, 0x10, 0, 0, 0x10)
-    mcu = 0
-    for (my <- 0 until mh; mx <- 0 until mw) {
-      if (ri > 0 && mcu > 0 && mcu % ri == 0) putRst(mcu)
-      for (sy <- 0 until vs; sx <- 0 until hs)
-        putBits(yDc(hs * mx + sx, vs * my + sy) & 1, 1)
-      putBits(cbDc(mx, my) & 1, 1)
-      putBits(crDc(mx, my) & 1, 1)
-      mcu += 1
-    }
-    flushScan()
-    b(0xFF, 0xD9) // EOI
-    out.toArray
+  def jpegColorSampledProgressive(id: Long, hs: Int, vs: Int, ri: Int): Array[Byte] =
+    jpegColorSampledProgressive(id, hs, vs, ri,
+      8 * hs * (1 + id % 2).toInt, 8 * vs * (1 + id % 3).toInt)
+
+  /** [[jpegColorSampledProgressive]] with explicit dimensions (multiples
+    * of 8, NOT necessarily of the MCU) — the spec probe for partial-MCU
+    * geometry: when w or h stops inside an MCU, the padded luma grid
+    * carries pad blocks the interleaved DC scans code (edge-replicated
+    * DC) but the non-interleaved AC scans and emission skip. Same planted
+    * formulas, luma blocks indexed over the REAL grid.
+    */
+  private[graft] def jpegColorSampledProgressive(id: Long, hs: Int, vs: Int, ri: Int,
+      width: Int, height: Int): Array[Byte] = {
+    require(width % 8 == 0 && height % 8 == 0, "dims must be block multiples")
+    val mw = (width + 8 * hs - 1) / (8 * hs) // MCUs across
+    val mh = (height + 8 * vs - 1) / (8 * vs)
+    val lbw = width / 8 // REAL luma block grid
+    val lbh = height / 8
+    val w = new JpegWriter
+    w.soi(); w.dqt(0); w.dqt(1); w.sof(0xC2, width, height, 3, (hs << 4) | vs)
+    w.dhtDc(0x00); w.dhtDc(0x01); w.dhtAc(0x10, eobRuns4); w.dhtAc(0x11, eobRuns2)
+    if (ri > 0) w.dri(ri)
+    w.sos3(0x10, 0, 0, 0x01)
+    colorDcPass(w, id, hs, vs, mw, mh, lbw, lbh, ri, DcFirst)
+    w.sos1(1, 0x00, 1, 63, 0x00)
+    zeroBand(w, lbw * lbh, ri, eobRuns4)
+    for (cid <- 2 to 3) { w.sos1(cid, 0x11, 1, 63, 0x00); zeroBand(w, mw * mh, ri, eobRuns2) }
+    w.sos3(0x10, 0, 0, 0x10)
+    colorDcPass(w, id, hs, vs, mw, mh, lbw, lbh, ri, DcRefine)
+    w.finish()
   }
 
   /** 4:2:2 baseline / progressive and 4:4:0 baseline / progressive — the
@@ -1511,21 +950,14 @@ object MediaSynth {
     * w = 8·(1+id%3), h = 8·(1+id%2) (the gray-tier formula).
     */
   def jpegArith(id: Long): Array[Byte] = {
-    val w = 8 * (1 + id % 3).toInt
-    val h = 8 * (1 + id % 2).toInt
-    val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    def b(xs: Int*): Unit = xs.foreach(x => out += x.toByte)
-    b(0xFF, 0xD8) // SOI
-    b(0xFF, 0xDB, 0, 67, 0x00)
-    (0 until 64).foreach(_ => out += 8.toByte)
-    // SOF9: arithmetic sequential, one 8-bit component
-    b(0xFF, 0xC9, 0, 11, 8, h >> 8, h & 0xFF, w >> 8, w & 0xFF, 1, 1, 0x11, 0)
+    val w = new JpegWriter
+    w.soi(); w.dqt(0)
+    w.sof(0xC9, 8 * (1 + id % 3).toInt, 8 * (1 + id % 2).toInt, 1, 0x11)
     // DAC: DC conditioning table 0 (U=1, L=0), T.81 B.2.4.3
-    b(0xFF, 0xCC, 0, 4, 0x00, 0x01)
-    b(0xFF, 0xDA, 0, 8, 1, 1, 0x00, 0, 63, 0)
-    b(0xA5, 0x5A, 0xA5, 0x5A) // token entropy bytes — never decoded
-    b(0xFF, 0xD9) // EOI
-    out.toArray
+    w.byte(0xFF); w.byte(0xCC); w.byte(0); w.byte(4); w.byte(0x00); w.byte(0x01)
+    w.sos1(1, 0x00, 0, 63, 0)
+    w.byte(0xA5); w.byte(0x5A); w.byte(0xA5); w.byte(0x5A) // token entropy bytes — never decoded
+    w.finish()
   }
 
   /** 24-bit uncompressed BMP (bottom-up BGR rows, 4-byte stride padding,
@@ -1668,16 +1100,6 @@ case class JpegColorSynth(child: Expression) extends MediaSynthExpression {
   override def prettyName: String = "graft_jpeg_color_synth"
 }
 
-case class JpegColor420Synth(child: Expression) extends MediaSynthExpression {
-  override def nullSafeEval(id: Any): Any = MediaSynth.jpegColor420(id.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.multimodal.MediaSynth.jpegColor420($c);")
-  override protected def withNewChildInternal(newChild: Expression): JpegColor420Synth =
-    copy(child = newChild)
-  override def prettyName: String = "graft_jpeg_color420_synth"
-}
-
 case class JpegColorProgressiveSynth(child: Expression) extends MediaSynthExpression {
   override def nullSafeEval(id: Any): Any =
     MediaSynth.jpegColorProgressive(id.asInstanceOf[Long])
@@ -1689,24 +1111,15 @@ case class JpegColorProgressiveSynth(child: Expression) extends MediaSynthExpres
   override def prettyName: String = "graft_jpeg_color_progressive_synth"
 }
 
-case class JpegColor420ProgressiveSynth(child: Expression) extends MediaSynthExpression {
-  override def nullSafeEval(id: Any): Any =
-    MediaSynth.jpegColor420Progressive(id.asInstanceOf[Long])
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.multimodal.MediaSynth.jpegColor420Progressive($c);")
-  override protected def withNewChildInternal(newChild: Expression): JpegColor420ProgressiveSynth =
-    copy(child = newChild)
-  override def prettyName: String = "graft_jpeg_color420_progressive_synth"
-}
-
-/** One parameterized expression for the whole round-17 sampled-color
-  * envelope ([[MediaSynth.jpegColorSampled]] baseline /
+/** One parameterized expression for every sampled-color row
+  * ([[MediaSynth.jpegColorSampled]] baseline /
   * [[MediaSynth.jpegColorSampledProgressive]] twin, any (hs, vs), with or
   * without restart framing) — the geometry constants bake into codegen as
-  * literals, so each registered variant stays a static call.
+  * literals, so each registered variant stays a static call. `name` is
+  * the SQL name the row is registered under, shown in plans and column
+  * names.
   */
-case class JpegSampledSynth(child: Expression, hs: Int, vs: Int, ri: Int,
+case class JpegSampledSynth(child: Expression, name: String, hs: Int, vs: Int, ri: Int,
     progressive: Boolean) extends MediaSynthExpression {
   override def nullSafeEval(id: Any): Any =
     if (progressive)
@@ -1719,8 +1132,7 @@ case class JpegSampledSynth(child: Expression, hs: Int, vs: Int, ri: Int,
         s"($c, $hs, $vs, $ri);")
   override protected def withNewChildInternal(newChild: Expression): JpegSampledSynth =
     copy(child = newChild)
-  override def prettyName: String =
-    s"graft_jpeg_color$hs${vs}_${if (progressive) "prog" else "base"}_ri${ri}_synth"
+  override def prettyName: String = name
 }
 
 case class JpegArithSynth(child: Expression) extends MediaSynthExpression {

@@ -385,7 +385,7 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // Same composition as Transform.transform, with the parsed frame
+        // Same composition as AdPipeline's run: the parsed frame stays
         // persisted so the curated and quarantine branches share one scan.
         val parsed = Transform.derive(Transform.flatten(batch)).persist()
         try {

@@ -20,6 +20,19 @@ class ExtensionsSpec extends SparkSpec {
     new graft.GraftExtensions().apply(new SparkSessionExtensions)
   }
 
+  test("every native row builds an expression whose prettyName is its registered name") {
+    // prettyName is what EXPLAIN and generated column names print; the
+    // extra INT literals feed the rows whose builders take scalar config.
+    // The two Bloom rows register Spark's own expressions under graft
+    // names, so only graft classes are held to their identifier.
+    val args = Seq(Literal(1L), Literal(1), Literal(1))
+    val wrong = for {
+      (id, info, build) <- Natives.all if info.getClassName.startsWith("graft.")
+      shown = build(args).prettyName if shown != id.funcName
+    } yield s"${id.funcName} shows as $shown"
+    assert(wrong.isEmpty, wrong.mkString("; "))
+  }
+
   test("builder guards: non-literal / mistyped scalar args fail analysis, not cast") {
     import org.apache.spark.sql.functions.{col, lit}
     import spark.implicits._

@@ -1010,6 +1010,87 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
+  test("JPEG synthesizer bytes: SHA-256 over ids 0 until 4096 per encoder stays pinned") {
+    // the bytes are the contract (query hashes, DuckDB oracles, ImageIO
+    // pins all read them), so any encoder refactor must reproduce these
+    // digests exactly
+    def sha(parts: Iterator[Array[Byte]]): String = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      parts.foreach(p => md.update(p))
+      md.digest().map(b => f"${b & 0xFF}%02x").mkString
+    }
+    val encoders = Seq[(String, Long => Array[Byte])](
+      "jpeg" -> MediaSynth.jpeg,
+      "jpegWithAc" -> (id => MediaSynth.jpeg(id, withAc = true)),
+      "jpegRestart" -> MediaSynth.jpegRestart,
+      "jpegAc" -> MediaSynth.jpegAc,
+      "jpegProgressive" -> MediaSynth.jpegProgressive,
+      "jpegProgressiveRestart" -> MediaSynth.jpegProgressiveRestart,
+      "jpegColor" -> MediaSynth.jpegColor,
+      "jpegColor420" -> MediaSynth.jpegColor420,
+      "jpegColorProgressive" -> MediaSynth.jpegColorProgressive,
+      "jpegColor420Progressive" -> MediaSynth.jpegColor420Progressive,
+      "jpegColor420ProgressiveRestart" -> MediaSynth.jpegColor420ProgressiveRestart,
+      "jpegColor422" -> MediaSynth.jpegColor422,
+      "jpegColor422Restart" -> MediaSynth.jpegColor422Restart,
+      "jpegColor440" -> MediaSynth.jpegColor440,
+      "jpegColor440Restart" -> MediaSynth.jpegColor440Restart,
+      "jpegColor422Progressive" -> MediaSynth.jpegColor422Progressive,
+      "jpegColor440Progressive" -> MediaSynth.jpegColor440Progressive,
+      "jpegColor422ProgressiveRestart" -> (MediaSynth.jpegColorSampledProgressive(_, 2, 1, 2)),
+      "jpegColor440ProgressiveRestart" -> (MediaSynth.jpegColorSampledProgressive(_, 1, 2, 2)),
+      "jpegArith" -> MediaSynth.jpegArith)
+    val got = encoders.map { case (n, f) => n -> sha((0L until 4096L).iterator.map(f)) } :+
+      ("jpegColor420Progressive(11, w, h)" -> sha(Seq((24, 40), (40, 24), (24, 24), (8, 8))
+        .iterator.map { case (w, h) => MediaSynth.jpegColorSampledProgressive(11L, 2, 2, 0, w, h) }))
+    val pinned = Map[String, String](
+      "jpeg" ->
+        "dd692d3ae1021d6cd64353c0f7b2f42b04e0bfcb85bc535cdaa58cce5c7e6b38",
+      "jpegWithAc" ->
+        "bbb96171988d55b733fc45a34dca3254a5a175739f86dcbab9fd1558da81d952",
+      "jpegRestart" ->
+        "af7035be4ee90301f45e6e42f8fc2eab2e3ca8e52448c9ae88e1c13dd1c7fd3f",
+      "jpegAc" ->
+        "1530f3c09799411122205e566bbf15e288c564b16d951ba6800617748ef9f403",
+      "jpegProgressive" ->
+        "b973160a5d8617491bf054f581a8293ed33d6412733c16da6c3037e321f8c00e",
+      "jpegProgressiveRestart" ->
+        "4ae9f9243b6896100b420f0f38298f57ca848828876c65e046c61cd725fb8bb7",
+      "jpegColor" ->
+        "af9253eac5e323b029a1968fd9b2f10e57c433b58a3d75f6de30933d5338fa67",
+      "jpegColor420" ->
+        "9392a5e7b2e02ad32393c34a6cb6c6a8f164dc4ab2fc7d038e8547b33228fe63",
+      "jpegColorProgressive" ->
+        "5b510d87bb3d0d1e666dc397735bb783d0cb1d7d7d02645e999227329cca883d",
+      "jpegColor420Progressive" ->
+        "986c329cef940820f2d2f05f5dd9ac212959a95b874de8341f8e2e19e1d61263",
+      "jpegColor420ProgressiveRestart" ->
+        "094249149d2f6e39055ad7f23462dd3a344c0d80a710c6ddfd52ab0473f499e6",
+      "jpegColor422" ->
+        "79f0806206cbe04ec8893990f9dcefeae8895a70c6de352a240deb9f5bd44f71",
+      "jpegColor422Restart" ->
+        "6bec4b4055b5614d37b2b2d1a230384dc4b5b5eba51779e8049f46acc3f6e974",
+      "jpegColor440" ->
+        "08593c9b0346414396d7a0599641263d145c43b098a8f65b74bb16c47919ef31",
+      "jpegColor440Restart" ->
+        "92bfc8a1b672d089afda3fae250d153706da33b56c57b477e94887ea2178e41b",
+      "jpegColor422Progressive" ->
+        "10e22f541a3286882ac3948f828bf433e4aad03eea6a58e0ed8bf2627259f402",
+      "jpegColor440Progressive" ->
+        "1d13ca137752d60ebabae080a5ee1c194e61b5e7f52bd397943aef77431e5a35",
+      "jpegColor422ProgressiveRestart" ->
+        "ea7fa6c4d27ddab24ffa917049aab7f510d5dfd5e3d6231f85868f74e25a2daf",
+      "jpegColor440ProgressiveRestart" ->
+        "63229149754e3b9344b2ffe38b29ae48146d5246c5e9e7299e02df95b9164c63",
+      "jpegArith" ->
+        "8f3543455b257a2ee3e8920899c75d6f2bd2fce20d034cf7c89dd401987a5561",
+      "jpegColor420Progressive(11, w, h)" ->
+        "40013ecb72a4961c118ad85c8033e79ae1b3a2df977a9868c1e2d0dc5a5d8ef6"
+    )
+    val moved = got.filterNot { case (n, d) => pinned.get(n).contains(d) }
+    assert(moved.isEmpty, s"bytes moved: ${moved.mkString(", ")}")
+  }
+
   test("progressive 4:2:0: pixel-identical twin of the baseline fixture; partial-MCU dims pin ImageIO") {
     // the mixed-table twin: same planted DC fields as jpegColor420, byte-
     // different SOF2 multi-scan framing — every stats field must agree
@@ -1029,7 +1110,7 @@ class MultimodalSpec extends SparkSpec {
     // DC scan codes but the non-interleaved AC scans and emission skip.
     // ImageIO (the real libjpeg walk) is the reference, per pixel.
     for ((w, h) <- Seq((24, 40), (40, 24), (24, 24), (8, 8))) {
-      val payload = MediaSynth.jpegColor420Progressive(11L, w, h)
+      val payload = MediaSynth.jpegColorSampledProgressive(11L, 2, 2, 0, w, h)
       val st = graft.functions.JpegDecode.jpegColor(payload)
       assert(!st.isNullAt(3), s"partial-MCU progressive 4:2:0 ($w x $h) must decode")
       assert(st.getInt(0) === w && st.getInt(1) === h)
