@@ -24,27 +24,15 @@ object MvScaleProbe {
     val Array(work, rowsS) = args.take(2)
     val n = rowsS.toLong
     val spark = graft.util.EngineDefaults.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    // Every timing is warm-cache: the probe leaves host kernel state (the
+    // page cache included) alone, so a table that fits in memory lets the
+    // "full recompute" comparator scan at memory speed and understates the
+    // refresh-vs-rescan asymmetry a corpus larger than memory would show.
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()
       val r = f
-      println(f"[mvprobe] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      println(f"[mvprobe] $label [warm cache]: ${(System.nanoTime() - t0) / 1e9}%.2f s")
       r
-    }
-    // Cold-read discipline: on this host the whole probe table fits in the
-    // page cache, which would let the "full recompute" comparator scan
-    // 14 GB at memory speed and bury the refresh-vs-rescan asymmetry that
-    // IS the measurement. Best-effort (root-only, probe-only); timings
-    // with a warm cache are labeled as such.
-    def dropCaches(): Boolean =
-      try {
-        Runtime.getRuntime.exec(Array("sync")).waitFor()
-        val w = new java.io.FileWriter("/proc/sys/vm/drop_caches")
-        w.write("3"); w.close()
-        true
-      } catch { case _: Throwable => false }
-    def cold[A](label: String)(f: => A): A = {
-      val dropped = dropCaches()
-      t(label + (if (dropped) " [cold]" else " [WARM cache]"))(f)
     }
     val src = s"$work/src"
     val view = s"$work/view"
@@ -83,10 +71,10 @@ object MvScaleProbe {
         targetPartitions = 64, clusterBy = Seq("grp"))
     }
     println(f"[mvprobe] table bytes: ${tableBytes(src) / 1e6}%.0f MB")
-    cold("ledger view CREATE  = the full recompute") {
+    t("ledger view CREATE  = the full recompute") {
       IncrementalView.create(spark, src, view, Seq("grp"), sumCols)
     }
-    cold("extrema view CREATE = the full recompute") {
+    t("extrema view CREATE = the full recompute") {
       IncrementalView.create(spark, src, viewX, Seq("grp"), Nil,
         minCols = Seq("v"), maxCols = Seq("v"))
     }
@@ -99,10 +87,10 @@ object MvScaleProbe {
       hi += delta
       println(f"[mvprobe]   feed bytes for this delta: " +
         f"${feedBytes(src, v0, SnapshotTable.latestVersion(src)) / 1e6}%.1f MB")
-      cold(s"ledger REFRESH  delta=$delta") {
+      t(s"ledger REFRESH  delta=$delta") {
         IncrementalView.refresh(spark, src, view, Seq("grp"), sumCols)
       }
-      cold(s"extrema REFRESH delta=$delta (inserts only, no ties)") {
+      t(s"extrema REFRESH delta=$delta (inserts only, no ties)") {
         IncrementalView.refresh(spark, src, viewX, Seq("grp"), Nil,
           minCols = Seq("v"), maxCols = Seq("v"))
       }
@@ -124,15 +112,15 @@ object MvScaleProbe {
     }
     println(f"[mvprobe]   feed bytes for the tombstone delta: " +
       f"${feedBytes(src, vt, SnapshotTable.latestVersion(src)) / 1e6}%.1f MB")
-    cold("extrema REFRESH with ties (zone-map-pruned recompute)") {
+    t("extrema REFRESH with ties (zone-map-pruned recompute)") {
       IncrementalView.refresh(spark, src, viewX, Seq("grp"), Nil,
         minCols = Seq("v"), maxCols = Seq("v"))
     }
-    cold("comparator: extrema view FULL recompute at latest") {
+    t("comparator: extrema view FULL recompute at latest") {
       IncrementalView.create(spark, src, s"$work/viewx_full", Seq("grp"), Nil,
         minCols = Seq("v"), maxCols = Seq("v"))
     }
-    cold("comparator: ledger view FULL recompute at latest") {
+    t("comparator: ledger view FULL recompute at latest") {
       IncrementalView.create(spark, src, s"$work/view_full", Seq("grp"), sumCols)
     }
     spark.stop()

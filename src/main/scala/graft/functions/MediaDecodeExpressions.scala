@@ -549,10 +549,8 @@ object MediaDecode {
       return embedPng(p)
     if (p.length >= 44 && ascii(p, 0, "RIFF")) return embedWav(p)
     if (p.length >= 3 && (p(0) & 0xFF) == 0xFF && (p(1) & 0xFF) == 0xD8) {
-      // JPEG via the T.81 kernels' grid folds — grayscale baseline AND
-      // progressive (SOF2) through the shared gray driver, color 4:4:4 /
-      // 4:2:0 through the RGB fold over libjpeg-exact converted pixels;
-      // color-progressive returns null (honest routing, as the decoders)
+      // JPEG via the T.81 decode driver's grid folds: every gray and colour
+      // tier, baseline and progressive, null where the decoders null
       val g = JpegDecode.embed(p)
       if (g == null) return null
       return new org.apache.spark.sql.catalyst.util.GenericArrayData(g)

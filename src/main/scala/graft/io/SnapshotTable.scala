@@ -712,14 +712,6 @@ object SnapshotTable {
     }).reduce(_ bitwiseOR _)
   }
 
-  /** Zone-map-pruned range scan: read only the files whose [min, max] for
-    * `column` intersects [lower, upper], with the exact filter re-applied
-    * on top (pruning is an optimization, never a semantics change). Files
-    * without a recorded range are read — conservative for pre-stats
-    * commits and all-null files. This is the manifest-level skip that
-    * turns a selective range query over a sorted-ish 100 TB table into a
-    * few file reads, BEFORE parquet's own row-group pruning sees anything.
-    */
   /** Change feed between two committed versions, at the table's
     * copy-on-write FILE granularity: rows in files the target manifest
     * gained read as `_change_type = 'insert'`, rows in files it dropped as
@@ -751,29 +743,44 @@ object SnapshotTable {
     else parts.reduce(_.unionByName(_, allowMissingColumns = true))
   }
 
-  def readRange(spark: SparkSession, dir: String, column: String,
-      lower: Double, upper: Double, version: Option[Int] = None): DataFrame = {
+  /** The pruned-read frame shared by the zone-map scans: the snapshot at
+    * `version`, required to carry zone maps for every `columns` entry,
+    * read over the files `keep` admits. When it admits none, the read
+    * still takes its schema from the manifest's files, at zero rows.
+    */
+  private def prunedRead(spark: SparkSession, dir: String, version: Option[Int],
+      columns: Seq[String])(keep: (Snapshot, String) => Boolean): DataFrame = {
     val snap = snapshot(spark, dir, version)
-    require(snap.statsCols.contains(column),
-      s"no zone maps for column '$column' (statsCols=${snap.statsCols.mkString(",")})")
-    val keep = snap.files.filter { f =>
-      snap.stats.get(f).flatMap(_.get(column)) match {
-        // NaN guard: a NaN bound (manifest written before computeStats
-        // filtered them, or a corrupted entry) must read as "can't prune",
-        // never "skip" — NaN comparisons are all-false, which without this
-        // guard would silently drop a file holding in-range rows
-        case Some((mn, mx)) if mn.isNaN || mx.isNaN => true
-        case Some((mn, mx)) => mx >= lower && mn <= upper
-        case None => true
-      }
-    }
-    val df =
-      if (keep.isEmpty)
-        // schema from an arbitrary manifest file, zero rows
-        readFiles(spark, dir, snap.files, snap.schemaDdl).limit(0)
-      else readFiles(spark, dir, keep, snap.schemaDdl)
-    df.filter(col(column).cast(DoubleType).between(lower, upper))
+    columns.foreach(c => require(snap.statsCols.contains(c),
+      s"no zone maps for column '$c' (statsCols=${snap.statsCols.mkString(",")})"))
+    val kept = snap.files.filter(keep(snap, _))
+    if (kept.isEmpty) readFiles(spark, dir, snap.files, snap.schemaDdl).limit(0)
+    else readFiles(spark, dir, kept, snap.schemaDdl)
   }
+
+  /** File `f`'s [min, max] for `column`, or None where the zone map cannot
+    * prune: no recorded range, or a NaN bound. NaN guard: a NaN bound
+    * (manifest written before computeStats filtered them, or a corrupted
+    * entry) must read as "can't prune", never "skip" — NaN comparisons are
+    * all-false, which without this guard would silently drop a file
+    * holding matching rows.
+    */
+  private def zone(snap: Snapshot, f: String, column: String): Option[(Double, Double)] =
+    snap.stats.get(f).flatMap(_.get(column)).filterNot { case (mn, mx) => mn.isNaN || mx.isNaN }
+
+  /** Zone-map-pruned range scan: read only the files whose [min, max] for
+    * `column` intersects [lower, upper], with the exact filter re-applied
+    * on top (pruning is an optimization, never a semantics change). Files
+    * without a recorded range are read — conservative for pre-stats
+    * commits and all-null files. This is the manifest-level skip that
+    * turns a selective range query over a sorted-ish 100 TB table into a
+    * few file reads, BEFORE parquet's own row-group pruning sees anything.
+    */
+  def readRange(spark: SparkSession, dir: String, column: String,
+      lower: Double, upper: Double, version: Option[Int] = None): DataFrame =
+    prunedRead(spark, dir, version, Seq(column)) { (snap, f) =>
+      zone(snap, f, column).forall { case (mn, mx) => mx >= lower && mn <= upper }
+    }.filter(col(column).cast(DoubleType).between(lower, upper))
 
   /** Zone-map-pruned POINT-SET scan: rows whose `column` equals one of
     * `values`, reading only files whose [min, max] brackets at least one
@@ -788,26 +795,15 @@ object SnapshotTable {
     */
   def readPoints(spark: SparkSession, dir: String, column: String,
       values: Seq[Double], version: Option[Int] = None): DataFrame = {
-    val snap = snapshot(spark, dir, version)
-    require(snap.statsCols.contains(column),
-      s"no zone maps for column '$column' (statsCols=${snap.statsCols.mkString(",")})")
     val sorted = values.distinct.sorted.toArray
     def anyIn(mn: Double, mx: Double): Boolean = {
       val i = java.util.Arrays.binarySearch(sorted, mn)
       val idx = if (i >= 0) i else -i - 1
       idx < sorted.length && sorted(idx) <= mx
     }
-    val keep = snap.files.filter { f =>
-      snap.stats.get(f).flatMap(_.get(column)) match {
-        case Some((mn, mx)) if mn.isNaN || mx.isNaN => true
-        case Some((mn, mx)) => anyIn(mn, mx)
-        case None => true
-      }
-    }
-    val df =
-      if (keep.isEmpty) readFiles(spark, dir, snap.files, snap.schemaDdl).limit(0)
-      else readFiles(spark, dir, keep, snap.schemaDdl)
-    df.filter(col(column).cast(DoubleType).isin(values: _*))
+    prunedRead(spark, dir, version, Seq(column)) { (snap, f) =>
+      zone(snap, f, column).forall { case (mn, mx) => anyIn(mn, mx) }
+    }.filter(col(column).cast(DoubleType).isin(values: _*))
   }
 
   /** COMPOSITE typed point-set scan — the multi-column/string-key
@@ -830,9 +826,6 @@ object SnapshotTable {
     require(columns.nonEmpty, "readTuples needs at least one key column")
     require(tuples.forall(_.size == columns.size),
       s"every tuple must have ${columns.size} values")
-    val snap = snapshot(spark, dir, version)
-    columns.foreach(c => require(snap.statsCols.contains(c),
-      s"no zone maps for column '$c' (statsCols=${snap.statsCols.mkString(",")})"))
     // UTF8String's binary order: unsigned comparison of the UTF-8 bytes.
     // (UTF-8 sorts by code point, so this also equals code-point order —
     // but NOT java.lang.String order, which compares UTF-16 code units.)
@@ -860,14 +853,10 @@ object SnapshotTable {
       }
       true
     }
-    def fits(f: String, c: String, v: Any): Boolean = v match {
+    def fits(snap: Snapshot, f: String, c: String, v: Any): Boolean = v match {
       case n: java.lang.Number =>
-        snap.stats.get(f).flatMap(_.get(c)) match {
-          case Some((mn, mx)) if mn.isNaN || mx.isNaN => true
-          case Some((mn, mx)) =>
-            val d = n.doubleValue(); d >= mn && d <= mx
-          case None => true
-        }
+        val d = n.doubleValue()
+        zone(snap, f, c).forall { case (mn, mx) => d >= mn && d <= mx }
       case s: String =>
         snap.strStats.get(f).flatMap(_.get(c)) match {
           case Some((mn, mx)) =>
@@ -880,13 +869,10 @@ object SnapshotTable {
     // cheap per-column necessary condition first (any value fits), then the
     // exact per-tuple conjunction only for files that survive it — keeps
     // the driver-side loop O(files · columns) on the common clustered case
-    val keep = snap.files.filter { f =>
-      columns.indices.forall(i => tuples.exists(t => fits(f, columns(i), t(i)))) &&
-        tuples.exists(t => columns.indices.forall(i => fits(f, columns(i), t(i))))
+    val df = prunedRead(spark, dir, version, columns) { (snap, f) =>
+      columns.indices.forall(i => tuples.exists(t => fits(snap, f, columns(i), t(i)))) &&
+        tuples.exists(t => columns.indices.forall(i => fits(snap, f, columns(i), t(i))))
     }
-    val df =
-      if (keep.isEmpty) readFiles(spark, dir, snap.files, snap.schemaDdl).limit(0)
-      else readFiles(spark, dir, keep, snap.schemaDdl)
     val key = struct(columns.map(col): _*)
     // literal struct fields are NAMED after the key columns: IN requires
     // operand struct types to match field-for-field, names included
@@ -907,23 +893,11 @@ object SnapshotTable {
       bounds: Seq[(String, Double, Double)],
       version: Option[Int] = None): DataFrame = {
     require(bounds.nonEmpty, "readBox needs at least one (column, lo, hi)")
-    val snap = snapshot(spark, dir, version)
-    bounds.foreach { case (c, _, _) =>
-      require(snap.statsCols.contains(c),
-        s"no zone maps for column '$c' (statsCols=${snap.statsCols.mkString(",")})")
-    }
-    val keep = snap.files.filter { f =>
+    val df = prunedRead(spark, dir, version, bounds.map(_._1)) { (snap, f) =>
       bounds.forall { case (c, lo, hi) =>
-        snap.stats.get(f).flatMap(_.get(c)) match {
-          case Some((mn, mx)) if mn.isNaN || mx.isNaN => true
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None => true
-        }
+        zone(snap, f, c).forall { case (mn, mx) => mx >= lo && mn <= hi }
       }
     }
-    val df =
-      if (keep.isEmpty) readFiles(spark, dir, snap.files, snap.schemaDdl).limit(0)
-      else readFiles(spark, dir, keep, snap.schemaDdl)
     bounds.foldLeft(df) { case (d, (c, lo, hi)) =>
       d.filter(col(c).cast(DoubleType).between(lo, hi))
     }

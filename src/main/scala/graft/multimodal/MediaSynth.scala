@@ -114,6 +114,39 @@ object MediaSynth {
   private val encDistExtra = Array(0, 0, 0, 0, 1, 1, 2, 2, 3, 3, 4, 4, 5, 5,
     6, 6, 7, 7, 8, 8, 9, 9, 10, 10, 11, 11, 12, 12, 13, 13)
 
+  /** The LSB-first bit packer RFC 1951 streams need: whole codes and
+    * fields go into an `Int` accumulator that flushes full bytes to a
+    * growable array.
+    */
+  private final class DeflateWriter {
+    private var buf = new Array[Byte](256)
+    private var n = 0
+    private var acc = 0 // pending bits: the low `nb` bits
+    private var nb = 0
+
+    /** A `len`-bit field, least significant bit first (len ≤ 16). */
+    def field(v: Int, len: Int): Unit = {
+      acc |= (v & ((1 << len) - 1)) << nb
+      nb += len
+      while (nb >= 8) {
+        if (n == buf.length) buf = java.util.Arrays.copyOf(buf, n * 2)
+        buf(n) = acc.toByte
+        n += 1
+        acc >>>= 8
+        nb -= 8
+      }
+    }
+
+    /** A Huffman code, most significant bit of the code first. */
+    def code(c: Int, len: Int): Unit = field(Integer.reverse(c) >>> (32 - len), len)
+
+    /** The stream, its last partial byte zero-padded. */
+    def finish(): Array[Byte] = {
+      if (nb > 0) field(0, 8 - nb)
+      java.util.Arrays.copyOf(buf, n)
+    }
+  }
+
   /** One fixed-Huffman deflate block (BFINAL=1, BTYPE=01) over `raw`,
     * written per RFC 1951 bit packing: fields fill bytes LSB-first,
     * Huffman codes emit MSB-of-code-first, extra-bit fields are plain
@@ -124,37 +157,22 @@ object MediaSynth {
     * and distance-extra decode paths, not just literals.
     */
   private[graft] def fixedDeflate(raw: Array[Byte], rowBytes: Int): Array[Byte] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Byte]
-    var cur = 0
-    var nb = 0
-    def putBit(v: Int): Unit = {
-      cur |= (v & 1) << nb
-      nb += 1
-      if (nb == 8) { out += cur.toByte; cur = 0; nb = 0 }
-    }
-    def putCode(code: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) { putBit((code >> i) & 1); i -= 1 }
-    }
-    def putField(v: Int, len: Int): Unit = {
-      var i = 0
-      while (i < len) { putBit((v >> i) & 1); i += 1 }
-    }
+    val out = new DeflateWriter
     def putLit(v: Int): Unit =
-      if (v < 144) putCode(0x30 + v, 8) else putCode(0x190 + (v - 144), 9)
+      if (v < 144) out.code(0x30 + v, 8) else out.code(0x190 + (v - 144), 9)
     def putMatch(len: Int, dist: Int): Unit = {
       var li = encLenBase.length - 1
       while (encLenBase(li) > len) li -= 1
       val sym = 257 + li
-      if (sym <= 279) putCode(sym - 256, 7) else putCode(0xC0 + (sym - 280), 8)
-      putField(len - encLenBase(li), encLenExtra(li))
+      if (sym <= 279) out.code(sym - 256, 7) else out.code(0xC0 + (sym - 280), 8)
+      out.field(len - encLenBase(li), encLenExtra(li))
       var di = encDistBase.length - 1
       while (encDistBase(di) > dist) di -= 1
-      putCode(di, 5)
-      putField(dist - encDistBase(di), encDistExtra(di))
+      out.code(di, 5)
+      out.field(dist - encDistBase(di), encDistExtra(di))
     }
-    putBit(1) // BFINAL
-    putField(1, 2) // BTYPE=01
+    out.field(1, 1) // BFINAL
+    out.field(1, 2) // BTYPE=01
     val h = raw.length / rowBytes
     var y = 0
     while (y < h) {
@@ -165,9 +183,8 @@ object MediaSynth {
       }
       y += 1
     }
-    putCode(0, 7) // end-of-block (symbol 256)
-    if (nb > 0) out += cur.toByte
-    out.toArray
+    out.code(0, 7) // end-of-block (symbol 256)
+    out.finish()
   }
 
   /** Fixed-Huffman truecolor PNG — the BTYPE=01 sibling of [[png]]: same

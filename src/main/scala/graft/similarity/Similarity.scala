@@ -921,30 +921,24 @@ object Similarity {
     * per-stage shuffles exhausted the probe host's disk. A driver-side GC
     * nudge after each boundary keeps peak disk at the largest single
     * stage; on a cluster the same call is a no-op-scale driver pause.
-    * Gated (round-13 advice): set `spark.graft.releaseShuffles.gc=false`
-    * to disable, and note that under `-XX:+DisableExplicitGC` the call is
-    * silently a no-op — then rely on a short
-    * `spark.cleaner.periodicGC.interval` instead.
+    * Under `-XX:+DisableExplicitGC` the call is silently a no-op — then
+    * rely on a short `spark.cleaner.periodicGC.interval` instead.
+    *
+    * The nudge fires only when the corpus is big enough for dead shuffle
+    * files to threaten scratch capacity (r18): each System.gc() is a full
+    * driver stop-the-world pause (measured 100-300 ms on the 8 GB bench
+    * heap, 2-3 per assignment = most of q_dedup_semantic_coded's driver
+    * gap), and below cores x maxPartitionBytes the stage shuffles it would
+    * free are a few MB — the probes it protects (20M+ vectors, SCALEPROBE
+    * r12/r16) sit orders of magnitude past that boundary, where the gate
+    * reads NOT-narrow and the nudge still fires.
     */
-  private def releaseShuffles(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (spark.conf.get("spark.graft.releaseShuffles.gc", "true").toBoolean) {
+  private def releaseShufflesAtScale(corpus: DataFrame): Unit =
+    if (!graft.util.Balance.narrow(corpus)) {
       org.slf4j.LoggerFactory.getLogger(getClass)
         .info("releaseShuffles: driver GC nudge to free dead shuffle files")
       System.gc()
     }
-
-  /** [[releaseShuffles]], but only when the corpus is big enough for dead
-    * shuffle files to threaten scratch capacity (r18): each System.gc() is
-    * a full driver stop-the-world pause (measured 100-300 ms on the 8 GB
-    * bench heap, 2-3 per assignment = most of q_dedup_semantic_coded's
-    * driver gap), and below cores x maxPartitionBytes the stage shuffles
-    * it would free are a few MB — the probes it protects (20M+ vectors,
-    * SCALEPROBE r12/r16) sit orders of magnitude past that boundary, where
-    * the gate reads NOT-narrow and the nudge still fires.
-    */
-  private def releaseShufflesAtScale(corpus: DataFrame): Unit =
-    if (!graft.util.Balance.narrow(corpus))
-      releaseShuffles(corpus.sparkSession)
 
   /** The two-level assignment behind [[semanticDedupIndexed]], returning
     * (fine centroids (ccell, fid, fvec), assignment (vec_id, embedding,

@@ -1010,37 +1010,45 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
+  /** SOI then a SOF0 whose length field (2) ends the payload. */
+  private val shortSof = Array(0xFF, 0xD8, 0xFF, 0xC0, 0x00, 0x02).map(_.toByte)
+
+  private def sha(parts: Iterator[Array[Byte]]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    parts.foreach(p => md.update(p))
+    md.digest().map(b => f"${b & 0xFF}%02x").mkString
+  }
+
+  /** Every JPEG synthesizer, by name: the inputs of both the encoder byte
+    * pin and the decoder output pin.
+    */
+  private val jpegSynths = Seq[(String, Long => Array[Byte])](
+    "jpeg" -> MediaSynth.jpeg,
+    "jpegWithAc" -> (id => MediaSynth.jpeg(id, withAc = true)),
+    "jpegRestart" -> MediaSynth.jpegRestart,
+    "jpegAc" -> MediaSynth.jpegAc,
+    "jpegProgressive" -> MediaSynth.jpegProgressive,
+    "jpegProgressiveRestart" -> MediaSynth.jpegProgressiveRestart,
+    "jpegColor" -> MediaSynth.jpegColor,
+    "jpegColor420" -> MediaSynth.jpegColor420,
+    "jpegColorProgressive" -> MediaSynth.jpegColorProgressive,
+    "jpegColor420Progressive" -> MediaSynth.jpegColor420Progressive,
+    "jpegColor420ProgressiveRestart" -> MediaSynth.jpegColor420ProgressiveRestart,
+    "jpegColor422" -> MediaSynth.jpegColor422,
+    "jpegColor422Restart" -> MediaSynth.jpegColor422Restart,
+    "jpegColor440" -> MediaSynth.jpegColor440,
+    "jpegColor440Restart" -> MediaSynth.jpegColor440Restart,
+    "jpegColor422Progressive" -> MediaSynth.jpegColor422Progressive,
+    "jpegColor440Progressive" -> MediaSynth.jpegColor440Progressive,
+    "jpegColor422ProgressiveRestart" -> (MediaSynth.jpegColorSampledProgressive(_, 2, 1, 2)),
+    "jpegColor440ProgressiveRestart" -> (MediaSynth.jpegColorSampledProgressive(_, 1, 2, 2)),
+    "jpegArith" -> MediaSynth.jpegArith)
+
   test("JPEG synthesizer bytes: SHA-256 over ids 0 until 4096 per encoder stays pinned") {
     // the bytes are the contract (query hashes, DuckDB oracles, ImageIO
     // pins all read them), so any encoder refactor must reproduce these
     // digests exactly
-    def sha(parts: Iterator[Array[Byte]]): String = {
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      parts.foreach(p => md.update(p))
-      md.digest().map(b => f"${b & 0xFF}%02x").mkString
-    }
-    val encoders = Seq[(String, Long => Array[Byte])](
-      "jpeg" -> MediaSynth.jpeg,
-      "jpegWithAc" -> (id => MediaSynth.jpeg(id, withAc = true)),
-      "jpegRestart" -> MediaSynth.jpegRestart,
-      "jpegAc" -> MediaSynth.jpegAc,
-      "jpegProgressive" -> MediaSynth.jpegProgressive,
-      "jpegProgressiveRestart" -> MediaSynth.jpegProgressiveRestart,
-      "jpegColor" -> MediaSynth.jpegColor,
-      "jpegColor420" -> MediaSynth.jpegColor420,
-      "jpegColorProgressive" -> MediaSynth.jpegColorProgressive,
-      "jpegColor420Progressive" -> MediaSynth.jpegColor420Progressive,
-      "jpegColor420ProgressiveRestart" -> MediaSynth.jpegColor420ProgressiveRestart,
-      "jpegColor422" -> MediaSynth.jpegColor422,
-      "jpegColor422Restart" -> MediaSynth.jpegColor422Restart,
-      "jpegColor440" -> MediaSynth.jpegColor440,
-      "jpegColor440Restart" -> MediaSynth.jpegColor440Restart,
-      "jpegColor422Progressive" -> MediaSynth.jpegColor422Progressive,
-      "jpegColor440Progressive" -> MediaSynth.jpegColor440Progressive,
-      "jpegColor422ProgressiveRestart" -> (MediaSynth.jpegColorSampledProgressive(_, 2, 1, 2)),
-      "jpegColor440ProgressiveRestart" -> (MediaSynth.jpegColorSampledProgressive(_, 1, 2, 2)),
-      "jpegArith" -> MediaSynth.jpegArith)
-    val got = encoders.map { case (n, f) => n -> sha((0L until 4096L).iterator.map(f)) } :+
+    val got = jpegSynths.map { case (n, f) => n -> sha((0L until 4096L).iterator.map(f)) } :+
       ("jpegColor420Progressive(11, w, h)" -> sha(Seq((24, 40), (40, 24), (24, 24), (8, 8))
         .iterator.map { case (w, h) => MediaSynth.jpegColorSampledProgressive(11L, 2, 2, 0, w, h) }))
     val pinned = Map[String, String](
@@ -1086,6 +1094,107 @@ class MultimodalSpec extends SparkSpec {
         "8f3543455b257a2ee3e8920899c75d6f2bd2fce20d034cf7c89dd401987a5561",
       "jpegColor420Progressive(11, w, h)" ->
         "40013ecb72a4961c118ad85c8033e79ae1b3a2df977a9868c1e2d0dc5a5d8ef6"
+    )
+    val moved = got.filterNot { case (n, d) => pinned.get(n).contains(d) }
+    assert(moved.isEmpty, s"bytes moved: ${moved.mkString(", ")}")
+  }
+
+  test("JPEG decoder outputs: SHA-256 over every synthesizer and its hostile mutants stays pinned") {
+    // jpeg, jpegColor and embed rendered canonically (nulls explicit,
+    // doubles as raw bits) over ids 0 until 4096, plus three mutants of
+    // ids 0 until 512: truncation at half length, one XOR-flipped byte
+    // eight bytes before the end, and one flipped header byte (a bit of
+    // some byte between SOI and the first SOS), so a decoder refactor must
+    // reproduce values, null patterns and hostile-input outcomes exactly
+    import graft.functions.JpegDecode
+    def render(p: Array[Byte]): Array[Byte] = {
+      val sb = new StringBuilder
+      def row(r: org.apache.spark.sql.catalyst.InternalRow,
+          t: org.apache.spark.sql.types.StructType): Unit =
+        r.toSeq(t).foreach(v => sb.append(if (v == null) "N" else v.toString).append(','))
+      row(JpegDecode.jpeg(p), JpegDecode.outType)
+      sb.append('|')
+      row(JpegDecode.jpegColor(p), JpegDecode.colorOutType)
+      sb.append('|')
+      val e = JpegDecode.embed(p)
+      if (e == null) sb.append('N')
+      else e.foreach(d => sb.append(java.lang.Long.toHexString(
+        java.lang.Double.doubleToRawLongBits(d))).append(','))
+      sb.append('\n').toString.getBytes("UTF-8")
+    }
+    def mutants(id: Long, p: Array[Byte]): Iterator[Array[Byte]] = {
+      val flipTail = p.clone()
+      flipTail(p.length - 8) = (flipTail(p.length - 8) ^ 0xA5).toByte
+      val sos = (2 until p.length - 1).find(i => (p(i) & 0xFF) == 0xFF && (p(i + 1) & 0xFF) == 0xDA)
+        .getOrElse(p.length)
+      val flipHead = p.clone()
+      val at = 2 + ((id * 37) % (sos - 2)).toInt
+      flipHead(at) = (flipHead(at) ^ (1 << (id % 8).toInt)).toByte
+      Iterator(p.take(p.length / 2), flipTail, flipHead)
+    }
+    val got = jpegSynths.map { case (n, f) =>
+      n -> sha((0L until 4096L).iterator.map(id => render(f(id))) ++
+        (0L until 512L).iterator.flatMap(id => mutants(id, f(id))).map(render))
+    }
+    val pinned = Map[String, String](
+      "jpeg" ->
+        "1bfbd9b66b0940718a854ed19a58ea24e9706db26722297f86161a92a7d9aa70",
+      "jpegWithAc" ->
+        "66fe6af70f12eac0c2446d8cb098a62641bc52400dda0779851a91cd6a21f6ee",
+      "jpegRestart" ->
+        "00618b40d74d9dec71877eede5d1a58b75da558c8f5d339a1f571a1620483ae4",
+      "jpegAc" ->
+        "7baa484ade828dae35a79ada86664434aefff5350c6f76439465b392cf057f70",
+      "jpegProgressive" ->
+        "fe5434461c0891ae6a86f1496a7b628f4fdda11da476603757917f752cddbad5",
+      "jpegProgressiveRestart" ->
+        "1e66edb4b99aa0d5c4a8f561ab2644f6b32d5f5114129a023246a6c187e7829d",
+      "jpegColor" ->
+        "5c885c4ae80830beb42051fd2efe86fd6c13b4f4307b021c608c78778f4531b5",
+      "jpegColor420" ->
+        "54dd0c4cef90c7cc77ebd30fb888a1e2191a19963c78376b6083627c5e882bb8",
+      "jpegColorProgressive" ->
+        "9c38793b4335175842ecd804252ba90752fcb541cef8bc08e7276920be29fc42",
+      "jpegColor420Progressive" ->
+        "14c2949f8aa7d8fca15fa3e7c261060f9d4d818f5d20f28b32127469fb7a4043",
+      "jpegColor420ProgressiveRestart" ->
+        "7700434aad494fd8928574527bf11023e1f169902d2269de655a643120836652",
+      "jpegColor422" ->
+        "68dbeb0cc406c9705ed202599ccee3de6a718e0ab69afbcef9d0872cb5b0271a",
+      "jpegColor422Restart" ->
+        "8ead201b4c8f1ab31307d9e91af539971d707cb0a79d3dfd9b8e6ce1610bbe08",
+      "jpegColor440" ->
+        "8965d49f7629152d0bc5c7434d6c8832251299908a5ea3bca7332bba361b8cf4",
+      "jpegColor440Restart" ->
+        "7e450e26a371cc06dc6d8a3f02829726b4a901ecbd74c8efe743385eb4eeef50",
+      "jpegColor422Progressive" ->
+        "a613ba16ee6d1d2f09edf92c7a3f2a325999e3644f42f0da8b2859092c2ac2b3",
+      "jpegColor440Progressive" ->
+        "43985b36b1b50c580701e74f1d5fa2d918aa7c5dfff324b75a5adf86d1a893d5",
+      "jpegColor422ProgressiveRestart" ->
+        "d561204ef8507cc0e72f51b09e05ec366334d15a7ca3118455289f442f7ca5bc",
+      "jpegColor440ProgressiveRestart" ->
+        "3b871aff41ccdff4d1158c9e07059a053a5991c13aa54c8dbeefd48fa09c1d36",
+      "jpegArith" ->
+        "d1c7eed568f037f6ec5b0d67e294ae4f16c63fff3cccf871e4bd1c55d26b7e07"
+    )
+    val moved = got.filterNot { case (n, d) => pinned.get(n).contains(d) }
+    assert(moved.isEmpty, s"decoder outputs moved: ${moved.mkString(", ")}")
+  }
+
+  test("PNG synthesizer bytes: SHA-256 over ids 0 until 4096 per encoder stays pinned") {
+    val encoders = Seq[(String, Long => Array[Byte])](
+      "png" -> MediaSynth.png,
+      "pngFixed" -> MediaSynth.pngFixed,
+      "pngDynamic" -> MediaSynth.pngDynamic)
+    val got = encoders.map { case (n, f) => n -> sha((0L until 4096L).iterator.map(f)) }
+    val pinned = Map[String, String](
+      "png" ->
+        "3303f424e0f3850562181e1ca7ca14fa013aaedd705503c16baf84eda474f059",
+      "pngFixed" ->
+        "c86faa94e5216675eff407e687eed55c3e2fd0d15f0fab8d4a7b72b0bdf5f1f3",
+      "pngDynamic" ->
+        "5eeaa85a17cf348c48368e83e07c32e9598c2ce6339d340eea4d26fafa3da9ce"
     )
     val moved = got.filterNot { case (n, d) => pinned.get(n).contains(d) }
     assert(moved.isEmpty, s"bytes moved: ${moved.mkString(", ")}")
@@ -1171,9 +1280,9 @@ class MultimodalSpec extends SparkSpec {
     assert(st2.isNullAt(3) || st2.getLong(3) != good.getLong(3) ||
       st2.getLong(4) != good.getLong(4) || st2.getLong(5) != good.getLong(5),
       "an entropy flip cannot decode to identical planes")
-    // hostile inputs never throw
+    // hostile inputs never throw, a SOF cut short at the payload end included
     for (junk <- Seq(Array.empty[Byte], Array[Byte](0xFF.toByte, 0xD8.toByte),
-      Array.fill(64)(0xFF.toByte), sample.take(30))) {
+      Array.fill(64)(0xFF.toByte), sample.take(30), shortSof)) {
       assert(graft.functions.JpegDecode.jpegColor(junk) != null)
     }
   }
@@ -1237,7 +1346,7 @@ class MultimodalSpec extends SparkSpec {
     for (junk <- Seq(Array.empty[Byte], "BM".getBytes, "RIFF".getBytes,
       MediaSynth.bmp(3L).take(20), MediaSynth.png(3L).take(40),
       Array[Byte](0xFF.toByte, 0xD8.toByte, 0xFF.toByte),
-      MediaSynth.jpeg(5L).take(30)))
+      MediaSynth.jpeg(5L).take(30), shortSof))
       assert(graft.functions.MediaDecode.embed(junk) == null)
   }
 
