@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.dedup.{Dedup, DedupProbe}
+import graft.dedup.Dedup
 import graft.util.Tables
 
 /** Scale-probe harness for the banded dedup joins (the SCALEPROBE.md
@@ -59,20 +59,20 @@ object DedupScaleProbe {
               .otherwise(col("n") * 2)).as("capped_cand_rows"))
           .orderBy("size").show(false)
       }
-      hist("jaccard-16x4", DedupProbe.banded(sig, Dedup.numBands, Dedup.rowsPerBand))
-      hist("containment-32x2", DedupProbe.banded(sig, Dedup.cSketchBands, Dedup.cSketchRows))
+      hist("jaccard-16x4", Dedup.bandedHashes(sig, Dedup.numBands, Dedup.rowsPerBand))
+      hist("containment-32x2", Dedup.bandedHashes(sig, Dedup.cSketchBands, Dedup.cSketchRows))
     } else {
       // the inputs minHashLshJoin builds, then its own candidate stage
       val jSets = Dedup.hashedShingleSets(docs).localCheckpoint()
       val compact = Dedup.sigCompact(Dedup.withSignature(jSets)).localCheckpoint()
       val jc = Dedup.lshCandidates(compact).localCheckpoint()
       val jn = jc.count()
-      val jk = DedupProbe.prefiltered(jc, compact.select("doc_id", "sz", "sigb"),
+      val jk = Dedup.prefilterCands(jc, compact.select("doc_id", "sz", "sigb"),
         (_, _) => lit(0.5), Dedup.rowsPerBand * 0.5).count()
       println(s"JACCARD t=0.5: candidates=$jn prefilter_survivors=$jk")
-      val cc = DedupProbe.containmentCandidates(sets, sig).localCheckpoint()
+      val cc = Dedup.containmentSketchCandidates(sets, sig).localCheckpoint()
       val cn = cc.count()
-      val ck = DedupProbe.prefiltered(cc, DedupProbe.sigBytes(sig),
+      val ck = Dedup.prefilterCands(cc, Dedup.withSigBytes(sig),
         (szI, szJ) => lit(0.8) / (lit(1.0) + szJ / szI - lit(0.8))).count()
       println(s"CONTAINMENT t=0.8: candidates=$cn prefilter_survivors=$ck")
     }

@@ -94,33 +94,80 @@ object Dedup {
     * becomes a sorted-merge count instead of a per-pair string hash-set.
     * Same repartition / no-filter rationale as [[shingleSets]].
     */
-  def hashedShingleSets(docs: DataFrame): DataFrame = {
-    docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id"),
+  def hashedShingleSets(docs: DataFrame): DataFrame =
+    shingleHashes(
+      docs.repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id")))
+
+  /** The one word-3-shingle kernel projection: (doc_id, shh, sz) over
+    * whatever partitioning `docs` arrives in. NULL text maps to an empty set,
+    * as [[shingleSets]] does.
+    */
+  private def shingleHashes(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
         coalesce(graft.functions.ShingleHashFunctions.wordShingleHashes(col("text"), 3),
           array().cast(ArrayType(LongType))).as("shh"))
       .withColumn("sz", size(col("shh")))
-  }
 
-  /** Exact jaccard re-score of candidate (i, j) pairs from the hashed sets:
-    * |A∩B| by sorted-merge over the hash arrays (O(n+m), codegen'd —
-    * [[graft.functions.SortedIntersectCount]]). Equal to the string
-    * intersection size up to 64-bit collisions (the accepted posting-design
-    * tolerance, see [[setSimilarityJoin]]).
+  /** A rescore's output column and its value from |A∩B|, |A| and |B|. */
+  private final case class Score(name: String, of: (Column, Column, Column) => Column)
+
+  /** Symmetric Jaccard |A∩B| / |A∪B|. */
+  private val jaccardScore =
+    Score("jaccard", (inter, szI, szJ) => inter * lit(1.0) / (szI + szJ - inter))
+
+  /** Directed containment |A∩B| / |A|: the i side is the contained one. */
+  private val containmentScore =
+    Score("containment", (inter, szI, _) => inter * lit(1.0) / szI)
+
+  /** The exact rescore every near-dup join ends in: |A∩B| of each candidate
+    * (i, j) by sorted-merge over the hashed sets (O(n+m), codegen'd —
+    * [[graft.functions.SortedIntersectCount]]), keeping the pairs whose
+    * `score` is at least t as (i, j, score.name). Equal to the string
+    * intersection size up to 64-bit collisions (see [[setSimilarityJoin]]).
+    * `gate`, when given, is a cheaper necessary condition (the bottom-k
+    * estimator) filtered BEFORE the full intersect.
     */
-  private def rescore(cands: DataFrame, sets: DataFrame, t: Double): DataFrame = {
+  private def rescore(cands: DataFrame, sets: DataFrame, t: Double, score: Score,
+      gate: Option[Column] = None): DataFrame = {
     val inter = graft.functions.ShingleHashFunctions
       .sortedIntersectCount(col("shh_i"), col("shh_j"))
-    cands
+    val joined = cands
       .join(sets.select(col("doc_id").as("i"), col("shh").as("shh_i"), col("sz").as("sz_i")), "i")
       .join(sets.select(col("doc_id").as("j"), col("shh").as("shh_j"), col("sz").as("sz_j")), "j")
-      .withColumn("jaccard",
-        inter * lit(1.0) / (col("sz_i") + col("sz_j") - inter))
-      .filter(col("jaccard") >= t)
-      .select("i", "j", "jaccard")
+    gate.fold(joined)(g => joined.filter(g))
+      .withColumn(score.name, score.of(inter, col("sz_i"), col("sz_j")))
+      .filter(col(score.name) >= t)
+      .select("i", "j", score.name)
   }
 
   // ------------------------------------------------------- exact SSJ (oracle)
+
+  /** The ranked-posting stage both exact joins prune on: one row per
+    * (sh_h, doc_id) with the doc's size, the hash's corpus frequency and
+    * its `rank` in the doc under ONE global rare-first order (freq, then
+    * hash) — so prefixes hold the most selective tokens and the candidate
+    * fan-out is smallest.
+    *
+    * Postings carry the shingle's 64-bit hash, not the string: the freq
+    * aggregation, rank window, and candidate equi-join all shuffle longs
+    * instead of ~25-byte strings (and the hash was already computed once
+    * per doc inside the shingle kernel — the explode just unnests it). A
+    * 64-bit collision merging two distinct shingles can only create a
+    * spurious candidate (killed by the exact rescore) — never lose a true
+    * pair beyond ~2^-64 tie-order noise. explode_outer + null-filter for
+    * the same InferFiltersFromGenerate reason as [[hashedPosting]].
+    * Unmaterialized: each join checkpoints the projection it reuses.
+    */
+  private def rankedPostings(sets: DataFrame): DataFrame = {
+    val posting = sets
+      .select(col("doc_id"), col("sz"), explode_outer(col("shh")).as("sh_h"))
+      .filter(col("sh_h").isNotNull)
+    val freq = posting.groupBy("sh_h").agg(count(lit(1)).as("freq"))
+    posting
+      .join(freq, "sh_h")
+      .withColumn("rank",
+        row_number().over(Window.partitionBy("doc_id").orderBy(col("freq"), col("sh_h"))))
+  }
 
   /** Exact all-pairs Jaccard join with full PPJoin-style candidate pruning:
     * prefix filter + length filter + positional filter. The length/positional
@@ -139,25 +186,6 @@ object Dedup {
     // tokenized corpus" step every dedup run wants — on a real cluster swap
     // for reliable checkpoint() so executor loss can't force a recompute.
     val sets = hashedShingleSets(docs).localCheckpoint()
-    // Postings carry the shingle's 64-bit hash, not the string: the freq
-    // aggregation, rank window, and candidate equi-join all shuffle longs
-    // instead of ~25-byte strings (and the hash was already computed once
-    // per doc inside the shingle kernel — the explode just unnests it). A
-    // 64-bit collision merging two distinct shingles can only create a
-    // spurious candidate (killed by the exact rescore) — never lose a true
-    // pair beyond ~2^-64 tie-order noise.
-    // explode_outer + null-filter for the same InferFiltersFromGenerate
-    // reason as hashedPosting below.
-    val posting = sets
-      .select(col("doc_id"), col("sz"), explode_outer(col("shh")).as("sh_h"))
-      .filter(col("sh_h").isNotNull)
-    val freq = posting.groupBy("sh_h").agg(count(lit(1)).as("freq"))
-    // Global total order: rare shingles first → prefixes are the most
-    // selective tokens → smallest candidate fan-out.
-    val ranked = posting
-      .join(freq, "sh_h")
-      .withColumn("rank",
-        row_number().over(Window.partitionBy("doc_id").orderBy(col("freq"), col("sh_h"))))
     // materialized ONCE (r17): both sides of the candidate self-join read
     // this frame, and without the checkpoint each side re-ran the whole
     // posting -> freq-join -> rank-window pipeline (measured as two
@@ -166,7 +194,7 @@ object Dedup {
     // Prefix postings are the SMALLER frame (only the first
     // |A|-ceil(t|A|)+1 tokens per doc), so this materializes less than
     // the ranked table would.
-    val prefix = ranked
+    val prefix = rankedPostings(sets)
       .filter(col("rank") <= col("sz") - ceil(lit(t) * col("sz")) + 1)
       .select(col("sh_h"), col("doc_id"), col("sz"), col("rank"))
       .localCheckpoint()
@@ -191,7 +219,7 @@ object Dedup {
     // session's lifetime. Cross-query reuse still happens one level down —
     // the `sets` cache above is the expensive shared step, and a recompute
     // of the candidate join from cached sets is cheap.
-    rescore(cands, sets, t)
+    rescore(cands, sets, t, jaccardScore)
   }
 
   val q_dedup_ngram_jaccard: Q = Q(
@@ -251,16 +279,9 @@ object Dedup {
     */
   def containmentJoin(docs: DataFrame, t: Double): DataFrame = {
     val sets = hashedShingleSets(docs).localCheckpoint()
-    val posting = sets
-      .select(col("doc_id"), col("sz"), explode_outer(col("shh")).as("sh_h"))
-      .filter(col("sh_h").isNotNull)
-    val freq = posting.groupBy("sh_h").agg(count(lit(1)).as("freq"))
     // consumed twice (A's prefix + B's full side) — materialize the ranked
     // postings once rather than paying the freq join + rank window per use
-    val ranked = posting
-      .join(freq, "sh_h")
-      .withColumn("rank",
-        row_number().over(Window.partitionBy("doc_id").orderBy(col("freq"), col("sh_h"))))
+    val ranked = rankedPostings(sets)
       .select("sh_h", "doc_id", "sz", "rank")
       .localCheckpoint()
     // alpha must never exceed the smallest intersection the rescore keeps:
@@ -280,24 +301,7 @@ object Dedup {
       .filter(col("i") =!= col("j") && col("sz_j") >= alpha
         && least(col("sz_i") - col("rank_i"), col("sz_j") - col("rank_j")) + 1 >= alpha)
       .select("i", "j").distinct()
-    containmentRescore(cands, sets, t)
-  }
-
-  /** Exact directed-containment rescore of (i, j) candidates against the
-    * hashed sets: |Sᵢ∩Sⱼ| by sorted-merge, divided by |Sᵢ| only. Shared by
-    * the exact [[containmentJoin]] and the [[containmentSketchJoin]]
-    * candidate path, so both emit identical rows for identical pairs.
-    */
-  private def containmentRescore(cands: DataFrame, sets: DataFrame, t: Double): DataFrame = {
-    val inter = graft.functions.ShingleHashFunctions
-      .sortedIntersectCount(col("shh_i"), col("shh_j"))
-    cands
-      .join(sets.select(col("doc_id").as("i"), col("shh").as("shh_i"),
-        col("sz").as("sz_i")), "i")
-      .join(sets.select(col("doc_id").as("j"), col("shh").as("shh_j")), "j")
-      .withColumn("containment", inter * lit(1.0) / col("sz_i"))
-      .filter(col("containment") >= t)
-      .select("i", "j", "containment")
+    rescore(cands, sets, t, containmentScore)
   }
 
   val q_dedup_containment: Q = Q(
@@ -1145,7 +1149,7 @@ object Dedup {
       }.reduce(_ bitwiseOR _)
     }: _*)
 
-  private[dedup] def withSigBytes(sig: DataFrame): DataFrame =
+  private[graft] def withSigBytes(sig: DataFrame): DataFrame =
     sig.select(col("doc_id"), col("sz"), packedSigBytes.as("sigb"))
 
   /** Signature prefilter between banded candidate generation and the exact
@@ -1168,7 +1172,7 @@ object Dedup {
     * schema-evolved index row from before the column existed) passes
     * through to the rescore rather than silently dropping.
     */
-  private[dedup] def prefilterCands(cands: DataFrame, sb: DataFrame,
+  private[graft] def prefilterCands(cands: DataFrame, sb: DataFrame,
       jMin: (Column, Column) => Column, selBias: Double = 0.0): DataFrame = {
     val agree = graft.functions.ShingleHashFunctions
       .byteLaneAgree(col("sigb_i"), col("sigb_j"))
@@ -1195,18 +1199,11 @@ object Dedup {
       .select("i", "j")
   }
 
-  /** LSH banding: 16 bands × 4 rows. Docs sharing any band hash become
-    * candidates (pair probability ~1-(1-j⁴)¹⁶: >0.99 at j=0.7); candidates
-    * are exact-rescored so precision is 1, recall is the LSH curve.
-    */
-  /** Band hashes off a 64-column MinHash signature frame: one row per
-    * (doc_id, band, band_hash), `bands × rowsPer` ≤ [[numHashes]] positions
-    * consumed in order. Shared by the symmetric Jaccard LSH and the
-    * asymmetric containment sketch (different band geometry, same hashes).
-    */
-  /** The band-hash array off a 64-column signature frame — shared between
-    * the exploded banding, the persisted index layout, and the compact
-    * checkpoint below.
+  /** The band-hash array off a 64-column signature frame: band j hashes
+    * the `rowsPer` minima from position j·rowsPer on, `bands × rowsPer` ≤
+    * [[numHashes]] positions consumed in order. Band hashes are made only
+    * here — for the exploded banding, the compact checkpoint and the
+    * persisted index layout — so all of them agree bit for bit.
     */
   private def bandHashArray(bands: Int, rowsPer: Int): Column =
     array((0 until bands).map { j =>
@@ -1214,9 +1211,34 @@ object Dedup {
         .map(r => col(s"m${j * rowsPer + r}")): _*)
     }: _*)
 
-  private[dedup] def bandedHashes(sig: DataFrame, bands: Int, rowsPer: Int): DataFrame =
+  /** Band hashes off a 64-column MinHash signature frame: one row per
+    * (doc_id, band, band_hash). Shared by the symmetric Jaccard LSH and the
+    * asymmetric containment sketch (different band geometry, same hashes).
+    */
+  private[graft] def bandedHashes(sig: DataFrame, bands: Int, rowsPer: Int): DataFrame =
     sig.select(col("doc_id"),
       posexplode(bandHashArray(bands, rowsPer)).as(Seq("band", "band_hash")))
+
+  /** (doc_id, band, band_hash) rows of a frame carrying a `band_hashes`
+    * array (the [[sigCompact]] checkpoint, the persisted index).
+    */
+  private def explodeBands(df: DataFrame): DataFrame =
+    df.select(col("doc_id"),
+      posexplode(col("band_hashes")).as(Seq("band", "band_hash")))
+
+  /** Per-(band, band_hash) bucket stats behind the [[bandBucketCap]] hub
+    * cap, shared by every banded candidate join: the bucket's size as `n`
+    * and its min-doc_id representative as `rep`. Unordered-frame window
+    * aggregates partitioned by (band, band_hash) — the exact exchange+sort
+    * the sort-merge candidate join needs anyway, so the cap costs no extra
+    * shuffle. Each join keeps its own star predicate over these columns.
+    */
+  private def bucketStats(banded: DataFrame, n: String, rep: String): DataFrame = {
+    val bucket = Window.partitionBy("band", "band_hash")
+    banded
+      .withColumn(n, count(lit(1)).over(bucket))
+      .withColumn(rep, min("doc_id").over(bucket))
+  }
 
   /** Everything the symmetric LSH join needs downstream of the signature,
     * at 1/2.7 the width of the raw 64 minima: the 16 Jaccard band hashes
@@ -1234,18 +1256,11 @@ object Dedup {
     * stage, so the probe measures what the join runs.
     */
   private[graft] def lshCandidates(compact: DataFrame): DataFrame = {
-    val bucket = Window.partitionBy("band", "band_hash")
     // banded feeds both sides of the self-join: checkpointed once
-    val banded = compact
-      .select(col("doc_id"),
-        posexplode(col("band_hashes")).as(Seq("band", "band_hash")))
-      .withColumn("n", count(lit(1)).over(bucket))
-      .withColumn("rep", min("doc_id").over(bucket))
-      .localCheckpoint()
+    val banded = bucketStats(explodeBands(compact), "n", "rep").localCheckpoint()
     // hub cap (see [[bandBucketCap]]): a bucket over the cap — a
     // near-identical family whose minima agree in this band — keeps only
-    // its rep's star instead of the full i<j cross product; the window
-    // stats ride the exchange+sort the self-join needs anyway
+    // its rep's star instead of the full i<j cross product
     val dense = col("a.n") > bandBucketCap
     banded.as("a")
       .join(banded.as("b"),
@@ -1257,6 +1272,10 @@ object Dedup {
       .distinct()
   }
 
+  /** LSH banding: 16 bands × 4 rows. Docs sharing any band hash become
+    * candidates (pair probability ~1-(1-j⁴)¹⁶: >0.99 at j=0.7); candidates
+    * are exact-rescored so precision is 1, recall is the LSH curve.
+    */
   def minHashLshJoin(docs: DataFrame, t: Double): DataFrame = {
     // sets feeds the signature AND both rescore sides. localCheckpoint,
     // not persist: materialized once, ContextCleaner-owned, no
@@ -1268,12 +1287,18 @@ object Dedup {
     // which both banding and the prefilter read
     val compact = sigCompact(withSignature(sets)).localCheckpoint()
     val cands = lshCandidates(compact)
-    // any pair the rescore keeps has Jaccard ≥ t, so lit(t) is the exact
-    // algebraic floor the prefilter margin subtracts from; the selection
-    // correction prices out the fired band's rowsPerBand free lanes
-    rescore(prefilterCands(cands, compact.select("doc_id", "sz", "sigb"),
-      (_, _) => lit(t), selBias = rowsPerBand * (1 - t)), sets, t)
+    rescore(jaccardPrefilter(cands, compact.select("doc_id", "sz", "sigb"), t),
+      sets, t, jaccardScore)
   }
+
+  /** The signature prefilter of a Jaccard-banded candidate set: any pair
+    * the rescore keeps has Jaccard ≥ t, so lit(t) is the exact algebraic
+    * floor the prefilter margin subtracts from; the selection correction
+    * prices out the fired band's rowsPerBand free lanes. Shared by the
+    * batch join and the persisted-index probe.
+    */
+  private def jaccardPrefilter(cands: DataFrame, sb: DataFrame, t: Double): DataFrame =
+    prefilterCands(cands, sb, (_, _) => lit(t), selBias = rowsPerBand * (1 - t))
 
   /** Rows-only: banding hashes aren't SQL-expressible; recall pinned against
     * the exact join in DedupSpec.
@@ -1284,26 +1309,20 @@ object Dedup {
 
   // ------------------------------------- persisted LSH near-dup index
 
-  /** One row per doc for the PERSISTED LSH index: the 16 Jaccard band
-    * hashes as an array (MERGE requires a unique key per doc; probes
-    * posexplode them back out) alongside the sorted shingle-hash set the
-    * exact rescore needs. Same [[numBands]]×[[rowsPerBand]] geometry and
-    * xxhash64 chain as [[minHashLshJoin]], so index probes and the batch
-    * join agree bit-for-bit.
+  /** One row per doc for the PERSISTED LSH index, as (doc_id, band_hashes,
+    * sigb, shh, sz): the 16 Jaccard band hashes as an array (MERGE requires
+    * a unique key per doc; probes posexplode them back out) alongside the
+    * sorted shingle-hash set the exact rescore needs. Built from the same
+    * [[sigCompact]] projection as [[minHashLshJoin]] — one signature kernel
+    * pass — so index probes and the batch join agree bit-for-bit. sigb is
+    * persisted alongside the band hashes: probes prefilter their
+    * candidates on the 72-byte packed signature before touching the stored
+    * shh arrays (recomputing it at probe time would read those arrays,
+    * which is exactly what the prefilter exists to avoid).
     */
   def lshIndexRows(docs: DataFrame): DataFrame = {
     val sets = hashedShingleSets(docs).localCheckpoint()
-    val bandsArr = array((0 until numBands).map { j =>
-      xxhash64(lit(j) +: (0 until rowsPerBand)
-        .map(r => col(s"m${j * rowsPerBand + r}")): _*)
-    }: _*)
-    val sig = withSignature(sets)
-    // sigb persisted alongside the band hashes: probes prefilter their
-    // candidates on the 72-byte packed signature before touching the
-    // stored shh arrays (recomputing it at probe time would read those
-    // arrays, which is exactly what the prefilter exists to avoid)
-    sig.select(col("doc_id"), bandsArr.as("band_hashes"))
-      .join(withSigBytes(sig).select("doc_id", "sigb"), "doc_id")
+    sigCompact(withSignature(sets)).select("doc_id", "band_hashes", "sigb")
       .join(sets.select("doc_id", "shh", "sz"), "doc_id")
   }
 
@@ -1325,9 +1344,6 @@ object Dedup {
   def lshIndexProbe(newDocs: DataFrame, dir: String, t: Double): DataFrame = {
     val spark = newDocs.sparkSession
     val idx = graft.io.SnapshotTable.read(spark, dir)
-    def explodeBands(df: DataFrame): DataFrame =
-      df.select(col("doc_id"),
-        posexplode(col("band_hashes")).as(Seq("band", "band_hash")))
     val probeBands = explodeBands(lshIndexRows(newDocs)).localCheckpoint()
     // prune the index's postings to the probed buckets FIRST, then size
     // what survives: the window stats cost one pass over only the hit
@@ -1335,12 +1351,10 @@ object Dedup {
     // answers each probe with its rep's star instead of every member —
     // the ingest dup gate only needs SOME detected pair, which the rep
     // star preserves
-    val bucket = Window.partitionBy("band", "band_hash")
-    val idxHit = explodeBands(idx)
-      .join(probeBands.select("band", "band_hash").distinct(),
-        Seq("band", "band_hash"))
-      .withColumn("cn", count(lit(1)).over(bucket))
-      .withColumn("c_rep", min("doc_id").over(bucket))
+    val idxHit = bucketStats(
+      explodeBands(idx).join(probeBands.select("band", "band_hash").distinct(),
+        Seq("band", "band_hash")),
+      "cn", "c_rep")
     val cands = probeBands.as("a")
       .join(idxHit.as("b"),
         col("a.band") === col("b.band") && col("a.band_hash") === col("b.band_hash")
@@ -1354,21 +1368,10 @@ object Dedup {
     // merged the probe docs' rows before probing, so one source covers
     // both sides); an index built before sigb existed skips the filter —
     // correctness never depends on it
-    val kept = if (!idx.columns.contains("sigb")) cands else {
-      val agree = graft.functions.ShingleHashFunctions
-        .byteLaneAgree(col("sigb_i"), col("sigb_j"))
-      // same selection-bias pricing as minHashLshJoin: index candidates
-      // fired a raw Jaccard band, so rowsPerBand lanes agree for free
-      val minLanes = lit(math.ceil(
-        (t - prefilterSlack) * numHashes + rowsPerBand * (1 - t) - 1e-9))
-      val sb = idx.select(col("doc_id"), col("sigb"))
-      cands
-        .join(sb.select(col("doc_id").as("i"), col("sigb").as("sigb_i")), "i")
-        .join(sb.select(col("doc_id").as("j"), col("sigb").as("sigb_j")), "j")
-        .filter(col("sigb_i").isNull || col("sigb_j").isNull || agree >= minLanes)
-        .select("i", "j")
-    }
-    rescore(kept, idx.select("doc_id", "shh", "sz"), t)
+    val kept =
+      if (!idx.columns.contains("sigb")) cands
+      else jaccardPrefilter(cands, idx.select("doc_id", "sz", "sigb"), t)
+    rescore(kept, idx.select("doc_id", "shh", "sz"), t, jaccardScore)
   }
 
   // ----------------------------------- approximate containment (default)
@@ -1392,7 +1395,7 @@ object Dedup {
     *     disk at 5M docs (>78 GB spill). It remains in-engine as the
     *     RECALL-STUDY variant (see [[containmentSketchJoin]]).
     *
-    * Both share [[containmentRescore]], so precision is 1 either way and
+    * Both end in the one exact [[rescore]], so precision is 1 either way and
     * rows for identical pairs are identical; only candidate generation —
     * and therefore the scale law — differs. DedupSpec pins this delegation
     * (default ≡ bottom-k pair-for-pair) plus the bottom-k recall ≥ 0.9 /
@@ -1431,7 +1434,7 @@ object Dedup {
     *   J(A, B⁺) = |A∩B| / (|A| + M_B − |A∩B|),
     * monotone in the intersection for fixed sizes. Banding those mixed
     * signatures (query side × container side, [[cSketchBands]] bands)
-    * yields DIRECTED candidates (i ⊆? j) that [[containmentRescore]] then
+    * yields DIRECTED candidates (i ⊆? j) that the exact [[rescore]] then
     * scores exactly — precision 1 by construction, recall the banding
     * curve, same sketch-plus-exact-rescore pairing as
     * [[minHashLshJoin]] → [[setSimilarityJoin]].
@@ -1461,10 +1464,10 @@ object Dedup {
     // whole reason to exist, where J is legitimately tiny) keep a floor
     // near zero and pass untouched, while the near-equal-size background
     // (the dominant candidate mass) must clear ~t/(2−t) − slack
-    containmentRescore(
+    rescore(
       prefilterCands(containmentSketchCandidates(sets, sig), withSigBytes(sig),
         (szI, szJ) => lit(t) / (lit(1.0) + szJ / szI - lit(t))),
-      sets, t)
+      sets, t, containmentScore)
   }
 
   /** Hub-bucket cap shared by every banded candidate join (symmetric
@@ -1491,15 +1494,12 @@ object Dedup {
     * so DedupSpec can pin the hub cap's candidate-volume bound directly.
     *
     * The cap costs no extra shuffle: per-side bucket size and rep come from
-    * unordered-frame window aggregates partitioned by (band, band_hash) —
-    * the exact exchange+sort the sort-merge candidate join needs anyway —
-    * and the star restriction rides IN the join condition, so a dense
-    * bucket's cross product is iterated (cheap compares inside SMJ) but
-    * never materialized into the distinct.
+    * [[bucketStats]], and the star restriction rides IN the join condition,
+    * so a dense bucket's cross product is iterated (cheap compares inside
+    * SMJ) but never materialized into the distinct.
     */
   private[graft] def containmentSketchCandidates(sets: DataFrame,
       sigIn: DataFrame = null): DataFrame = {
-    val bucket = Window.partitionBy("band", "band_hash")
     // ONE signature pass over the real sets, shared by both sides (and by
     // the caller's prefilter when passed in): the query side bands it
     // directly; the container side combines it with the (smaller) pad-only
@@ -1509,9 +1509,7 @@ object Dedup {
     val sig =
       if (sigIn != null) sigIn else withSignature(sets).localCheckpoint()
     // query side: signature of A as-is
-    val qBanded = bandedHashes(sig, cSketchBands, cSketchRows)
-      .withColumn("qn", count(lit(1)).over(bucket))
-      .withColumn("q_rep", min("doc_id").over(bucket))
+    val qBanded = bucketStats(bandedHashes(sig, cSketchBands, cSketchRows), "qn", "q_rep")
     // container side: pad B to M = 2^ceil(log2 |B|) with synthetic hashes
     // unique per (doc, position) — xxhash64 over a salt no shingle hash
     // path produces; the 2^-64 collision with a real shingle hash is the
@@ -1533,9 +1531,7 @@ object Dedup {
     val cSig = sig.join(padSig, Seq("doc_id"), "left")
       .select(col("doc_id") +:
         (0 until numHashes).map(i => least(col(s"m$i"), col(s"p$i")).as(s"m$i")): _*)
-    val cBanded = bandedHashes(cSig, cSketchBands, cSketchRows)
-      .withColumn("cn", count(lit(1)).over(bucket))
-      .withColumn("c_rep", min("doc_id").over(bucket))
+    val cBanded = bucketStats(bandedHashes(cSig, cSketchBands, cSketchRows), "cn", "c_rep")
     val dense = col("a.qn") > bandBucketCap || col("b.cn") > bandBucketCap
     // star around each side's OWN rep (guaranteed present in its bucket):
     // pairs kept in a dense bucket are (q_rep × every container) ∪
@@ -1588,12 +1584,8 @@ object Dedup {
     * IS the corpus), which the fourth-decade probe could not afford to
     * pay even once more than necessary.
     */
-  private def unshuffledSets(docs: DataFrame): DataFrame = {
-    balancedIfNarrow(docs).select(col("doc_id"),
-      coalesce(graft.functions.ShingleHashFunctions.wordShingleHashes(col("text"), 3),
-        array().cast(ArrayType(LongType))).as("shh"))
-      .withColumn("sz", size(col("shh")))
-  }
+  private def unshuffledSets(docs: DataFrame): DataFrame =
+    shingleHashes(balancedIfNarrow(docs))
 
   /** Scale-adaptive balancing for the compute-bound shingle kernel (r17,
     * guide §2.5 "input skew"): the kernel's parallelism is whatever the
@@ -1781,28 +1773,30 @@ object Dedup {
     guardedSemiJoin(sets, candIds, "doc_id").localCheckpoint()
   }
 
-  def containmentBottomKJoin(docs: DataFrame, t: Double, k: Int = 16,
-      dfCap: Int = 64): DataFrame = {
+  /** The one bottom-k join body behind [[containmentBottomKJoin]] and
+    * [[jaccardBottomKJoin]]: df-capped candidates ([[bottomKCandidates]],
+    * directed or normalized to unordered pairs), the candidate-pruned sets,
+    * then the exact [[rescore]] behind the bottom-k estimator gate. The gate
+    * reads the i side: for a kept pair C(i→j) ≥ t (a Jaccard-t pair has it
+    * whichever side probed), so the slack-relaxed sampled-hits floor holds —
+    * a cheap k-vs-set merge before the full intersect.
+    */
+  private def bottomKJoin(docs: DataFrame, t: Double, k: Int, dfCap: Int,
+      symmetric: Boolean, score: Score): DataFrame = {
     val sets = bkSets(docs)
     // shard/partition sizing counts the already-checkpointed sets frame
     // (cached blocks), not the raw corpus — a second scan+shingle pass at
     // exactly the scale this shape targets (round-13 advice)
-    val cands = bottomKCandidates(sets, sets.count(), t, k, dfCap, symmetric = false)
-    val candSets = candPrunedSets(sets, cands)
+    val cands = bottomKCandidates(sets, sets.count(), t, k, dfCap, symmetric)
     val bkHits = graft.functions.ShingleHashFunctions.sortedIntersectCount(
       slice(col("shh_i"), lit(1), kEffOf(k)(col("sz_i")).cast("int")), col("shh_j"))
-    val inter = graft.functions.ShingleHashFunctions
-      .sortedIntersectCount(col("shh_i"), col("shh_j"))
-    cands
-      .join(candSets.select(col("doc_id").as("i"), col("shh").as("shh_i"),
-        col("sz").as("sz_i")), "i")
-      .join(candSets.select(col("doc_id").as("j"), col("shh").as("shh_j")), "j")
-      // estimator gate first (16-vs-set merge), full intersect only after
-      .filter(bkHits >= bkAlpha(t, k)(col("sz_i")))
-      .withColumn("containment", inter * lit(1.0) / col("sz_i"))
-      .filter(col("containment") >= t)
-      .select("i", "j", "containment")
+    rescore(cands, candPrunedSets(sets, cands), t, score,
+      gate = Some(bkHits >= bkAlpha(t, k)(col("sz_i"))))
   }
+
+  def containmentBottomKJoin(docs: DataFrame, t: Double, k: Int = 16,
+      dfCap: Int = 64): DataFrame =
+    bottomKJoin(docs, t, k, dfCap, symmetric = false, containmentScore)
 
   /** Rows-only; DedupSpec pins precision 1 / recall ≥ 0.9 vs the exact
     * join AND that a planted extreme-ratio containment (a small doc inside
@@ -1836,29 +1830,8 @@ object Dedup {
     * carries, pinned ≥ 0.9 vs the exact PPJoin twin in DedupSpec.
     */
   def jaccardBottomKJoin(docs: DataFrame, t: Double, k: Int = 16,
-      dfCap: Int = 64): DataFrame = {
-    val sets = bkSets(docs)
-    val cands = bottomKCandidates(sets, sets.count(), t, k, dfCap, symmetric = true)
-    val candSets = candPrunedSets(sets, cands)
-    // estimator gate on the normalized i side: for a true Jaccard-t pair
-    // C(i→j) ≥ t regardless of which side probed, so the slack-relaxed
-    // sampled-hits floor holds — cheap k-vs-set merge before the full
-    // intersect
-    val bkHits = graft.functions.ShingleHashFunctions.sortedIntersectCount(
-      slice(col("shh_i"), lit(1), kEffOf(k)(col("sz_i")).cast("int")), col("shh_j"))
-    val inter = graft.functions.ShingleHashFunctions
-      .sortedIntersectCount(col("shh_i"), col("shh_j"))
-    cands
-      .join(candSets.select(col("doc_id").as("i"), col("shh").as("shh_i"),
-        col("sz").as("sz_i")), "i")
-      .join(candSets.select(col("doc_id").as("j"), col("shh").as("shh_j"),
-        col("sz").as("sz_j")), "j")
-      .filter(bkHits >= bkAlpha(t, k)(col("sz_i")))
-      .withColumn("jaccard",
-        inter * lit(1.0) / (col("sz_i") + col("sz_j") - inter))
-      .filter(col("jaccard") >= t)
-      .select("i", "j", "jaccard")
-  }
+      dfCap: Int = 64): DataFrame =
+    bottomKJoin(docs, t, k, dfCap, symmetric = true, jaccardScore)
 
   /** DEFAULT symmetric near-dup entry — delegates to the pair-mass-immune
     * bottom-k join, the same demotion [[containmentDedup]] applied to its

@@ -165,6 +165,15 @@ object Multimodal {
         when(even, "bmp").otherwise("wav").as("declared_format"))
   }
 
+  /** One synthesizer's media table: (media_id, payload) with the payload
+    * built per row by `synth` over doc_id, the docs first spread over every
+    * core (one compiled byte-array build per row is the whole cost).
+    */
+  private def synthTable(docs: DataFrame, synth: Column => Column): DataFrame =
+    docs
+      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
+      .select(col("doc_id").as("media_id"), synth(col("doc_id")).as("payload"))
+
   // --------------------------------------------------- real PCM audio table
 
   /** A COMPLETELY REAL mono PCM16 WAV file per document — every field
@@ -172,17 +181,12 @@ object Multimodal {
     * size, byte rate, block align, data-chunk length, and a data chunk
     * holding the planted waveform as little-endian signed 16-bit samples.
     * This is the payload [[q_mm_audio]] decodes back; sample decode for
-    * PCM is NOT stubbed — it needs no codec, only byte arithmetic.
+    * PCM is NOT stubbed — it needs no codec, only byte arithmetic. Built
+    * per row by [[MediaSynth.wav]]; the bytes stay pinned by
+    * MultimodalSpec's java.nio reference decode.
     */
-  def audioTable(docs: DataFrame): DataFrame = {
-    // one compiled byte-array build per row ([[MediaSynth.wav]], same
-    // fields the declarative concat/hex construction emitted); the bytes
-    // stay pinned by MultimodalSpec's java.nio reference decode
-    docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id").as("media_id"),
-        MediaSynthFunctions.wavSynth(col("doc_id")).as("payload"))
-  }
+  def audioTable(docs: DataFrame): DataFrame =
+    synthTable(docs, MediaSynthFunctions.wavSynth)
 
   // --------------------------------------------------- real BMP image table
 
@@ -195,12 +199,8 @@ object Multimodal {
     * the compiled per-row builder; bytes stay pinned by MultimodalSpec's
     * java.nio reference decode.
     */
-  def imageTable(docs: DataFrame): DataFrame = {
-    docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id").as("media_id"),
-        MediaSynthFunctions.bmpSynth(col("doc_id")).as("payload"))
-  }
+  def imageTable(docs: DataFrame): DataFrame =
+    synthTable(docs, MediaSynthFunctions.bmpSynth)
 
   // ----------------------------------------- real stored-deflate PNG table
 
@@ -217,12 +217,8 @@ object Multimodal {
     * accidentally pass) and the construction live in [[MediaSynth.png]],
     * the compiled per-row builder.
     */
-  def pngTable(docs: DataFrame): DataFrame = {
-    docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id").as("media_id"),
-        MediaSynthFunctions.pngSynth(col("doc_id")).as("payload"))
-  }
+  def pngTable(docs: DataFrame): DataFrame =
+    synthTable(docs, MediaSynthFunctions.pngSynth)
 
   /** The fixed-Huffman (BTYPE=01) PNG table — same spec-true framing as
     * [[pngTable]], but each IDAT holds one fixed-Huffman deflate block
@@ -231,12 +227,8 @@ object Multimodal {
     * y' = y−y%2 pixel field live in [[MediaSynth.pngFixed]]; ImageIO
     * decodes these files byte-identically (MultimodalSpec).
     */
-  def pngFixedTable(docs: DataFrame): DataFrame = {
-    docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id").as("media_id"),
-        MediaSynthFunctions.pngFixedSynth(col("doc_id")).as("payload"))
-  }
+  def pngFixedTable(docs: DataFrame): DataFrame =
+    synthTable(docs, MediaSynthFunctions.pngFixedSynth)
 
   /** Baseline grayscale JPEG table: REAL T.81 entropy framing (standard
     * Annex K DC table, minimal EOB-only AC table, byte stuffing, DC
@@ -244,23 +236,15 @@ object Multimodal {
     * LOSSY format is exactly decodable and formula-oracle-checkable; see
     * [[MediaSynth.jpeg]].
     */
-  def jpegTable(docs: DataFrame): DataFrame = {
-    docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id").as("media_id"),
-        MediaSynthFunctions.jpegSynth(col("doc_id")).as("payload"))
-  }
+  def jpegTable(docs: DataFrame): DataFrame =
+    synthTable(docs, MediaSynthFunctions.jpegSynth)
 
   /** The AC-bearing JPEG table ([[MediaSynth.jpegAc]]): one planted AC
     * coefficient per block at zig-zag index 10, where reconstruction is
     * integer-exact — the payloads behind [[q_mm_jpeg_pixels_ac]].
     */
-  def jpegAcTable(docs: DataFrame): DataFrame = {
-    docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id").as("media_id"),
-        MediaSynthFunctions.jpegAcSynth(col("doc_id")).as("payload"))
-  }
+  def jpegAcTable(docs: DataFrame): DataFrame =
+    synthTable(docs, MediaSynthFunctions.jpegAcSynth)
 
   /** The PROGRESSIVE (SOF2) grayscale JPEG table
     * ([[MediaSynth.jpegProgressive]]): four-scan spectral-selection +
@@ -268,35 +252,23 @@ object Multimodal {
     * IDENTICAL to [[jpegAcTable]]'s — the payloads behind
     * [[q_mm_jpeg_progressive]].
     */
-  def jpegProgressiveTable(docs: DataFrame): DataFrame = {
-    docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id").as("media_id"),
-        MediaSynthFunctions.jpegProgressiveSynth(col("doc_id")).as("payload"))
-  }
+  def jpegProgressiveTable(docs: DataFrame): DataFrame =
+    synthTable(docs, MediaSynthFunctions.jpegProgressiveSynth)
 
   /** The COLOR JPEG table ([[MediaSynth.jpegColor]]): YCbCr 4:4:4,
     * DC-exact planes, libjpeg-exact fixed-point RGB — the payloads behind
     * [[q_mm_jpeg_color]].
     */
-  def jpegColorTable(docs: DataFrame): DataFrame = {
-    docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id").as("media_id"),
-        MediaSynthFunctions.jpegColorSynth(col("doc_id")).as("payload"))
-  }
+  def jpegColorTable(docs: DataFrame): DataFrame =
+    synthTable(docs, MediaSynthFunctions.jpegColorSynth)
 
   /** The 4:2:0-subsampled COLOR JPEG table ([[MediaSynth.jpegColor420]]):
     * Y sampled 2×2, chroma 1×1, four-Y-unit MCUs, flat chroma plane per
     * image (the upsampling-invariant corner) — the payloads behind
     * [[q_mm_jpeg_color420]].
     */
-  def jpegColor420Table(docs: DataFrame): DataFrame = {
-    docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id").as("media_id"),
-        MediaSynthFunctions.jpegColor420Synth(col("doc_id")).as("payload"))
-  }
+  def jpegColor420Table(docs: DataFrame): DataFrame =
+    synthTable(docs, MediaSynthFunctions.jpegColor420Synth)
 
   /** The COLOR-PROGRESSIVE JPEG table ([[MediaSynth.jpegColorProgressive]]):
     * SOF2 4:4:4 with an interleaved DC scan, per-component AC scans, and
@@ -304,12 +276,8 @@ object Multimodal {
     * zig-zag 10, chroma DC-only — the payloads behind
     * [[q_mm_jpeg_color_prog]].
     */
-  def jpegColorProgressiveTable(docs: DataFrame): DataFrame = {
-    docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id").as("media_id"),
-        MediaSynthFunctions.jpegColorProgressiveSynth(col("doc_id")).as("payload"))
-  }
+  def jpegColorProgressiveTable(docs: DataFrame): DataFrame =
+    synthTable(docs, MediaSynthFunctions.jpegColorProgressiveSynth)
 
   /** The dynamic-Huffman PNG table: each IDAT is REAL `java.util.zip`
     * zlib output (level 9) over the planted scanlines — BTYPE=10 blocks
@@ -317,12 +285,8 @@ object Multimodal {
     * 8–16 × 8–14, 64-value channels, odd rows repeating; see
     * [[MediaSynth.pngDynamic]].
     */
-  def pngDynamicTable(docs: DataFrame): DataFrame = {
-    docs
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-      .select(col("doc_id").as("media_id"),
-        MediaSynthFunctions.pngDynamicSynth(col("doc_id")).as("payload"))
-  }
+  def pngDynamicTable(docs: DataFrame): DataFrame =
+    synthTable(docs, MediaSynthFunctions.pngDynamicSynth)
 
   // ------------------------------------------------ header metadata readers
 

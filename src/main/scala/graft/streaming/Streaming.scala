@@ -281,6 +281,24 @@ object Streaming {
         .getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
 
+  /** The exactly-once batch-id check every ingest here runs against the
+    * snapshot table at `tableDir` (read only when `tableExists`): whether
+    * `batchId` was already applied by this checkpoint lineage, and the
+    * manifest meta to stamp on the merge that applies it. Batch ids from a
+    * different lineage never compare, so they never skip.
+    */
+  private def replayCheck(spark: SparkSession, tableDir: String, checkpointDir: String,
+      batchId: Long, tableExists: Boolean = true): (Boolean, Map[String, String]) = {
+    val runId = cdcRunId(checkpointDir)
+    val meta =
+      if (tableExists) graft.io.SnapshotTable.snapshot(spark, tableDir, None).meta
+      else Map.empty[String, String]
+    val applied = meta.get(cdcBatchIdKey).map(_.toLong)
+      .filter(_ => meta.get(cdcRunIdKey).contains(runId))
+    (applied.exists(_ >= batchId),
+      Map(cdcBatchIdKey -> batchId.toString, cdcRunIdKey -> runId))
+  }
+
   /** Streaming CDC apply — the streaming twin of q_upsert/SnapshotTable
     * MERGE: each micro-batch collapses to its newest event per user
     * (latest-wins CDC semantics, deterministic via the (ts, event_id)
@@ -319,16 +337,10 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         import org.apache.spark.sql.expressions.Window
-        val runId = cdcRunId(checkpointDir)
         val tableExists = graft.io.SnapshotTable.exists(tableDir)
-        val meta =
-          if (tableExists)
-            graft.io.SnapshotTable.snapshot(spark, tableDir, None).meta
-          else Map.empty[String, String]
-        val applied = meta.get(cdcBatchIdKey).map(_.toLong)
-          // batch ids from a different checkpoint lineage don't compare
-          .filter(_ => meta.get(cdcRunIdKey).contains(runId))
-        if (applied.exists(_ >= batchId)) {
+        val (applied, stamp) =
+          replayCheck(spark, tableDir, checkpointDir, batchId, tableExists)
+        if (applied) {
           // post-crash replay of a batch the table already holds: skip
           ()
         } else {
@@ -349,14 +361,11 @@ object Streaming {
               .drop("__cur_ts", "__cur_eid")
             if (!fresh.isEmpty) {
               graft.io.SnapshotTable.merge(spark, tableDir, fresh, "user_id",
-                meta = Map(cdcBatchIdKey -> batchId.toString,
-                  cdcRunIdKey -> runId))
+                meta = stamp)
               ()
             }
           } else if (!latest.isEmpty) {
-            graft.io.SnapshotTable.create(latest, tableDir,
-              meta = Map(cdcBatchIdKey -> batchId.toString,
-                cdcRunIdKey -> runId))
+            graft.io.SnapshotTable.create(latest, tableDir, meta = stamp)
             ()
           }
         }
@@ -444,11 +453,8 @@ object Streaming {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val fileDir = s"$indexDir/file"
-        val runId = cdcRunId(checkpointDir)
-        val meta = graft.io.SnapshotTable.snapshot(spark, fileDir, None).meta
-        val applied = meta.get(cdcBatchIdKey).map(_.toLong)
-          .filter(_ => meta.get(cdcRunIdKey).contains(runId))
-        if (applied.exists(_ >= batchId)) ()
+        val (applied, stamp) = replayCheck(spark, fileDir, checkpointDir, batchId)
+        if (applied) ()
         else {
           val cents = graft.io.SnapshotTable.read(spark, s"$indexDir/centroids")
             .localCheckpoint()
@@ -468,9 +474,7 @@ object Streaming {
                 books, carry = Seq("cell"))
               .select(col("vec_id").as("cid"), col("cell"), col("codes"),
                 col("r2"))
-            graft.io.SnapshotTable.merge(spark, fileDir, coded, "cid",
-              meta = Map(cdcBatchIdKey -> batchId.toString,
-                cdcRunIdKey -> runId))
+            graft.io.SnapshotTable.merge(spark, fileDir, coded, "cid", meta = stamp)
             ()
           }
         }
@@ -514,15 +518,10 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val runId = cdcRunId(checkpointDir)
         val tableExists = graft.io.SnapshotTable.exists(tableDir)
-        val meta =
-          if (tableExists)
-            graft.io.SnapshotTable.snapshot(spark, tableDir, None).meta
-          else Map.empty[String, String]
-        val applied = meta.get(cdcBatchIdKey).map(_.toLong)
-          .filter(_ => meta.get(cdcRunIdKey).contains(runId))
-        if (applied.exists(_ >= batchId)) ()
+        val (applied, stamp) =
+          replayCheck(spark, tableDir, checkpointDir, batchId, tableExists)
+        if (applied) ()
         else {
           // deterministic winner per media_id (advice r15): in a healthy
           // feed media_id is content-keyed so duplicates are identical
@@ -545,11 +544,10 @@ object Streaming {
             .mediaFeatures(winners)
             .localCheckpoint()
           if (!feats.isEmpty) {
-            val m = Map(cdcBatchIdKey -> batchId.toString, cdcRunIdKey -> runId)
             if (tableExists)
               graft.io.SnapshotTable.merge(spark, tableDir, feats, "media_id",
-                meta = m)
-            else graft.io.SnapshotTable.create(feats, tableDir, meta = m)
+                meta = stamp)
+            else graft.io.SnapshotTable.create(feats, tableDir, meta = stamp)
             ()
           }
         }
@@ -596,10 +594,7 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val runId = cdcRunId(checkpointDir)
-        val meta = graft.io.SnapshotTable.snapshot(spark, indexDir, None).meta
-        val applied = meta.get(cdcBatchIdKey).map(_.toLong)
-          .filter(_ => meta.get(cdcRunIdKey).contains(runId))
+        val (applied, stamp) = replayCheck(spark, indexDir, checkpointDir, batchId)
         val deduped = batch.dropDuplicates("doc_id").localCheckpoint()
         if (!deduped.isEmpty) {
           // MERGE is exactly-once (batch-id skip); the sink is
@@ -607,11 +602,9 @@ object Streaming {
           // the sink ran must re-deliver this batch's pairs on replay, so
           // the probe+sink runs even on the skip path — re-probing an
           // already-merged batch is idempotent and returns the same pairs
-          if (!applied.exists(_ >= batchId)) {
+          if (!applied) {
             graft.io.SnapshotTable.merge(spark, indexDir,
-              graft.dedup.Dedup.lshIndexRows(deduped), "doc_id",
-              meta = Map(cdcBatchIdKey -> batchId.toString,
-                cdcRunIdKey -> runId))
+              graft.dedup.Dedup.lshIndexRows(deduped), "doc_id", meta = stamp)
           }
           sink(
             graft.dedup.Dedup.lshIndexProbe(deduped, indexDir, t)
@@ -646,17 +639,12 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val runId = cdcRunId(checkpointDir)
-        val meta = graft.io.SnapshotTable.snapshot(spark, indexDir, None).meta
-        val applied = meta.get(cdcBatchIdKey).map(_.toLong)
-          .filter(_ => meta.get(cdcRunIdKey).contains(runId))
+        val (applied, stamp) = replayCheck(spark, indexDir, checkpointDir, batchId)
         val deduped = batch.dropDuplicates("doc_id").localCheckpoint()
         if (!deduped.isEmpty) {
-          if (!applied.exists(_ >= batchId)) {
+          if (!applied) {
             graft.io.SnapshotTable.merge(spark, indexDir,
-              graft.dedup.Dedup.lshIndexRows(deduped), "doc_id",
-              meta = Map(cdcBatchIdKey -> batchId.toString,
-                cdcRunIdKey -> runId))
+              graft.dedup.Dedup.lshIndexRows(deduped), "doc_id", meta = stamp)
           }
           // keyed on the PAIR, not the batch: replay upserts equal rows
           val pairs = graft.dedup.Dedup.lshIndexProbe(deduped, indexDir, t)
@@ -701,15 +689,11 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val runId = cdcRunId(checkpointDir)
-        val meta = graft.io.SnapshotTable.snapshot(spark, tableDir, None).meta
-        val applied = meta.get(cdcBatchIdKey).map(_.toLong)
-          .filter(_ => meta.get(cdcRunIdKey).contains(runId))
+        val (applied, stamp) = replayCheck(spark, tableDir, checkpointDir, batchId)
         val deduped = batch.dropDuplicates("doc_id").localCheckpoint()
-        if (!applied.exists(_ >= batchId) && !deduped.isEmpty) {
+        if (!applied && !deduped.isEmpty) {
           graft.io.SnapshotTable.merge(spark, tableDir,
-            deduped.select("doc_id", "source", "n_chars"), "doc_id",
-            meta = Map(cdcBatchIdKey -> batchId.toString, cdcRunIdKey -> runId))
+            deduped.select("doc_id", "source", "n_chars"), "doc_id", meta = stamp)
         }
         // roll the ledger to whatever the table now holds — also heals a
         // prior crash between merge and refresh

@@ -505,4 +505,38 @@ class DedupSpec extends SparkSpec {
     val total = out.agg(sum("n_copies")).collect()(0).getLong(0)
     assert(total === docs.count())
   }
+
+  test("rows-only near-dup queries: SHA-256 of the sorted output rows stays pinned") {
+    // Verify checks these queries only for rows > 0; the digests pin every
+    // row. Each was the same under local[1] and local[4] when captured.
+    val pinned = Seq(
+      "q_dedup_containment_sketch" ->
+        "c29febce6eba540a67dbfa1c11a84b29f69df7b40a51e5776f36a8a456f4fe2c",
+      "q_dedup_containment_bottomk" ->
+        "c29febce6eba540a67dbfa1c11a84b29f69df7b40a51e5776f36a8a456f4fe2c",
+      "q_dedup_jaccard_bottomk" ->
+        "8478b5902cbd782e2efe126d7bdf4844abf8dab6f675fc23c9775e565675b55a",
+      "q_dedup_minhash_lsh" ->
+        "8478b5902cbd782e2efe126d7bdf4844abf8dab6f675fc23c9775e565675b55a",
+      "q_dedup_simhash" ->
+        "42c2873118bcb8948b690805c20e79a9b7087422911a7687e0a76dd17a75fa50",
+      "q_dedup_clusters_lsh" ->
+        "e40675eea592ee62db64bd0a1f3b7a4a61c3b378d2ab75b6f77c0b99f92d7905",
+      "q_dedup_canonical_lsh" ->
+        "575a3e7905fb8f46ebe7c06637f7e0f490fc1130f3ce15221d166312996661b0",
+      "q_split_leakage_safe_lsh" ->
+        "38418534445e756262fd382e7810b7b91c839c39f0251e8c0562a1c81ba76fa8",
+      "q_curate_verdict_lsh" ->
+        "5973071b520fab58070f95368b21e93a390fff232b29008c38caf5b5889ba869",
+      "q_pipeline_e2e_lsh" ->
+        "9dc430632b923f750fbab2ac516b29e696ed24a2230410f95fff2f9df3358e7a")
+    def digest(q: String): String = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      graft.SparkEntry.queries(q)(spark, sf()).collect().map(_.toString).sorted
+        .foreach(r => md.update((r + "\n").getBytes("UTF-8")))
+      md.digest().map(b => f"${b & 0xff}%02x").mkString
+    }
+    val got = pinned.map { case (q, _) => q -> digest(q) }
+    assert(got === pinned)
+  }
 }
