@@ -6,10 +6,11 @@ import graft.similarity.Similarity
 import graft.util.Tables
 
 /** Scale-probe harness for the sign-LSH ANN path: times the corpus
-  * bucketing scan (the stage the SignBuckets kernel replaced an
-  * interpreted-eval conjunct tree for) and a full annTopK run, then
-  * prints the executed plan. Performance diagnostics over a probe
-  * directory — never a correctness input.
+  * bucketing scan — `Similarity.lshBuckets`, the bucket-explode stage
+  * annTopK and embeddingNearDupLsh run (the stage the SignBuckets kernel
+  * replaced an interpreted-eval conjunct tree for) — and a full annTopK
+  * run, then prints the executed plan. Performance diagnostics over a
+  * probe directory — never a correctness input.
   *
   * Usage: runMain graft.SimScaleProbe <sfDir> [ann|semdedup [k]]
   */
@@ -42,9 +43,8 @@ object SimScaleProbe {
       spark.stop(); return
     }
     // Stage 1 in isolation: the corpus-side bucketing scan.
-    val c = emb.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-      explode_outer(Similarity.bucketIds(col("embedding"), 4, 10)).as("bucket"))
-      .filter(col("bucket").isNotNull)
+    val c = Similarity.lshBuckets(emb, Similarity.defaultPlanes, Similarity.defaultTables,
+      col("vec_id").as("cid"), col("embedding").as("ce"))
     timed("bucketing scan")(c.select(count(lit(1)), countDistinct("bucket")).show())
     // The full ANN query for a small probe set.
     val out = Similarity.annTopK(emb.filter(col("vec_id") < 20), emb, 5)

@@ -1334,17 +1334,20 @@ object Dedup {
   def lshIndexBuild(docs: DataFrame, dir: String): Unit =
     graft.io.SnapshotTable.create(lshIndexRows(docs), dir)
 
-  /** Probe the committed index with new docs: banded candidates against
-    * EVERY indexed doc (including rows merged this batch), exact-rescored
-    * from the stored sets — precision 1, recall the LSH curve, identical
-    * pair semantics to [[minHashLshJoin]] on the union corpus. The index
-    * must already contain the probe docs' rows (ingest merges first, then
-    * probes), so both rescore sides read from one snapshot.
+  /** Probe the committed index with new docs' index rows (as built by
+    * [[lshIndexRows]]): banded candidates against EVERY indexed doc
+    * (including rows merged this batch), exact-rescored from the stored
+    * sets — precision 1, recall the LSH curve, identical pair semantics to
+    * [[minHashLshJoin]] on the union corpus. The index must already
+    * contain the probe rows (ingest merges first, then probes the same
+    * rows), so both rescore sides read from one snapshot. The probe only
+    * explodes the rows' band hashes: no shingle or MinHash kernel runs
+    * here, so a caller that materialized the rows once pays for them once.
     */
-  def lshIndexProbe(newDocs: DataFrame, dir: String, t: Double): DataFrame = {
-    val spark = newDocs.sparkSession
+  def lshIndexProbe(newRows: DataFrame, dir: String, t: Double): DataFrame = {
+    val spark = newRows.sparkSession
     val idx = graft.io.SnapshotTable.read(spark, dir)
-    val probeBands = explodeBands(lshIndexRows(newDocs)).localCheckpoint()
+    val probeBands = explodeBands(newRows).localCheckpoint()
     // prune the index's postings to the probed buckets FIRST, then size
     // what survives: the window stats cost one pass over only the hit
     // postings, and a hub family in the INDEX (bucket > bandBucketCap)

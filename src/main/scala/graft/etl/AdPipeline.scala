@@ -22,6 +22,16 @@ object AdPipeline {
 
   /** The run plus the frame it persisted, for callers that can release it. */
   private def persistedRun(rawDocs: DataFrame, now: Instant): (DataFrame, Outputs) = {
+    val (parsed, curated, quarantine) = curate(rawDocs)
+    (parsed, Outputs(curated, quarantine, Report.report(curated, now)))
+  }
+
+  /** The transform composition of every ad run, batch or streaming:
+    * flatten → derive → persist → validate → dedup → validated projection.
+    * Returns (the persisted frame, curated, quarantine); the caller
+    * unpersists the first once both outputs are written.
+    */
+  private[graft] def curate(rawDocs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val parsed = Transform.derive(Transform.flatten(rawDocs))
     // One pass, two outputs: persist the flagged frame so the valid and
     // quarantine branches don't recompute the scan (SURVEY §4).
@@ -29,7 +39,7 @@ object AdPipeline {
     val (valid, quarantine) = Transform.validate(parsed)
     val curated = Transform.dedup(valid)
       .select(AdSchema.validated.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-    (parsed, Outputs(curated, quarantine, Report.report(curated, now)))
+    (parsed, curated, quarantine)
   }
 
   /** File-based run: landing dir of raw JSON documents → output dirs. */

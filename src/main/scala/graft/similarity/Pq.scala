@@ -239,36 +239,73 @@ object Pq {
     */
   def adcTopK(queries: DataFrame, corpus: DataFrame, books: Array[Array[Array[Double]]],
       k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val m = books.length
-    val ds = books(0)(0).length
-    val spark = corpus.sparkSession
-    // (s, code, cvec) centroid frame — m·ksub rows, driver-built, broadcast
-    val centRows = for (s <- books.indices; j <- books(s).indices)
-      yield (s, j, books(s)(j).toSeq)
-    import spark.implicits._
-    val cents = centRows.toDF("s", "code", "cvec")
     val e = col("embedding")
-    val qSub = queries.select(col("vec_id").as("qid"),
-      sqrt(VectorFunctions.vecDot(e.cast("array<double>"), e.cast("array<double>"))).as("qnorm"),
-      explode(array((0 until m).map(s =>
-        struct(lit(s).as("s"), sub(e, s, ds).as("qs"))).toIndexedSeq: _*)).as("a"))
-      .select(col("qid"), col("qnorm"), col("a.s").as("s"), col("a.qs").as("qs"))
-    val lut = qSub.join(broadcast(cents), "s")
-      .select(col("qid"), col("qnorm"), col("s"), col("code"),
-        VectorFunctions.vecDot(col("qs"), col("cvec")).as("dotval"))
+    val lut = adcLut(queries, Seq(col("vec_id").as("qid"), norm(e).as("qnorm")), e, books)
     val exploded = encode(corpus, books)
       .select(col("vec_id").as("cid"), col("r2"), posexplode(col("codes")).as(Seq("s", "code")))
-    exploded.join(broadcast(lut), Seq("s", "code"))
-      .groupBy("qid", "cid")
-      .agg(sum(col("dotval")).as("dot_qr"), min(col("r2")).as("r2"),
-        min(col("qnorm")).as("qnorm"))
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        (col("dot_qr") / (col("qnorm") * sqrt(col("r2")))).as("cos_adc"))
-      .withColumn("rn",
-        row_number().over(Window.partitionBy("qid").orderBy(col("cos_adc").desc, col("cid"))))
-      .filter(col("rn") <= k)
+    Similarity.topKPerQuery(
+      exploded.join(broadcast(lut), Seq("s", "code"))
+        .groupBy("qid", "cid")
+        .agg(sum(col("dotval")).as("dot_qr"), min(col("r2")).as("r2"),
+          min(col("qnorm")).as("qnorm"))
+        .filter(col("qid") =!= col("cid"))
+        .select(col("qid"), col("cid"),
+          (col("dot_qr") / (col("qnorm") * sqrt(col("r2")))).as("cos_adc")),
+      "cos_adc", k)
+  }
+
+  /** ‖x‖ of an embedding column. */
+  private def norm(e: Column): Column =
+    sqrt(VectorFunctions.vecDot(e.cast("array<double>"), e.cast("array<double>")))
+
+  /** The codebooks as an (s, code, cvec) frame, m·ksub rows. */
+  private def codebookFrame(spark: SparkSession,
+      books: Array[Array[Array[Double]]]): DataFrame = {
+    import spark.implicits._
+    (for (s <- books.indices; j <- books(s).indices) yield (s, j, books(s)(j).toSeq))
+      .toDF("s", "code", "cvec")
+  }
+
+  /** The ADC lookup table (qid, qnorm, s, code, dotval) of query vectors
+    * `qe`, `head` projecting qid and qnorm: m·ksub rows per query.
+    */
+  private def adcLut(q: DataFrame, head: Seq[Column], qe: Column,
+      books: Array[Array[Array[Double]]]): DataFrame = {
+    val m = books.length
+    val ds = books(0)(0).length
+    q.select(head :+ explode(array((0 until m).map(s =>
+        struct(lit(s).as("s"), sub(qe, s, ds).as("qs"))).toIndexedSeq: _*)).as("a"): _*)
+      .select(col("qid"), col("qnorm"), col("a.s").as("s"), col("a.qs").as("qs"))
+      .join(broadcast(codebookFrame(q.sparkSession, books)), "s")
+      .select(col("qid"), col("qnorm"), col("s"), col("code"),
+        VectorFunctions.vecDot(col("qs"), col("cvec")).as("dotval"))
+  }
+
+  /** (qid, qe, qnorm), read by both the cell ranking and the lookup table. */
+  private def queryNorms(queries: DataFrame): DataFrame = {
+    val e = col("embedding")
+    queries.select(col("vec_id").as("qid"), e.as("qe"), norm(e).as("qnorm"))
+      .localCheckpoint(eager = false)
+  }
+
+  /** The coded inverted file (cid, cell, codes, r2) of a frame carrying
+    * `cell`, in the encoding scan itself (no vec_id join-back).
+    */
+  private[graft] def codedFile(celled: DataFrame,
+      books: Array[Array[Array[Double]]]): DataFrame =
+    encode(celled, books, carry = Seq("cell"))
+      .select(col("vec_id").as("cid"), col("cell"), col("codes"), col("r2"))
+
+  /** The codebooks of the persisted IVF-PQ index under `dir`. */
+  private[graft] def readCodebooks(spark: SparkSession,
+      dir: String): Array[Array[Array[Double]]] = {
+    val bookRows = graft.io.SnapshotTable.read(spark, s"$dir/codebooks")
+      .select("s", "code", "cvec").collect()
+    val m = bookRows.map(_.getInt(0)).max + 1
+    val ksub = bookRows.map(_.getInt(1)).max + 1
+    val books = Array.ofDim[Array[Double]](m, ksub)
+    bookRows.foreach(r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
+    books
   }
 
   /** Rows-only ADC search audit: 20 probes against the 8-byte-coded
@@ -277,9 +314,7 @@ object Pq {
   val q_sim_ann_pq: Q = Q("q_sim_ann_pq", None) { (s, d) =>
     val emb = Tables.embeddings(s, d)
     val books = codebooks(emb)
-    adcTopK(emb.filter(col("vec_id") < 20), emb, books, 5)
-      .select("qid", "cid", "rn")
-      .orderBy("qid", "rn")
+    Similarity.ranks(adcTopK(emb.filter(col("vec_id") < 20), emb, books, 5))
   }
 
   /** IVF-PQ — the full FAISS-style composition and the shape a 100 TB
@@ -298,13 +333,8 @@ object Pq {
       books: Array[Array[Array[Double]]], k: Int,
       numCells: Int = 16, nprobe: Int = 4): DataFrame = {
     val cents = Similarity.ivfCentroids(corpus, numCells).localCheckpoint(eager = false)
-    // the coded inverted file: (cid, cell, codes, r2) — cell assignment and
-    // codes in ONE row-local scan (withCells keeps the embedding on the
-    // row; encode carries `cell` through), instead of two corpus passes
-    // re-attached by a corpus-width vec_id join-back (r18)
-    val file = encode(Similarity.withCells(corpus, cents), books, carry = Seq("cell"))
-      .select(col("vec_id").as("cid"), col("cell"), col("codes"), col("r2"))
-    adcProbe(queries, cents, books, file, k, nprobe)
+    adcProbe(queries, cents, books, codedFile(Similarity.withCells(corpus, cents), books),
+      k, nprobe)
   }
 
   /** The IVF-PQ probe body shared by the in-memory [[ivfAdcTopK]] and the
@@ -314,46 +344,21 @@ object Pq {
   private def adcProbe(queries: DataFrame, cents: DataFrame,
       books: Array[Array[Array[Double]]], file: DataFrame,
       k: Int, nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val m = books.length
-    val ds = books(0)(0).length
-    val spark = queries.sparkSession
-    val e = col("embedding")
-    val qn = queries.select(col("vec_id").as("qid"), e.as("qe"),
-      sqrt(VectorFunctions.vecDot(e.cast("array<double>"), e.cast("array<double>"))).as("qnorm"))
-      .localCheckpoint(eager = false)
-    val probes = qn
-      .join(broadcast(cents))
-      .select(col("qid"), col("cent_id").as("cell"),
-        Similarity.cosine(col("qe"), col("cvec")).as("ccos"))
-      .withColumn("pr",
-        row_number().over(Window.partitionBy("qid").orderBy(col("ccos").desc, col("cell"))))
-      .filter(col("pr") <= nprobe)
-      .select("qid", "cell")
-    val centRows = for (s <- books.indices; j <- books(s).indices)
-      yield (s, j, books(s)(j).toSeq)
-    import spark.implicits._
-    val pqCents = centRows.toDF("s", "code", "cvec")
-    val lut = qn.select(col("qid"), col("qnorm"),
-      explode(array((0 until m).map(s =>
-        struct(lit(s).as("s"), sub(col("qe"), s, ds).as("qs"))).toIndexedSeq: _*)).as("a"))
-      .select(col("qid"), col("qnorm"), col("a.s").as("s"), col("a.qs").as("qs"))
-      .join(broadcast(pqCents), "s")
-      .select(col("qid"), col("qnorm"), col("s"), col("code"),
-        VectorFunctions.vecDot(col("qs"), col("cvec")).as("dotval"))
+    val qn = queryNorms(queries)
+    val probes = Similarity.probedCells(qn, cents, nprobe)
+    val lut = adcLut(qn, Seq(col("qid"), col("qnorm")), col("qe"), books)
     // candidates = probed cells' lists; score them from their codes alone
-    probes.join(file, Seq("cell"))
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), col("r2"), posexplode(col("codes")).as(Seq("s", "code")))
-      .join(broadcast(lut), Seq("qid", "s", "code"))
-      .groupBy("qid", "cid")
-      .agg(sum(col("dotval")).as("dot_qr"), min(col("r2")).as("r2"),
-        min(col("qnorm")).as("qnorm"))
-      .select(col("qid"), col("cid"),
-        (col("dot_qr") / (col("qnorm") * sqrt(col("r2")))).as("cos_adc"))
-      .withColumn("rn",
-        row_number().over(Window.partitionBy("qid").orderBy(col("cos_adc").desc, col("cid"))))
-      .filter(col("rn") <= k)
+    Similarity.topKPerQuery(
+      probes.join(file, Seq("cell"))
+        .filter(col("qid") =!= col("cid"))
+        .select(col("qid"), col("cid"), col("r2"), posexplode(col("codes")).as(Seq("s", "code")))
+        .join(broadcast(lut), Seq("qid", "s", "code"))
+        .groupBy("qid", "cid")
+        .agg(sum(col("dotval")).as("dot_qr"), min(col("r2")).as("r2"),
+          min(col("qnorm")).as("qnorm"))
+        .select(col("qid"), col("cid"),
+          (col("dot_qr") / (col("qnorm") * sqrt(col("r2")))).as("cos_adc")),
+      "cos_adc", k)
   }
 
   /** Build and persist the COMPLETE IVF-PQ index as a SnapshotTable trio
@@ -369,19 +374,13 @@ object Pq {
     */
   def ivfpqBuildIndex(corpus: DataFrame, dir: String, numCells: Int = 16,
       m: Int = 8, ksub: Int = 16): Unit = {
-    val spark = corpus.sparkSession
     val cents = Similarity.ivfCentroids(corpus, numCells).localCheckpoint()
     graft.io.SnapshotTable.create(cents, s"$dir/centroids")
     val books = codebooks(corpus, m, ksub)
-    val bookRows = for (s <- books.indices; j <- books(s).indices)
-      yield (s, j, books(s)(j).toSeq)
-    import spark.implicits._
-    graft.io.SnapshotTable.create(bookRows.toDF("s", "code", "cvec"),
+    graft.io.SnapshotTable.create(codebookFrame(corpus.sparkSession, books),
       s"$dir/codebooks")
-    // one scan for cells + codes — see ivfAdcTopK's file comment (r18)
-    val file = encode(Similarity.withCells(corpus, cents), books, carry = Seq("cell"))
-      .select(col("vec_id").as("cid"), col("cell"), col("codes"), col("r2"))
-    graft.io.SnapshotTable.create(file, s"$dir/file", partitionBy = Seq("cell"))
+    graft.io.SnapshotTable.create(codedFile(Similarity.withCells(corpus, cents), books),
+      s"$dir/file", partitionBy = Seq("cell"))
   }
 
   /** Probe a persisted IVF-PQ index: centroids, codebooks, and the coded
@@ -393,12 +392,7 @@ object Pq {
       nprobe: Int = 4): DataFrame = {
     val spark = queries.sparkSession
     val cents = graft.io.SnapshotTable.read(spark, s"$dir/centroids")
-    val bookRows = graft.io.SnapshotTable.read(spark, s"$dir/codebooks")
-      .select("s", "code", "cvec").collect()
-    val m = bookRows.map(_.getInt(0)).max + 1
-    val ksub = bookRows.map(_.getInt(1)).max + 1
-    val books = Array.ofDim[Array[Double]](m, ksub)
-    bookRows.foreach(r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
+    val books = readCodebooks(spark, dir)
     val file = graft.io.SnapshotTable.read(spark, s"$dir/file")
       .select("cid", "cell", "codes", "r2")
     adcProbe(queries, cents, books, file, k, nprobe)
@@ -410,9 +404,7 @@ object Pq {
   val q_sim_ann_ivfpq: Q = Q("q_sim_ann_ivfpq", None) { (s, d) =>
     val emb = Tables.embeddings(s, d)
     val books = codebooks(emb)
-    ivfAdcTopK(emb.filter(col("vec_id") < 20), emb, books, 5, nprobe = 8)
-      .select("qid", "cid", "rn")
-      .orderBy("qid", "rn")
+    Similarity.ranks(ivfAdcTopK(emb.filter(col("vec_id") < 20), emb, books, 5, nprobe = 8))
   }
 
   /** RESIDUAL IVF-PQ — what FAISS's IndexIVFPQ actually encodes: the PQ
@@ -440,12 +432,11 @@ object Pq {
     */
   def ivfpqResidualTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       numCells: Int = 16, nprobe: Int = 4, m: Int = 8, ksub: Int = 16): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = corpus.sparkSession
     val cents = Similarity.ivfCentroids(corpus, numCells).localCheckpoint(eager = false)
     // residual frame: reused by codebook training AND encoding. withCells
     // keeps the embedding on the row, so the residual is one scan + one
-    // broadcast join — the former assignCells form re-joined the corpus to
+    // broadcast join — the former (vec_id, cell) form re-joined the corpus to
     // itself by vec_id just to get the embedding back (r18)
     val resid = Similarity
       .withCells(corpus.select(col("vec_id"), col("embedding")), cents)
@@ -458,8 +449,7 @@ object Pq {
     val ds = books(0)(0).length
     // cells + codes off one pass over the residual checkpoint — the former
     // form self-joined two resid derivatives by vec_id (r18)
-    val file = encode(resid, books, carry = Seq("cell"))
-      .select(col("vec_id").as("cid"), col("cell"), col("codes"), col("r2"))
+    val file = codedFile(resid, books)
     // build-time cross-term + norm tables from the driver-held centroids
     val centRows = cents.collect()
       .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
@@ -475,46 +465,27 @@ object Pq {
       .map { case (cell, cvec) => (cell, cvec.map(v => v * v).sum) }
       .toDF("cell", "c2cell")
     // query side: probed cells carry q·c_cell along; LUT is unchanged
-    val e = col("embedding")
-    val qn = queries.select(col("vec_id").as("qid"), e.as("qe"),
-      sqrt(VectorFunctions.vecDot(e.cast("array<double>"), e.cast("array<double>"))).as("qnorm"))
-      .localCheckpoint(eager = false)
-    val probes = qn
-      .join(broadcast(cents))
-      .select(col("qid"), col("cent_id").as("cell"),
-        VectorFunctions.vecDot(col("qe").cast("array<double>"), col("cvec")).as("qdotc"),
-        Similarity.cosine(col("qe"), col("cvec")).as("ccos"))
-      .withColumn("pr",
-        row_number().over(Window.partitionBy("qid").orderBy(col("ccos").desc, col("cell"))))
-      .filter(col("pr") <= nprobe)
-      .select("qid", "cell", "qdotc")
-    val pqCents = (for (s <- books.indices; j <- books(s).indices)
-      yield (s, j, books(s)(j).toSeq)).toDF("s", "code", "cvec")
-    val lut = qn.select(col("qid"), col("qnorm"),
-      explode(array((0 until m).map(s =>
-        struct(lit(s).as("s"), sub(col("qe"), s, ds).as("qs"))).toIndexedSeq: _*)).as("a"))
-      .select(col("qid"), col("qnorm"), col("a.s").as("s"), col("a.qs").as("qs"))
-      .join(broadcast(pqCents), "s")
-      .select(col("qid"), col("qnorm"), col("s"), col("code"),
-        VectorFunctions.vecDot(col("qs"), col("cvec")).as("dotval"))
-    probes.join(file, Seq("cell"))
-      .filter(col("qid") =!= col("cid"))
-      .join(broadcast(cellNorm), Seq("cell"))
-      .select(col("qid"), col("cid"), col("cell"), col("qdotc"), col("c2cell"),
-        col("r2"), posexplode(col("codes")).as(Seq("s", "code")))
-      .join(broadcast(lut), Seq("qid", "s", "code"))
-      .join(broadcast(cross), Seq("cell", "s", "code"))
-      .groupBy("qid", "cid")
-      .agg(sum(col("dotval")).as("dot_qr"), sum(col("cdot")).as("cdot_r"),
-        min(col("r2")).as("r2"), min(col("qnorm")).as("qnorm"),
-        min(col("qdotc")).as("qdotc"), min(col("c2cell")).as("c2cell"))
-      .select(col("qid"), col("cid"),
-        ((col("qdotc") + col("dot_qr")) /
-          (col("qnorm") * sqrt(col("c2cell") + lit(2.0) * col("cdot_r") + col("r2"))))
-          .as("cos_adc"))
-      .withColumn("rn",
-        row_number().over(Window.partitionBy("qid").orderBy(col("cos_adc").desc, col("cid"))))
-      .filter(col("rn") <= k)
+    val qn = queryNorms(queries)
+    val probes = Similarity.probedCells(qn, cents, nprobe, trail = Seq(
+      VectorFunctions.vecDot(col("qe").cast("array<double>"), col("cvec")).as("qdotc")))
+    val lut = adcLut(qn, Seq(col("qid"), col("qnorm")), col("qe"), books)
+    Similarity.topKPerQuery(
+      probes.join(file, Seq("cell"))
+        .filter(col("qid") =!= col("cid"))
+        .join(broadcast(cellNorm), Seq("cell"))
+        .select(col("qid"), col("cid"), col("cell"), col("qdotc"), col("c2cell"),
+          col("r2"), posexplode(col("codes")).as(Seq("s", "code")))
+        .join(broadcast(lut), Seq("qid", "s", "code"))
+        .join(broadcast(cross), Seq("cell", "s", "code"))
+        .groupBy("qid", "cid")
+        .agg(sum(col("dotval")).as("dot_qr"), sum(col("cdot")).as("cdot_r"),
+          min(col("r2")).as("r2"), min(col("qnorm")).as("qnorm"),
+          min(col("qdotc")).as("qdotc"), min(col("c2cell")).as("c2cell"))
+        .select(col("qid"), col("cid"),
+          ((col("qdotc") + col("dot_qr")) /
+            (col("qnorm") * sqrt(col("c2cell") + lit(2.0) * col("cdot_r") + col("r2"))))
+            .as("cos_adc")),
+      "cos_adc", k)
   }
 
   /** One persisted index per (session, sfDir), built lazily on first probe —
@@ -543,9 +514,8 @@ object Pq {
     */
   val q_sim_ann_ivfpq_idx: Q = Q("q_sim_ann_ivfpq_idx", None) { (s, d) =>
     val emb = Tables.embeddings(s, d)
-    ivfpqProbeIndex(emb.filter(col("vec_id") < 20), persistedIndex(s, d), 5, nprobe = 8)
-      .select("qid", "cid", "rn")
-      .orderBy("qid", "rn")
+    Similarity.ranks(
+      ivfpqProbeIndex(emb.filter(col("vec_id") < 20), persistedIndex(s, d), 5, nprobe = 8))
   }
 
   /** Rows-only residual-IVF-PQ audit; recall-vs-raw improvement pinned in
@@ -553,9 +523,7 @@ object Pq {
     */
   val q_sim_ann_ivfpq_res: Q = Q("q_sim_ann_ivfpq_res", None) { (s, d) =>
     val emb = Tables.embeddings(s, d)
-    ivfpqResidualTopK(emb.filter(col("vec_id") < 20), emb, 5, nprobe = 8)
-      .select("qid", "cid", "rn")
-      .orderBy("qid", "rn")
+    Similarity.ranks(ivfpqResidualTopK(emb.filter(col("vec_id") < 20), emb, 5, nprobe = 8))
   }
 
   /** Rows-only PQ audit over the embeddings table: 8×16 codebooks (8-byte

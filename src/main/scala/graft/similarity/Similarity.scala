@@ -43,11 +43,21 @@ object Similarity {
       .repartition(corpus.sparkSession.sparkContext.defaultParallelism, col("cid"))
     val scored = q.join(c, col("qid") =!= col("cid"))
       .select(col("qid"), col("cid"), cosine(col("qe"), col("ce")).as("cos"))
+    topKPerQuery(scored, "cos", k)
+  }
+
+  /** The per-query top-k every ANN search ends in: rank `rn` within `qid`
+    * by `score` desc, ties to the lower `cid`, keep `rn <= k`.
+    */
+  private[similarity] def topKPerQuery(scored: DataFrame, score: String, k: Int): DataFrame =
     scored
       .withColumn("rn",
-        row_number().over(Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))))
+        row_number().over(Window.partitionBy("qid").orderBy(col(score).desc, col("cid"))))
       .filter(col("rn") <= k)
-  }
+
+  /** An ANN query's output: (qid, cid, rn) in rank order. */
+  private[similarity] def ranks(top: DataFrame): DataFrame =
+    top.select("qid", "cid", "rn").orderBy("qid", "rn")
 
   /** Oracle-checked: ranks only (ids are exact; the float value itself stays
     * out of the hash scope by emitting rank not cosine).
@@ -68,9 +78,7 @@ object Similarity {
     """),
   ) { (s, d) =>
     val emb = Tables.embeddings(s, d)
-    bruteForceTopK(emb.filter(col("vec_id") < 20), emb, 5)
-      .select("qid", "cid", "rn")
-      .orderBy("qid", "rn")
+    ranks(bruteForceTopK(emb.filter(col("vec_id") < 20), emb, 5))
   }
 
   /** kNN label-consistency audit — the label-noise detector (confident-
@@ -179,32 +187,38 @@ object Similarity {
     graft.functions.VectorFunctions.signBuckets(
       emb, typedlit(planes.take(numPlanes * numTables)), numPlanes)
 
+  /** `cols` plus `bucket`, one row per (vector, table); explode_outer +
+    * null filter for the InferFiltersFromGenerate reason at Dedup.hashedPosting.
+    */
+  private[graft] def lshBuckets(df: DataFrame, numPlanes: Int, numTables: Int,
+      cols: Column*): DataFrame =
+    df.select(cols :+
+        explode_outer(bucketIds(col("embedding"), numPlanes, numTables)).as("bucket"): _*)
+      .filter(col("bucket").isNotNull)
+
+  /** Exact cosine per (qid, qe, cid, ce) candidate row, max-collapsed per
+    * (qid, cid) — a scalar shuffle, cheaper than deduplicating array rows.
+    */
+  private def bestPerPair(cands: DataFrame): DataFrame =
+    cands
+      .select(col("qid"), col("cid"), cosine(col("qe"), col("ce")).as("cos"))
+      .groupBy("qid", "cid")
+      .agg(max(col("cos")).as("cos"))
+
   /** ANN: candidates from an equi-join on (table, bucket); only candidates
-    * get exact-scored, and a pair colliding in several tables is scored per
-    * collision then collapsed by a max-aggregate (scalar shuffle — cheaper
-    * than deduplicating rows that still carry embedding arrays).
-    * explode_outer + null filter for the InferFiltersFromGenerate reason
-    * documented at Dedup.hashedPosting.
+    * get exact-scored, and a pair colliding in several tables keeps its
+    * best score ([[bestPerPair]]).
     */
   def annTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       numPlanes: Int = defaultPlanes, numTables: Int = defaultTables): DataFrame = {
     require(numPlanes * numTables <= maxPlanes, "not enough fixed hyperplanes")
-    val c = corpus
-      .repartition(corpus.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"),
-        explode_outer(bucketIds(col("embedding"), numPlanes, numTables)).as("bucket"))
-      .filter(col("bucket").isNotNull)
-    val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        explode_outer(bucketIds(col("embedding"), numPlanes, numTables)).as("bucket"))
-      .filter(col("bucket").isNotNull)
-    q.join(c, Seq("bucket"))
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), cosine(col("qe"), col("ce")).as("cos"))
-      .groupBy("qid", "cid")
-      .agg(max(col("cos")).as("cos"))
-      .withColumn("rn",
-        row_number().over(Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))))
-      .filter(col("rn") <= k)
+    val c = lshBuckets(
+      corpus.repartition(corpus.sparkSession.sparkContext.defaultParallelism, col("vec_id")),
+      numPlanes, numTables, col("vec_id").as("cid"), col("embedding").as("ce"))
+    val q = lshBuckets(queries, numPlanes, numTables,
+      col("vec_id").as("qid"), col("embedding").as("qe"))
+    topKPerQuery(bestPerPair(q.join(c, Seq("bucket")).filter(col("qid") =!= col("cid"))),
+      "cos", k)
   }
 
   /** Rows-only (bucket hashes not SQL-expressible); recall vs. brute force
@@ -212,9 +226,7 @@ object Similarity {
     */
   val q_sim_ann_lsh: Q = Q("q_sim_ann_lsh", None) { (s, d) =>
     val emb = Tables.embeddings(s, d)
-    annTopK(emb.filter(col("vec_id") < 20), emb, 5)
-      .select("qid", "cid", "rn")
-      .orderBy("qid", "rn")
+    ranks(annTopK(emb.filter(col("vec_id") < 20), emb, 5))
   }
 
   // ---------------------------------------------------------------- IVF
@@ -231,7 +243,7 @@ object Similarity {
     * [[graft.functions.NearestCells]] kernel argmax off the scan, and the
     * re-center is `dim` avg aggregates whose partial maps collapse each
     * task to numCells rows before the (tiny) exchange. The previous shape
-    * (`assignCells(..).join(corpus)` + posexplode re-center) re-exchanged
+    * (cell join-back to the corpus + posexplode re-center) re-exchanged
     * and SORTED the full embedding corpus every iteration — the
     * event-logged 56 GB disk death of the 20M-vector probe. Driver
     * collects are per-iteration and centroid-scale; lineage is cut at each
@@ -299,13 +311,6 @@ object Similarity {
     vectors.withColumn("cell", element_at(cellsCol(ids, book, 1), 1))
   }
 
-  /** Nearest centroid per vector as (vec_id, cell) — kept for consumers
-    * that only need the assignment (streaming ingest, specs); see
-    * [[withCells]] for the full-row form.
-    */
-  def assignCells(vectors: DataFrame, cents: DataFrame): DataFrame =
-    withCells(vectors, cents).select(col("vec_id"), col("cell"))
-
   /** IVF ANN: queries probe their `nprobe` closest cells; only vectors
     * filed under a probed cell get exact-scored. The inverted file is the
     * cell-keyed equi-join — per query the scan is the probed cells' lists,
@@ -319,10 +324,28 @@ object Similarity {
     // long-lived session. Checkpoint blocks are freed by the ContextCleaner
     // once this frame is unreachable — no caller-managed lifetime.
     val cents = ivfCentroids(corpus, numCells).localCheckpoint(eager = false)
-    val file = withCells(corpus, cents)
-      .select(col("vec_id").as("cid"), col("cell"), col("embedding").as("ce"))
-    probeFrom(queries, cents, file, k, nprobe)
+    probeFrom(queries, cents, floatFile(corpus, cents), k, nprobe)
   }
+
+  /** The float inverted file (cid, cell, ce). */
+  private def floatFile(corpus: DataFrame, cents: DataFrame): DataFrame =
+    withCells(corpus, cents)
+      .select(col("vec_id").as("cid"), col("cell"), col("embedding").as("ce"))
+
+  /** The `nprobe` cells of highest centroid cosine per (qid, qe) row of
+    * `q`, ties to the lower cell, as (qid, lead..., cell, trail...). The two
+    * lists keep each caller's column order, and with it its plan:
+    * [[probeFrom]] leads with `qe`, residual IVF-PQ trails with `qdotc`.
+    */
+  private[similarity] def probedCells(q: DataFrame, cents: DataFrame, nprobe: Int,
+      lead: Seq[Column] = Nil, trail: Seq[Column] = Nil): DataFrame =
+    q.join(broadcast(cents))
+      .select((col("qid") +: lead) ++ (col("cent_id").as("cell") +: trail) :+
+        cosine(col("qe"), col("cvec")).as("ccos"): _*)
+      .withColumn("pr",
+        row_number().over(Window.partitionBy("qid").orderBy(col("ccos").desc, col("cell"))))
+      .filter(col("pr") <= nprobe)
+      .drop("ccos", "pr")
 
   /** The probe phase shared by the in-memory [[ivfTopK]] and the
     * persisted-index [[ivfProbeIndex]]: rank cells per query by centroid
@@ -330,22 +353,11 @@ object Similarity {
     */
   private def probeFrom(queries: DataFrame, cents: DataFrame, file: DataFrame,
       k: Int, nprobe: Int): DataFrame = {
-    val probes = queries.select(col("vec_id").as("qid"), col("embedding").as("qe"))
-      .join(broadcast(cents))
-      .select(col("qid"), col("qe"), col("cent_id").as("cell"),
-        cosine(col("qe"), col("cvec")).as("ccos"))
-      .withColumn("pr",
-        row_number().over(Window.partitionBy("qid").orderBy(col("ccos").desc, col("cell"))))
-      .filter(col("pr") <= nprobe)
-      .select("qid", "qe", "cell")
-    probes.join(file, Seq("cell"))
-      .filter(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"), cosine(col("qe"), col("ce")).as("cos"))
-      .groupBy("qid", "cid") // a pair can meet in several probed cells
-      .agg(max(col("cos")).as("cos"))
-      .withColumn("rn",
-        row_number().over(Window.partitionBy("qid").orderBy(col("cos").desc, col("cid"))))
-      .filter(col("rn") <= k)
+    val probes = probedCells(
+      queries.select(col("vec_id").as("qid"), col("embedding").as("qe")),
+      cents, nprobe, lead = Seq(col("qe")))
+    topKPerQuery(bestPerPair(probes.join(file, Seq("cell")).filter(col("qid") =!= col("cid"))),
+      "cos", k)
   }
 
   /** Build the IVF index ONCE and persist it as a SnapshotTable pair under
@@ -362,9 +374,8 @@ object Similarity {
   def ivfBuildIndex(corpus: DataFrame, dir: String, numCells: Int = 16): Unit = {
     val cents = ivfCentroids(corpus, numCells).localCheckpoint(eager = false)
     graft.io.SnapshotTable.create(cents, s"$dir/centroids")
-    val file = withCells(corpus, cents)
-      .select(col("vec_id").as("cid"), col("cell"), col("embedding").as("ce"))
-    graft.io.SnapshotTable.create(file, s"$dir/file", partitionBy = Seq("cell"))
+    graft.io.SnapshotTable.create(floatFile(corpus, cents), s"$dir/file",
+      partitionBy = Seq("cell"))
   }
 
   /** Probe a persisted IVF index: same ranking/scoring as [[ivfTopK]], but
@@ -386,9 +397,7 @@ object Similarity {
     */
   val q_sim_ann_ivf: Q = Q("q_sim_ann_ivf", None) { (s, d) =>
     val emb = Tables.embeddings(s, d)
-    ivfTopK(emb.filter(col("vec_id") < 20), emb, 5)
-      .select("qid", "cid", "rn")
-      .orderBy("qid", "rn")
+    ranks(ivfTopK(emb.filter(col("vec_id") < 20), emb, 5))
   }
 
   // ------------------------------------------------- embedding near-dup
@@ -432,12 +441,10 @@ object Similarity {
     */
   def embeddingNearDupLsh(emb: DataFrame, t: Double,
       numPlanes: Int = defaultPlanes, numTables: Int = defaultTables): DataFrame = {
-    val bucketed = emb
-      .repartition(emb.sparkSession.sparkContext.defaultParallelism, col("vec_id"))
-      .select(col("vec_id"), col("embedding"),
-        sqrt(dot(col("embedding"), col("embedding"))).as("nrm"),
-        explode_outer(bucketIds(col("embedding"), numPlanes, numTables)).as("bucket"))
-      .filter(col("bucket").isNotNull)
+    val bucketed = lshBuckets(
+      emb.repartition(emb.sparkSession.sparkContext.defaultParallelism, col("vec_id")),
+      numPlanes, numTables, col("vec_id"), col("embedding"),
+      sqrt(dot(col("embedding"), col("embedding"))).as("nrm"))
     bucketed.as("a")
       .join(bucketed.as("b"),
         col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
-import graft.etl.Transform
+import graft.etl.AdPipeline
 
 /** Structured Streaming surface (SURVEY.md §2.10). The reference's ingestion
   * is incremental by nature — the GraphQL response hook appends ad groups as
@@ -394,13 +394,8 @@ object Streaming {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // Same composition as AdPipeline's run: the parsed frame stays
-        // persisted so the curated and quarantine branches share one scan.
-        val parsed = Transform.derive(Transform.flatten(batch)).persist()
+        val (parsed, curated, quarantine) = AdPipeline.curate(batch)
         try {
-          val (valid, quarantine) = Transform.validate(parsed)
-          val curated = Transform.dedup(valid)
-            .select(graft.etl.AdSchema.validated.fieldNames.map(col).toIndexedSeq: _*)
           curated.write.mode("append").parquet(curatedDir)
           quarantine.write.mode("append").json(quarantineDir)
         } finally { parsed.unpersist(); () }
@@ -458,22 +453,12 @@ object Streaming {
         else {
           val cents = graft.io.SnapshotTable.read(spark, s"$indexDir/centroids")
             .localCheckpoint()
-          val bookRows = graft.io.SnapshotTable.read(spark, s"$indexDir/codebooks")
-            .select("s", "code", "cvec").collect()
-          val m = bookRows.map(_.getInt(0)).max + 1
-          val ksub = bookRows.map(_.getInt(1)).max + 1
-          val books = Array.ofDim[Array[Double]](m, ksub)
-          bookRows.foreach(r =>
-            books(r.getInt(0))(r.getInt(1)) = r.getSeq[Double](2).toArray)
+          val books = graft.similarity.Pq.readCodebooks(spark, indexDir)
           val deduped = batch.dropDuplicates("vec_id").localCheckpoint()
           if (!deduped.isEmpty) {
-            // cells + codes in one row-local pass over the batch (same
-            // r18 shape as ivfAdcTopK's file build — no vec_id join-back)
-            val coded = graft.similarity.Pq.encode(
-                graft.similarity.Similarity.withCells(deduped, cents),
-                books, carry = Seq("cell"))
-              .select(col("vec_id").as("cid"), col("cell"), col("codes"),
-                col("r2"))
+            // the index's own coded-file builder over the batch
+            val coded = graft.similarity.Pq.codedFile(
+              graft.similarity.Similarity.withCells(deduped, cents), books)
             graft.io.SnapshotTable.merge(spark, fileDir, coded, "cid", meta = stamp)
             ()
           }
@@ -602,17 +587,26 @@ object Streaming {
           // the sink ran must re-deliver this batch's pairs on replay, so
           // the probe+sink runs even on the skip path — re-probing an
           // already-merged batch is idempotent and returns the same pairs
-          if (!applied) {
-            graft.io.SnapshotTable.merge(spark, indexDir,
-              graft.dedup.Dedup.lshIndexRows(deduped), "doc_id", meta = stamp)
-          }
           sink(
-            graft.dedup.Dedup.lshIndexProbe(deduped, indexDir, t)
+            mergeAndProbe(spark, deduped, indexDir, t, applied, stamp)
               .withColumn("batch_id", lit(batchId)),
             batchId)
         }
       }
       .start()
+
+  /** One micro-batch of [[dedupIngest]] and [[dedupIngestPairs]]: build
+    * the batch's index rows once (one shingle and one MinHash kernel pass,
+    * checkpointed), MERGE them unless the batch-id skip says the index
+    * already holds them, then probe the index with the same rows.
+    */
+  private def mergeAndProbe(spark: SparkSession, docs: DataFrame, indexDir: String,
+      t: Double, applied: Boolean, stamp: Map[String, String]): DataFrame = {
+    val rows = graft.dedup.Dedup.lshIndexRows(docs).localCheckpoint()
+    if (!applied)
+      graft.io.SnapshotTable.merge(spark, indexDir, rows, "doc_id", meta = stamp)
+    graft.dedup.Dedup.lshIndexProbe(rows, indexDir, t)
+  }
 
   /** Exactly-once twin of [[dedupIngest]] for PULL consumers: instead of
     * pushing each batch's near-dup pairs to a sink (at-least-once on a
@@ -642,12 +636,8 @@ object Streaming {
         val (applied, stamp) = replayCheck(spark, indexDir, checkpointDir, batchId)
         val deduped = batch.dropDuplicates("doc_id").localCheckpoint()
         if (!deduped.isEmpty) {
-          if (!applied) {
-            graft.io.SnapshotTable.merge(spark, indexDir,
-              graft.dedup.Dedup.lshIndexRows(deduped), "doc_id", meta = stamp)
-          }
           // keyed on the PAIR, not the batch: replay upserts equal rows
-          val pairs = graft.dedup.Dedup.lshIndexProbe(deduped, indexDir, t)
+          val pairs = mergeAndProbe(spark, deduped, indexDir, t, applied, stamp)
             .withColumn("batch_id", lit(batchId))
             .withColumn("pair_key",
               concat_ws("\u001F", col("i"), col("j")))

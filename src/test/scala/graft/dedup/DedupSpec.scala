@@ -206,13 +206,66 @@ class DedupSpec extends SparkSpec {
     Dedup.lshIndexBuild(mk(famIds), dir)
     // ingest order: the new member is merged into the index, then probed
     val newId = 400000L + n + 1
-    graft.io.SnapshotTable.merge(spark,
-      dir, Dedup.lshIndexRows(mk(Seq(newId))), "doc_id")
-    val pairs = pairSet(Dedup.lshIndexProbe(mk(Seq(newId)), dir, 0.5))
+    val rows = Dedup.lshIndexRows(mk(Seq(newId)))
+    graft.io.SnapshotTable.merge(spark, dir, rows, "doc_id")
+    val pairs = pairSet(Dedup.lshIndexProbe(rows, dir, 0.5))
     assert(pairs.exists { case (i, j) => i == newId || j == newId },
       s"probe must link the new member into the hub family: $pairs")
     assert(pairs.size < 60,
       s"hub probe not star-bounded: ${pairs.size} pairs for one probe doc")
+  }
+
+  test("LSH index probe explodes the given index rows: no kernel runs") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import graft.functions.{MinHashSignature, WordShingleHashes}
+    val spark2 = spark
+    import spark2.implicits._
+    val base = (1 to 20).map(i => s"w$i").mkString(" ")
+    def mk(ids: Seq[Long]) = ids.map(id => (id, s"$base tag$id")).toDF("doc_id", "text")
+      .withColumn("source", lit("synthetic")).withColumn("n_chars", lit(0))
+    val dir = java.nio.file.Files.createTempDirectory("graft-lsh-probe").toString + "/idx"
+    Dedup.lshIndexBuild(mk(1L to 20L), dir)
+    // ingest order: the new doc's rows are built once, merged into the
+    // index, then probed
+    val rows = Dedup.lshIndexRows(mk(Seq(21L))).localCheckpoint()
+    graft.io.SnapshotTable.merge(spark, dir, rows, "doc_id")
+    def kernels(plan: LogicalPlan): Seq[String] =
+      plan.flatMap(_.expressions.flatMap(_.collect {
+        case e: WordShingleHashes => e.prettyName
+        case e: MinHashSignature => e.prettyName
+      }))
+    // every query the probe executes (its eager checkpoints included)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = { seen.add(qe); () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = { seen.add(qe); () }
+    }
+    def named(qe: QueryExecution, n: String) = qe.analyzed.output.exists(_.name == n)
+    // listener events arrive in order but asynchronously: once a sentinel
+    // query is seen, every execution that ended before it has been too
+    def sentinel(n: String): Unit = {
+      spark.range(1).toDF(n).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(named(_, n)) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.asScala.exists(named(_, n)), s"query listener never saw $n")
+    }
+    spark.listenerManager.register(listener)
+    val (probe, pairs, during) =
+      try {
+        sentinel("__before") // late events of the index build land before it
+        val p = Dedup.lshIndexProbe(rows, dir, 0.5)
+        val got = pairSet(p)
+        sentinel("__after")
+        (p, got, seen.asScala.toSeq.dropWhile(!named(_, "__before")).drop(1))
+      } finally spark.listenerManager.unregister(listener)
+    assert(pairs.exists { case (i, j) => i == 21L || j == 21L },
+      s"probe must link the new doc to its near-duplicates: $pairs")
+    assert(kernels(probe.queryExecution.optimizedPlan).isEmpty)
+    val ran = during.flatMap(qe => kernels(qe.optimizedPlan)).distinct
+    assert(ran.isEmpty, s"probe executed kernel expressions: $ran")
   }
 
   test("bottom-k containment: precision 1, recall >= 0.9, finds extreme ratios") {

@@ -455,7 +455,7 @@ class StreamingSpec extends SparkSpec {
     val twin = emb.filter(col("vec_id") === 7L)
       .select(lit(100001L).as("vec_id"), col("embedding"))
     val wantCodes = Pq.encode(twin, books).select("codes").head().getSeq[Int](0)
-    val wantCell = Similarity.assignCells(twin, cents).select("cell").head().getInt(0)
+    val wantCell = Similarity.withCells(twin, cents).select("cell").head().getInt(0)
     val gotRow = after.filter(col("cid") === 100001L)
       .select("cell", "codes").head()
     assert(gotRow.getInt(0) === wantCell, "streamed cell assignment drifted")
