@@ -6,7 +6,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import scala.util.Using
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -214,51 +216,38 @@ object SnapshotTable {
       }
     }
 
-  def snapshot(spark: SparkSession, dir: String, version: Option[Int] = None): Snapshot = {
-    val v = version.getOrElse(latestVersion(dir))
-    // the manifest is one JSON object; Spark's reader handles the parse
-    // (and any future schema growth) without a hand-rolled parser
-    val row = spark.read
-      .schema(StructType(Seq(
-        StructField("version", IntegerType),
-        StructField("files", ArrayType(StringType)),
-        StructField("statsCols", ArrayType(StringType)),
-        StructField("stats", ArrayType(StructType(Seq(
-          StructField("file", StringType),
-          StructField("col", StringType),
-          StructField("mn", DoubleType),
-          StructField("mx", DoubleType))))),
-        StructField("strStats", ArrayType(StructType(Seq(
-          StructField("file", StringType),
-          StructField("col", StringType),
-          StructField("smn", StringType),
-          StructField("smx", StringType))))),
-        StructField("schemaDdl", StringType),
-        StructField("meta", MapType(StringType, StringType)))))
-      .json(manifestPath(dir, v).toString)
-      .head()
-    val statsCols =
-      if (row.isNullAt(2)) Nil else row.getSeq[String](2) // pre-stats manifests
-    val stats =
-      if (row.isNullAt(3)) Map.empty[String, Map[String, (Double, Double)]]
-      else row.getSeq[org.apache.spark.sql.Row](3)
-        .groupBy(_.getString(0))
-        .map { case (f, rows) =>
-          f -> rows.map(r => r.getString(1) -> (r.getDouble(2), r.getDouble(3))).toMap
-        }
-    val strStats =
-      if (row.isNullAt(4)) Map.empty[String, Map[String, (String, String)]]
-      else row.getSeq[org.apache.spark.sql.Row](4)
-        .groupBy(_.getString(0))
-        .map { case (f, rows) =>
-          f -> rows.map(r => r.getString(1) -> (r.getString(2), r.getString(3))).toMap
-        }
-    val ddl = if (row.isNullAt(5)) None else Some(row.getString(5))
-    val meta =
-      if (row.isNullAt(6)) Map.empty[String, String]
-      else row.getMap[String, String](6).toMap
-    Snapshot(row.getInt(0), row.getSeq[String](1), statsCols, stats, ddl, meta,
-      strStats)
+  /** The manifest of `version` (latest by default), parsed on the driver:
+    * a manifest is one small JSON object, so reading it costs a file read,
+    * never a Spark job. `spark` is unused; the signature matches the other
+    * table entry points.
+    */
+  def snapshot(spark: SparkSession, dir: String, version: Option[Int] = None): Snapshot =
+    parseManifest(Files.readAllBytes(
+      manifestPath(dir, version.getOrElse(latestVersion(dir)))))
+
+  private val mapper = new ObjectMapper()
+
+  /** Parses exactly what [[writeManifest]] emits. Keys a manifest omits
+    * read as empty: pre-stats manifests carry no `statsCols`/`stats`, and
+    * `strStats`, `schemaDdl` and `meta` are written only when set.
+    */
+  private[io] def parseManifest(json: Array[Byte]): Snapshot = {
+    val root = mapper.readTree(json)
+    def elems(name: String): Seq[JsonNode] =
+      Option(root.get(name)).filterNot(_.isNull).toSeq.flatMap(_.elements().asScala)
+    def perFile[V](name: String)(value: JsonNode => V): Map[String, Map[String, V]] =
+      elems(name).groupBy(_.get("file").asText()).map { case (f, es) =>
+        f -> es.map(e => e.get("col").asText() -> value(e)).toMap
+      }
+    Snapshot(
+      root.get("version").asInt(),
+      elems("files").map(_.asText()),
+      elems("statsCols").map(_.asText()),
+      perFile("stats")(e => (e.get("mn").asDouble(), e.get("mx").asDouble())),
+      Option(root.get("schemaDdl")).filterNot(_.isNull).map(_.asText()),
+      Option(root.get("meta")).filterNot(_.isNull).toSeq
+        .flatMap(_.properties().asScala.map(e => e.getKey -> e.getValue.asText())).toMap,
+      perFile("strStats")(e => (e.get("smn").asText(), e.get("smx").asText())))
   }
 
   /** Per-file (min, max) zone maps for `statsCols` over the given relative
@@ -386,8 +375,8 @@ object SnapshotTable {
     * tombstone THEN DELETE / WHEN NOT MATCHED THEN INSERT ALL — row-wins,
     * same upsert semantics as q_upsert's oracle):
     *
-    *  1. locate the files that contain a matched key (input_file_name join
-    *     against the broadcast change-key set — reads only the key column),
+    *  1. locate the files that contain a matched key (input_file_name semi
+    *     join against the broadcast change keys — reads only the key column),
     *  2. rewrite JUST those files' rows merged with the changes (plus all
     *     inserts, minus all tombstoned matches) into a new commit directory,
     *  3. publish a manifest = untouched files (by reference) + new files.
@@ -406,10 +395,15 @@ object SnapshotTable {
     * `meta`: key/values stamped onto the new manifest, overlaid on the
     * previous snapshot's meta (see [[Snapshot.meta]]).
     *
-    * PRECONDITION: `changes` must be unique on `key` (asserted below — SQL
-    * MERGE's "multiple source rows matched" error), and the table stays
-    * unique on `key` as long as `create` was fed unique keys: the full-outer
-    * join fans out on duplicates, silently multiplying rows otherwise.
+    * PRECONDITION: `changes` must be unique on `key` (SQL MERGE's
+    * "multiple source rows matched" error), and the table stays unique on
+    * `key` as long as `create` was fed unique keys: the full-outer join
+    * fans out on duplicates, silently multiplying rows otherwise. The check
+    * rides on the rewrite itself: the join already partitions the change
+    * side on the key, so a per-key row count there is observed by the
+    * write's own job. On a duplicate the merge deletes its unpublished
+    * commit directory and throws before [[publish]], the commit point, so
+    * no reader ever sees it.
     */
   def merge(spark: SparkSession, dir: String, changes: DataFrame, key: String,
       deleteCol: Option[String] = None,
@@ -420,15 +414,7 @@ object SnapshotTable {
       require(changes.schema(dc).dataType == BooleanType,
         s"deleteCol '$dc' must be boolean, got ${changes.schema(dc).dataType}")
     }
-    // one tiny extra job over the (small-by-design) change side; a fan-out
-    // caught here costs an error, caught downstream costs a corrupt table
-    val dupKey = changes.groupBy(col(key)).count()
-      .filter(col("count") > 1).limit(1).collect()
-    if (dupKey.nonEmpty)
-      throw new IllegalArgumentException(
-        s"merge changes carry duplicate key '$key' = ${dupKey.head.get(0)}: " +
-          "MERGE requires a unique source key (multiple source rows matched)")
-    val current = read(spark, dir, None)
+    val current = readFiles(spark, dir, prev.files, prev.schemaDdl)
     // the tombstone flag is control metadata, excluded from every schema
     // computation below
     val payloadCols = changes.columns.toSeq.diff(deleteCol.toSeq)
@@ -440,15 +426,18 @@ object SnapshotTable {
     val missing = current.columns.toSeq.diff(payloadCols)
     require(missing.isEmpty,
       s"merge changes are missing table columns: ${missing.mkString(", ")}")
-    val changeKeys = changes.select(col(key)).distinct()
 
-    // URI-decode input_file_name so it compares equal to the manifest paths
+    // touched files: a semi join never fans out, so each task's distinct
+    // file names union on the driver — the scan and the key broadcast, no
+    // shuffle. URI-decode input_file_name so it compares equal to the
+    // manifest paths.
     val touchedAbs = current
       .select(col(key), input_file_name().as("__file"))
-      .join(broadcast(changeKeys), key)
-      .select("__file").distinct()
+      .join(broadcast(changes.select(col(key))), Seq(key), "left_semi")
+      .select("__file").as(Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(Encoders.STRING)
       .collect()
-      .map(r => Paths.get(new java.net.URI(r.getString(0)).getPath).toString)
+      .map(f => Paths.get(new java.net.URI(f).getPath).toString)
       .toSet
     val touchedRel = prev.files.filter(f => touchedAbs.contains(
       Paths.get(s"$dir/$f").toAbsolutePath.normalize.toString))
@@ -473,9 +462,19 @@ object SnapshotTable {
     // coalesce resurrection); tombstoned keys drop out entirely
     val t = touchedRows.select(struct(cols.map(col): _*).as("t")).withColumn("k", col(s"t.$key"))
     val del = deleteCol.map(dc => coalesce(col(dc), lit(false))).getOrElse(lit(false))
+    // rows per key on the change side, counted inside the join's own key
+    // partitioning: a duplicate caught here costs an error, caught
+    // downstream a corrupt table. Every change row survives the full-outer
+    // join, so the maximum is observed on the joined frame — a frame of
+    // the session that runs the write, which is the session whose
+    // listeners deliver the observation (`changes` may come from another,
+    // e.g. a streaming micro-batch's)
+    val dups = Observation()
     val c = changes.select(struct(cols.map(col): _*).as("c"), del.as("__del"))
       .withColumn("k", col(s"c.$key"))
+      .withColumn("__n", count(lit(1)).over(Window.partitionBy("k")))
     val merged = t.join(c, Seq("k"), "full_outer")
+      .observe(dups, max(col("__n")).as("n"), max_by(col("k"), col("__n")).as("k"))
       .filter(coalesce(col("__del"), lit(false)) === false)
       .select(when(col("c").isNotNull, col("c")).otherwise(col("t")).as("r"))
       .select("r.*")
@@ -486,6 +485,13 @@ object SnapshotTable {
     val w = merged.write.mode("errorifexists")
     (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
       .parquet(s"$dir/$commitDir")
+    val observed = dups.get
+    if (observed.get("n").exists(n => n != null && n.asInstanceOf[Long] > 1)) {
+      deleteTree(Paths.get(dir).resolve(commitDir))
+      throw new IllegalArgumentException(
+        s"merge changes carry duplicate key '$key' = ${observed("k")}: " +
+          "MERGE requires a unique source key (multiple source rows matched)")
+    }
     // untouched files keep their zone maps by reference; only the fresh
     // commit's files get a stats pass — same O(touched) cost shape as the
     // data rewrite itself

@@ -3,6 +3,8 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.etl.AdSchema
+
 /** Engine-boundary sources (SURVEY.md §2.1 S7/S10). */
 object Sources {
 
@@ -24,9 +26,14 @@ object Sources {
     docs.toDF("doc_id", "value")
   }
 
-  /** S10: curated parquet scan — pushdown + pruning come free. */
+  /** S10: curated parquet scan — pushdown + pruning come free. The schema
+    * is the one the curated sink writes ([[AdSchema.validated]]), never the
+    * footer's: an engine boundary never infers (footer inference is a Spark
+    * job per read), and a footer that disagrees on a column's type fails the
+    * scan instead of reading nulls.
+    */
   def curatedParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.read.schema(AdSchema.validated).parquet(path)
 
   /** Report CSV read-back (the S11 sink's inverse): schema is ALWAYS given
     * explicitly — CSV inference reads the data twice and types drift

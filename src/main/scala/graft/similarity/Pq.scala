@@ -434,12 +434,15 @@ object Pq {
       numCells: Int = 16, nprobe: Int = 4, m: Int = 8, ksub: Int = 16): DataFrame = {
     val spark = corpus.sparkSession
     val cents = Similarity.ivfCentroids(corpus, numCells).localCheckpoint(eager = false)
+    // one driver collect serves the cell assignment and the cross-term and
+    // cell-norm tables below
+    val centBook = Similarity.collectCents(cents)
     // residual frame: reused by codebook training AND encoding. withCells
     // keeps the embedding on the row, so the residual is one scan + one
     // broadcast join — the former (vec_id, cell) form re-joined the corpus to
     // itself by vec_id just to get the embedding back (r18)
     val resid = Similarity
-      .withCells(corpus.select(col("vec_id"), col("embedding")), cents)
+      .withCells(corpus.select(col("vec_id"), col("embedding")), centBook)
       .join(broadcast(cents), col("cell") === col("cent_id"))
       .select(col("vec_id"), col("cell"),
         zip_with(col("embedding").cast("array<double>"), col("cvec"),
@@ -451,8 +454,7 @@ object Pq {
     // form self-joined two resid derivatives by vec_id (r18)
     val file = codedFile(resid, books)
     // build-time cross-term + norm tables from the driver-held centroids
-    val centRows = cents.collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
+    val centRows = centBook._1.zip(centBook._2).toMap
     import spark.implicits._
     val crossRows = for {
       (cell, cvec) <- centRows.toSeq

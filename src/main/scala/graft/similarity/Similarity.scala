@@ -306,10 +306,15 @@ object Similarity {
     * consumer used to pay (a corpus-width sort-merge exchange — the
     * round-13 20M-vector disk death) disappears.
     */
-  def withCells(vectors: DataFrame, cents: DataFrame): DataFrame = {
-    val (ids, book) = collectCents(cents)
-    vectors.withColumn("cell", element_at(cellsCol(ids, book, 1), 1))
-  }
+  def withCells(vectors: DataFrame, cents: DataFrame): DataFrame =
+    withCells(vectors, collectCents(cents))
+
+  /** [[withCells]] against an already collected book, for callers that
+    * need the centroids on the driver for more than the assignment.
+    */
+  private[similarity] def withCells(vectors: DataFrame,
+      book: (Array[Int], Array[Array[Double]])): DataFrame =
+    vectors.withColumn("cell", element_at(cellsCol(book._1, book._2, 1), 1))
 
   /** IVF ANN: queries probe their `nprobe` closest cells; only vectors
     * filed under a probed cell get exact-scored. The inverted file is the

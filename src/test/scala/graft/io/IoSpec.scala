@@ -47,6 +47,28 @@ class IoSpec extends SparkSpec {
     assert(orcBack.count() === fixture.curated.count())
   }
 
+  test("curated read: pinned to the validated schema, a footer of another type fails loudly") {
+    import org.apache.spark.sql.functions._
+    import graft.etl.AdSchema
+    def namesAndTypes(s: org.apache.spark.sql.types.StructType) = s.map(f => (f.name, f.dataType))
+    // what the pipeline writes is what the curated read declares
+    val dir = Files.createTempDirectory("graft-curated-pin").toString + "/curated"
+    Sinks.curatedParquet(AdPipeline.fixtureRun(spark).curated, dir)
+    assert(namesAndTypes(spark.read.parquet(dir).schema) === namesAndTypes(AdSchema.validated))
+    assert(namesAndTypes(Sources.curatedParquet(spark, dir).schema) ===
+      namesAndTypes(AdSchema.validated))
+    // a directory whose footer says ad_id is a number: the scan fails
+    // instead of reading every ad_id as null
+    val bad = Files.createTempDirectory("graft-curated-bad").toString + "/curated"
+    Sinks.curatedParquet(spark.read.parquet(dir)
+      .withColumn("ad_id", col("ad_id").cast("long")), bad)
+    val err = intercept[org.apache.spark.SparkException] {
+      Sources.curatedParquet(spark, bad).select("ad_id").collect()
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("ad_id")), err.getMessage)
+  }
+
   test("raw landing sink round-trips through the whole-text source") {
     val landing = Files.createTempDirectory("graft-land-sink").toString + "/raw"
     val docs = Sources.rawAdsFromStrings(spark,
@@ -260,12 +282,27 @@ class IoSpec extends SparkSpec {
     val base = graft.util.Tables.orders(spark, sf())
       .select("o_orderkey", "o_totalprice", "o_orderstatus")
     SnapshotTable.create(base, dir)
-    val dupChanges = base.limit(2).unionByName(base.limit(1)) // key repeated
-    val err = intercept[IllegalArgumentException] {
-      SnapshotTable.merge(spark, dir, dupChanges, "o_orderkey")
+    val v1Rows = SnapshotTable.read(spark, dir).orderBy("o_orderkey").collect().toSeq
+    // the check runs inside the rewrite, after the write: a rejected merge
+    // leaves no commit directory behind and the table reads as version 1
+    def rejected(changes: org.apache.spark.sql.DataFrame, deleteCol: Option[String]): Unit = {
+      val err = intercept[IllegalArgumentException] {
+        SnapshotTable.merge(spark, dir, changes, "o_orderkey", deleteCol = deleteCol)
+      }
+      assert(err.getMessage.contains("duplicate key"))
+      assert(SnapshotTable.latestVersion(dir) === 1, "failed merge must not publish")
+      val commitDirs = Files.list(Paths.get(dir, "data"))
+        .iterator().asScala.map(_.getFileName.toString).toSeq
+      assert(!commitDirs.exists(_.startsWith("c2_")),
+        s"a rejected merge must delete its commit dir: $commitDirs")
+      assert(SnapshotTable.read(spark, dir).orderBy("o_orderkey").collect().toSeq === v1Rows)
     }
-    assert(err.getMessage.contains("duplicate key"))
-    assert(SnapshotTable.latestVersion(dir) === 1, "failed merge must not publish")
+    val dupChanges = base.limit(2).unionByName(base.limit(1)) // key repeated
+    rejected(dupChanges, None)
+    // tombstones count as change rows: an update and a delete of one key
+    // are two source rows for it
+    rejected(base.limit(2).withColumn("__del", lit(false))
+      .unionByName(base.limit(1).withColumn("__del", lit(true))), Some("__del"))
   }
 
   test("snapshot table: clustered compaction makes zone maps disjoint and pruning selective") {
