@@ -18,12 +18,9 @@ object AdPipeline {
   /** In-memory run over raw JSON documents (used by fixtures and entry).
     * The parsed frame stays persisted: callers read the outputs lazily.
     */
-  def run(rawDocs: DataFrame, now: Instant): Outputs = persistedRun(rawDocs, now)._2
-
-  /** The run plus the frame it persisted, for callers that can release it. */
-  private def persistedRun(rawDocs: DataFrame, now: Instant): (DataFrame, Outputs) = {
-    val (parsed, curated, quarantine) = curate(rawDocs)
-    (parsed, Outputs(curated, quarantine, Report.report(curated, now)))
+  def run(rawDocs: DataFrame, now: Instant): Outputs = {
+    val (_, curated, quarantine) = curate(rawDocs)
+    Outputs(curated, quarantine, Report.report(curated, now))
   }
 
   /** The transform composition of every ad run, batch or streaming:
@@ -51,12 +48,12 @@ object AdPipeline {
       reportDir: String,
       now: Instant,
   ): Unit = {
-    val (parsed, out) = persistedRun(Sources.rawAdsJson(spark, rawJsonPath), now)
+    val (parsed, curated, quarantine) = curate(Sources.rawAdsJson(spark, rawJsonPath))
     // the report reads curated back from parquet, so once both sinks have
     // written nothing reads the persisted frame again: release it
     try {
-      Sinks.quarantineJson(out.quarantine, quarantineDir)
-      Sinks.curatedParquet(out.curated, curatedDir)
+      Sinks.quarantineJson(quarantine, quarantineDir)
+      Sinks.curatedParquet(curated, curatedDir)
     } finally parsed.unpersist()
     Sinks.reportCsv(Sources.curatedParquet(spark, curatedDir)
       .transform(Report.report(_, now)), reportDir)

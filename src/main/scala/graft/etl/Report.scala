@@ -24,9 +24,16 @@ object Report {
   )
 
   def report(curated: DataFrame, now: Instant, k: Int = 10): DataFrame = {
+    // `now` is a decimal literal subtracted from a column: Catalyst cannot
+    // fold it into a constant, so the generated code reads it as a
+    // reference object and every run reuses one compiled class (a double
+    // constant was inlined, two recompiles per run). Exact either way:
+    // both operands are whole seconds below 2^53.
+    val seconds = DecimalType(20, 0)
     val secondsPassed = coalesce(
       col("total_active_time_sec").cast(DoubleType),
-      lit(now.getEpochSecond).cast(DoubleType) - col("start_date_ts").cast(DoubleType),
+      (lit(new java.math.BigDecimal(now.getEpochSecond)).cast(seconds) -
+        col("start_date_ts").cast(seconds)).cast(DoubleType),
     )
     curated
       .withColumn("ad_link", concat(lit(adLinkPrefix), col("ad_id")))             // F1

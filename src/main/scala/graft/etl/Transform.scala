@@ -5,14 +5,16 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.functions.LangId
+import graft.functions.{ArrayFunctions, LangId}
 
 /** The transform stage (transform_raw_data.py:192-235) as a declarative
   * Catalyst pipeline:
   *
-  *   scan → posexplode² (P1) → project/derive (P2-P5, F6) →
-  *   validation when-chain (V1-V5) → [quarantine] ⊕ [3× keep-first dedup (D1)]
+  *   scan → posexplode² with the group running max (P1, P3) →
+  *   project/derive (P2, P4, P5, F6) → validation when-chain (V1-V5) →
+  *   [quarantine] ⊕ [3× keep-first dedup (D1)]
   *
+  * Everything up to validation is narrow: no shuffle before the dedup.
   * Order-dependence (SURVEY §7.1): the reference's semantics hinge on raw
   * file position. We materialize (doc_id, group_idx, pos) from the JSON array
   * indices themselves via double posexplode — stable under any partitioning,
@@ -23,8 +25,9 @@ object Transform {
 
   // ---------------------------------------------------------------- flatten
 
-  /** P1: one row per ad with its positional ordinals. Input: one row per raw
-    * JSON document with columns (doc_id: String, value: String).
+  /** P1: one row per ad with its positional ordinals and its group's
+    * running max (P3). Input: one row per raw JSON document with columns
+    * (doc_id: String, value: String).
     *
     * posexplode_outer, not posexplode: the plain variant makes Catalyst
     * infer a `size(groups) > 0` filter that pushdown rewrites as a second
@@ -39,15 +42,35 @@ object Transform {
       .select(col("doc_id"), from_json(col("value"), AdSchema.rawDocument).as("groups"))
       .select(col("doc_id"), posexplode_outer(col("groups")).as(Seq("group_idx", "group")))
       .filter(col("group_idx").isNotNull)
-      .select(col("doc_id"), col("group_idx"), posexplode_outer(col("group")).as(Seq("pos", "ad")))
+      .select(col("doc_id"), col("group_idx"), posexplode_outer(arrays_zip(
+          col("group").as("ad"), runningMax(col("group")).as("grouped_ads_count")))
+        .as(Seq("pos", "z")))
       .filter(col("pos").isNotNull)
+      .select(col("doc_id"), col("group_idx"), col("pos"),
+        col("z.ad").as("ad"), col("z.grouped_ads_count").as("grouped_ads_count"))
+
+  /** P3 running max (transform_raw_data.py:114-116): group-scoped state in
+    * file order, and a group is exactly one array of one document, so one
+    * native O(n) pass over it ([[graft.functions.RunningMax]]) replaces a
+    * window that shuffled and sorted every ad by (doc_id, group_idx). Rows
+    * the reference drops BEFORE reaching the state update (KeyError on
+    * ad_archive_id/is_active/start_date, lines :107-110) must not advance
+    * the max; rows that fail only later (bad epoch, enum, date order)
+    * must. The contribution's condition mirrors that boundary; a null ad
+    * contributes nothing. Zipped with the ads, the max explodes with them:
+    * O(n) per group, where a per-row copy of the whole array would be O(n²).
+    */
+  private def runningMax(group: Column): Column =
+    ArrayFunctions.runningMax(transform(group, ad =>
+      when(ad.getField("ad_archive_id").isNotNull && ad.getField("is_active").isNotNull &&
+        ad.getField("start_date").isNotNull, coalesce(ad.getField("collation_count"), lit(0L)))))
 
   // ----------------------------------------------------------------- derive
 
   /** Truthiness guard (F8): Python's `if s:` — null and "" are both falsy. */
   private def truthy(c: Column): Column = c.isNotNull && c =!= ""
 
-  /** P2-P5 + F6. One narrow projection plus a single window pass (P3). */
+  /** P2, P4, P5 + F6: one narrow projection over [[flatten]]'s rows. */
   def derive(flat: DataFrame): DataFrame = {
     val ad   = col("ad")
     val fmt  = ad.getField("snapshot").getField("display_format")
@@ -78,22 +101,6 @@ object Transform {
       lit(""),
     )
 
-    // P3 running max (transform_raw_data.py:114-116): group-scoped state in
-    // file order. Rows the reference drops BEFORE reaching the state update
-    // (KeyError on ad_archive_id/is_active/start_date, lines :107-110) must
-    // not advance the max; rows that fail only later (bad epoch, enum, date
-    // order) must. `contributes` mirrors that boundary.
-    val contributes = ad.getField("ad_archive_id").isNotNull &&
-      ad.getField("is_active").isNotNull && ad.getField("start_date").isNotNull
-    val w = Window
-      .partitionBy(col("doc_id"), col("group_idx"))
-      .orderBy(col("pos"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val runningMax = coalesce(
-      max(when(contributes, coalesce(ad.getField("collation_count"), lit(0L)))).over(w),
-      lit(0L),
-    )
-
     flat.select(
       col("doc_id"), col("group_idx"), col("pos"),
       ad.getField("ad_archive_id").as("ad_id"),
@@ -102,7 +109,7 @@ object Transform {
       ad.getField("end_date").as("end_date_ts"),
       ad.getField("total_active_time").as("total_active_time_sec"),
       ad.getField("collation_id").as("ad_group_id"),
-      runningMax.as("grouped_ads_count"),
+      col("grouped_ads_count"),
       fmt.as("display_format"),
       mediaMix.as("media_mix"),
       adText.as("ad_text"),

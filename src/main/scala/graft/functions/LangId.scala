@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * langdetect covered ~55 languages; this heuristic covers 62 —
   * twenty-three script classes (seven of which disambiguate further, see
   * below) and thirty-two Latin-script languages by stopword argmax — while
-  * staying expression-only and exactly mirrorable in the DuckDB oracle.
+  * staying exactly mirrorable in the DuckDB oracle.
   *
   * Decision order (first match wins, both engines):
   *   1. null/empty → undetected
@@ -27,23 +27,18 @@ import org.apache.spark.sql.functions._
   *   3. argmax of distinct stopword hits per Latin-script language, ties
   *      broken by [[langs]] order; zero hits → undetected.
   *
-  * DATA-DRIVEN PLAN SHAPE (round 8): the round-7 form compiled an
-  * O(languages) CASE tree — one array_intersect + one case arm per
-  * language, ~500 expression nodes at 62 languages — and every ETL /
-  * curation query that embeds language id paid its plan-analysis and
-  * codegen cost again (the round-7 bench regression: the ETL trio
-  * 7.8 → 20.9 s). This form is constant-size in the language count:
-  * the whole stopword table is ONE array-of-struct literal ([[vocab]],
-  * a single Literal node however many languages it carries), scored by
-  * one generic scorer — tokens → matching (word, lang) pairs → per-lang
-  * hit counts → argmax decoded from a packed `count*64 + (63-index)`
-  * integer, ties falling to the smaller index exactly like the old
-  * first-match case chain. Adding a language now grows DATA, not the
-  * plan. Sub-expressions that lambda bodies would otherwise re-evaluate
-  * per element (Catalyst does not CSE through lambda bodies) are bound
-  * once via the single-element-array lambda-let idiom:
-  * `element_at(transform(array(x), v => body(v)), 1)` evaluates `x`
-  * exactly once per row on both engines.
+  * ONE NATIVE KERNEL: [[langId]] is a single expression node,
+  * `graft_langid(text)` ([[LangIdDetect]]), whatever the language count.
+  * As a Catalyst expression tree the classifier was a few hundred nodes
+  * with lambda argmaxes, paid for in analysis, plan rendering and
+  * interpreted evaluation by every plan that embeds language id. The
+  * kernel runs the same decisions: the script-class regexes through
+  * java.util.regex (what Spark's `regexp_like` runs), the token table of
+  * [[LangIdHits]] and the packed `count*64 + (63-index)` argmax, ties
+  * falling to the smaller index. The expression form stays in the test
+  * sources as the reference the kernel must agree with. [[duckDbSql]] is
+  * the oracle's data-driven form: the stopword table is one
+  * list-of-struct literal, so adding a language grows data, not the query.
   */
 object LangId {
 
@@ -169,8 +164,8 @@ object LangId {
   val allLangs: Seq[String] =
     langs ++ groupOrder.flatMap(g => scriptGroups(g).map(_._1))
 
-  /** The whole scoring table as data: (stopword, language index). One
-    * array-of-struct Literal node in the plan regardless of language count.
+  /** The whole scoring table as data: (stopword, language index). The
+    * kernel's token table and the oracle's one list literal.
     */
   private[functions] val vocab: Seq[(String, Int)] = {
     val byLang: Seq[(String, Seq[String])] =
@@ -182,7 +177,7 @@ object LangId {
     * majority first) — the group argmax is the generic argmax restricted to
     * this span.
     */
-  private val groupSpan: Map[String, (Int, Int)] = {
+  private[functions] val groupSpan: Map[String, (Int, Int)] = {
     var next = langs.size
     groupOrder.map { g =>
       val lo = next
@@ -191,78 +186,13 @@ object LangId {
     }.toMap
   }
 
-  private val latinSpan: (Int, Int) = (0, langs.size - 1)
+  /** Index span of the Latin-script languages inside [[allLangs]]. */
+  private[functions] val latinSpan: (Int, Int) = (0, langs.size - 1)
 
-  /** Lambda-let: bind `x` once and evaluate `body` against the bound value.
-    * Catalyst does not CSE through lambda bodies or CaseWhen branches, so
-    * any multiply-referenced non-trivial value must be bound this way (or
-    * materialized as a projection column) to be computed once per row.
+  /** The language of `text` (null or empty reads "undetected"): one
+    * native node, see [[LangIdDetect]].
     */
-  private def bind(x: Column)(body: Column => Column): Column =
-    element_at(transform(array(x), body), 1)
-
-  /** Language indices hit by the text, with one entry per matched
-    * (stopword, language) pair — a language's count is its number of
-    * DISTINCT matched stopwords, exactly the round-7
-    * `size(array_intersect(tokens, stopwords))` semantics.
-    *
-    * Round 9: the expression form (`filter(vocabLiteral, p =>
-    * array_contains(toks, w))`) scanned every vocabulary entry against
-    * every token — ~|vocab|·|tokens| string compares per row, the
-    * q_text_langid hot loop. [[LangIdHits]] is the token-major native
-    * kernel: each DISTINCT token is one hash lookup in a static
-    * stopword→languages table, O(tokens) per row, same (word, language)
-    * hit multiset (the downstream argmax is order-insensitive), null-vs-
-    * empty difference unobservable behind [[decide]]'s null/empty guard.
-    */
-  private def hitsExpr(text: Column): Column =
-    call_function(LangIdFunctions.hitsName, text)
-
-  /** Argmax over the hit counts restricted to index span [lo, hi]; null
-    * when the span has no hits. Count and tie-break ride one packed
-    * integer: `count*64 + (63 - index)` — the max has the highest count,
-    * and among equal counts the smallest index (= highest declared
-    * priority), matching the round-7 first-match case chain. Safe because
-    * counts are ≤ 12 (stopwords per language) and indices < 64.
-    */
-  private def argmaxExpr(hits: Column, span: (Int, Int)): Column =
-    bind(filter(hits, h => h >= lit(span._1) && h <= lit(span._2))) { g =>
-      val enc = transform(array_distinct(g),
-        i => size(filter(g, h => h === i)) * lit(64) + (lit(63) - i))
-      element_at(typedlit(allLangs), lit(64) - (array_max(enc) % lit(64)))
-    }
-
-  /** The decision chain over a bound hits value: script classes in
-    * declared order (shared scripts → span-restricted argmax with the
-    * majority language as zero-hit fallback), then the Latin stopword
-    * argmax. Scripts are disjoint from Latin tokens, so restricting each
-    * argmax to its span reproduces the round-7 per-group decisions bit for
-    * bit.
-    */
-  private def decide(text: Column, hits: Column): Column = {
-    val byScore = coalesce(argmaxExpr(hits, latinSpan), lit("undetected"))
-    val chain = scriptClasses.foldRight(byScore) { case ((l, cls), acc) =>
-      val verdict = groupSpan.get(l)
-        .map(span => coalesce(argmaxExpr(hits, span), lit(l)))
-        .getOrElse(lit(l))
-      when(regexp_like(text, lit(cls)), verdict).otherwise(acc)
-    }
-    val byScript = when(regexp_like(text, lit(anyScriptClass)), chain).otherwise(byScore)
-    when(text.isNull || length(text) === 0, "undetected").otherwise(byScript)
-  }
-
-  def langId(text: Column): Column =
-    bind(hitsExpr(text))(hits => decide(text, hits))
-
-  /** DataFrame form of [[langId]] — kept for call sites that want the text
-    * expression applied with an output column name; since the round-8
-    * lambda-let binding already evaluates the scorer once per row, this is
-    * now just a withColumn.
-    */
-  def withLangId(df: org.apache.spark.sql.DataFrame, text: Column, out: String)
-      : org.apache.spark.sql.DataFrame = {
-    df.withColumn(out, langId(text))
-  }
+  def langId(text: Column): Column = call_function(LangIdFunctions.langIdName, text)
 
   /** The same heuristic as DuckDB SQL, parameterized on the text
     * expression — used by graft.text oracle queries so the two sides stay
@@ -299,8 +229,10 @@ object LangId {
   }
 }
 
-/** Token-major stopword scorer (see [[LangId.hitsExpr]]): language indices
-  * hit by the text, one entry per matched (stopword, language) pair.
+/** Token-major stopword scorer: language indices hit by the text, one
+  * entry per matched (stopword, language) pair — a language's count is its
+  * number of DISTINCT matched stopwords. Each distinct token is one hash
+  * lookup in a static stopword→languages table, O(tokens) per row.
   * Tokenization is bit-compatible with `array_distinct(split(lower(text),
   * TextAnalysis.wsRe))` and the oracle's RE2 `\s+` — the explicit
   * [ \t\n\f\r] class (see [[graft.text.TextAnalysis.wsRe]]: Java's `\s`
@@ -341,8 +273,7 @@ object LangIdHits {
   import org.apache.spark.unsafe.types.UTF8String
 
   /** stopword → the language indices it scores for (a word may belong to
-    * several languages; each membership is one hit entry, as in the
-    * expression form).
+    * several languages; each membership is one hit entry).
     */
   private val table: java.util.HashMap[String, Array[Int]] = {
     val m = new java.util.HashMap[String, Array[Int]]()
@@ -352,25 +283,121 @@ object LangIdHits {
     m
   }
 
-  def compute(text: UTF8String): ArrayData = {
-    // RE2's \s set, matching the oracle's string_split_regex (Java's \s
-    // additionally contains \x0B — see graft.text.TextAnalysis.wsRe)
-    val toks = text.toLowerCase.toString.split("[ \\t\\n\\f\\r]+", -1)
+  /** RE2's \s set, matching the oracle's string_split_regex (Java's \s
+    * additionally contains \x0B — see graft.text.TextAnalysis.wsRe);
+    * compiled once, where `String.split` would compile it per row.
+    */
+  private val whitespace = java.util.regex.Pattern.compile("[ \\t\\n\\f\\r]+")
+
+  def compute(text: UTF8String): ArrayData = new GenericArrayData(hits(text))
+
+  /** The hit entries of a non-null text, in token order. */
+  private[functions] def hits(text: UTF8String): Array[Int] = {
+    val toks = whitespace.split(text.toLowerCase.toString, -1)
     val seen = new java.util.HashSet[String](toks.length * 2)
-    val out = new java.util.ArrayList[Any](8)
+    val out = Array.newBuilder[Int]
     var i = 0
     while (i < toks.length) {
       val t = toks(i)
       if (seen.add(t)) {
         val langs = table.get(t)
-        if (langs != null) {
-          var j = 0
-          while (j < langs.length) { out.add(langs(j)); j += 1 }
-        }
+        if (langs != null) out ++= langs
       }
       i += 1
     }
-    new GenericArrayData(out.toArray)
+    out.result()
+  }
+}
+
+/** `graft_langid(text)`: the whole classifier as one native node (see
+  * [[LangId]] for the decision order). Never null: null and empty text
+  * read "undetected".
+  */
+case class LangIdDetect(child: org.apache.spark.sql.catalyst.expressions.Expression)
+    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+  import org.apache.spark.sql.catalyst.expressions.Expression
+  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+  import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+  import org.apache.spark.sql.types._
+  import org.apache.spark.unsafe.types.UTF8String
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case StringType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"${LangIdFunctions.langIdName} expects a string input, got $other")
+  }
+
+  override def dataType: DataType = StringType
+
+  override def nullable: Boolean = false
+
+  override def eval(input: InternalRow): Any =
+    LangIdDetect.detect(child.eval(input).asInstanceOf[UTF8String])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      UTF8String ${ev.value} =
+        graft.functions.LangIdDetect.detect(${c.isNull} ? null : ${c.value});""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): LangIdDetect =
+    copy(child = newChild)
+
+  override def prettyName: String = LangIdFunctions.langIdName
+}
+
+object LangIdDetect {
+  import java.util.regex.Pattern
+
+  import org.apache.spark.unsafe.types.UTF8String
+
+  private val undetected = UTF8String.fromString("undetected")
+  private val codes: Array[UTF8String] = LangId.allLangs.map(UTF8String.fromString).toArray
+  private val anyScript = Pattern.compile(LangId.anyScriptClass)
+  private val scripts: Array[Pattern] =
+    LangId.scriptClasses.map(sc => Pattern.compile(sc._2)).toArray
+  private val scriptCodes: Array[UTF8String] =
+    LangId.scriptClasses.map(sc => UTF8String.fromString(sc._1)).toArray
+  /** The argmax span of each script class; null for single-language scripts. */
+  private val scriptSpans: Array[(Int, Int)] =
+    LangId.scriptClasses.map(sc => LangId.groupSpan.getOrElse(sc._1, null)).toArray
+
+  def detect(text: UTF8String): UTF8String = {
+    if (text == null || text.numBytes == 0) return undetected
+    val hits = LangIdHits.hits(text)
+    val s = text.toString
+    if (anyScript.matcher(s).find()) {
+      var k = 0
+      while (k < scripts.length) {
+        if (scripts(k).matcher(s).find()) {
+          val span = scriptSpans(k)
+          return if (span == null) scriptCodes(k) else argmax(hits, span, scriptCodes(k))
+        }
+        k += 1
+      }
+    }
+    argmax(hits, LangId.latinSpan, undetected)
+  }
+
+  /** The language in `span` with the most hits, ties to the smaller index:
+    * the max of `count*64 + (63 - index)`; `none` when the span has no hits.
+    */
+  private def argmax(hits: Array[Int], span: (Int, Int), none: UTF8String): UTF8String = {
+    val counts = new Array[Int](codes.length)
+    var i = 0
+    while (i < hits.length) { counts(hits(i)) += 1; i += 1 }
+    var best = -1
+    i = span._1
+    while (i <= span._2) {
+      if (counts(i) > 0) best = math.max(best, counts(i) * 64 + (63 - i))
+      i += 1
+    }
+    if (best < 0) none else codes(63 - best % 64)
   }
 }
 
@@ -378,6 +405,8 @@ object LangIdHits {
 object LangIdFunctions {
 
   val hitsName = "graft_langid_hits"
+
+  val langIdName = "graft_langid"
 
   def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = Natives.install(spark)
 }

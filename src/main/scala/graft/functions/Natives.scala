@@ -63,6 +63,8 @@ object Natives {
         Args.intLiteral(WinnowFunctions.winnowName, es, 1),
         Args.intLiteral(WinnowFunctions.winnowName, es, 2))),
       row(LangIdFunctions.hitsName, classOf[LangIdHits])(es => LangIdHits(es.head)),
+      row(LangIdFunctions.langIdName, classOf[LangIdDetect])(es => LangIdDetect(es.head)),
+      row(ArrayFunctions.runningMaxName, classOf[RunningMax])(es => RunningMax(es.head)),
       row(BloomFunctions.aggName, classOf[BloomFilterAggregate])(es =>
         new BloomFilterAggregate(es(0), es(1), es(2))),
       row(BloomFunctions.containsName, classOf[BloomFilterMightContain])(es =>

@@ -150,8 +150,9 @@ object Curation {
     // scan: each gate is a compiled per-row kernel/expression, and the
     // sf10 probe put a single full-text pass at 13–19 s, so the former
     // formulation (three gate frames + a separate fingerprint pass) paid
-    // up to three avoidable corpus reads. Formulas are byte-identical to
-    // LangId.langId / TextAnalysis.qualityGate / repetitionGates — the
+    // up to three avoidable corpus reads. Language id is the one native
+    // classifier node (LangId.langId); the other formulas are
+    // byte-identical to TextAnalysis.qualityGate / repetitionGates — the
     // repetition bound inlines repetitionGates' exact thresholds, with
     // kernel-null (zero tokens) folding to false exactly as the dropped
     // row did through the old left join.

@@ -151,12 +151,9 @@ object TextAnalysis {
       ORDER BY doc_id
     """),
   ) { (s, d) =>
-    // two-projection form: the per-language scores materialize once per
-    // row (LangId.withLangId) — the single-expression form re-evaluates
-    // them per CaseWhen branch reference, ~10x the work
-    LangId.withLangId(
-        Tables.documents(s, d).select("doc_id", "lang", "text"),
-        col("text"), "lang_pred")
+    // one native classifier node per row (LangId.langId)
+    Tables.documents(s, d).select("doc_id", "lang", "text")
+      .withColumn("lang_pred", LangId.langId(col("text")))
       .select(
         col("doc_id"), col("lang"), col("lang_pred"),
         (col("lang") === col("lang_pred")).as("lang_match"))

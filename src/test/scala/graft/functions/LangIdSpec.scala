@@ -102,14 +102,69 @@ class LangIdSpec extends SparkSpec {
     assert(df.collect().map(_.getString(0)).forall(_ == "undetected"))
   }
 
-  test("withLangId (two-projection form) equals langId on goldens and edges") {
+  /** (reference verdict, kernel verdict) per text, in input order. */
+  private def bothForms(texts: Seq[Option[String]]): Seq[(String, String)] = {
     import spark.implicits._
-    val texts = goldens.map(_._2) ++ Seq("", "zzz qqq", "in en", "漢字とひらがな", "漢字")
-    val df = texts.toDF("text")
-    val a = df.select(LangId.langId(col("text")).as("p")).collect().map(_.getString(0))
-    val b = LangId.withLangId(df, col("text"), "p")
-      .select("p").collect().map(_.getString(0))
-    assert(a.toSeq === b.toSeq)
+    texts.toDF("text")
+      .select(LangIdReference.langId(col("text")), LangId.langId(col("text")))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toSeq
+  }
+
+  private def mismatches(texts: Seq[Option[String]], verdicts: Seq[(String, String)]): Seq[String] =
+    texts.zip(verdicts).collect { case (t, (ref, got)) if ref != got =>
+      s"$t: reference $ref, kernel $got" }
+
+  test("native kernel equals the expression-form reference on goldens and edges") {
+    val edges = Seq(None, Some(""), Some(" "), Some("zzz qqq"), Some("in en"), Some("IN EN"),
+      Some("漢字とひらがな"), Some("漢字"), Some("カタカナ 漢字"), Some("한국어 漢字"),
+      Some("книга глава слово"), Some("كتاب فصل كلمة"), Some("पुस्तक अध्याय शब्द"),
+      Some("це це это"), Some("это це"), Some("است في"), Some("है आहे"),
+      Some("og det som"), Some("ja on ei"), Some("the\u000Band"), Some("the\tand\nof"),
+      Some("the cat это"), Some("12345 67890"))
+    val texts = goldens.map(g => Some(g._2)) ++ edges
+    val bad = mismatches(texts, bothForms(texts))
+    assert(bad.isEmpty, bad.mkString("; "))
+  }
+
+  test("native kernel equals the expression-form reference on a seeded script-mixing sweep") {
+    val rng = new scala.util.Random(20261020L)
+    val latin = LangId.langs.flatMap(LangId.stopwords)
+    val grouped = LangId.scriptGroups.values.flatten.flatMap(_._2).toSeq
+    val scriptChars = LangId.scriptClasses.map { case (_, cls) =>
+      val lo = cls.codePointAt(1)
+      val hi = cls.codePointAt(cls.offsetByCodePoints(1, 2))
+      () => new String(Character.toChars(lo + rng.nextInt(hi - lo + 1)))
+    }
+    val fillers = Seq("cat", "zzz", "42", "the,", "ÉTÉ", "Der", "ЭТО", "x")
+    val seps = Seq(" ", " ", " ", "  ", "\t", "\n", "\r", "\f", "\u000B")
+    def token(): String = rng.nextInt(10) match {
+      case 0 | 1 | 2 => latin(rng.nextInt(latin.size))
+      case 3 | 4 => grouped(rng.nextInt(grouped.size))
+      case 5 => scriptChars(rng.nextInt(scriptChars.size))()
+      case 6 => latin(rng.nextInt(latin.size)).toUpperCase
+      case _ => fillers(rng.nextInt(fillers.size))
+    }
+    /** k and k or k±1 distinct stopwords of two languages of one segment. */
+    def nearTie(): String = {
+      val pool: Seq[Seq[String]] =
+        if (rng.nextBoolean()) LangId.langs.map(LangId.stopwords)
+        else LangId.scriptGroups.values.toSeq(rng.nextInt(3)).map(_._2)
+      val Seq(a, b) = rng.shuffle(pool.indices.toList).take(2).map(pool)
+      val k = 1 + rng.nextInt(3)
+      val ws = rng.shuffle(a.take(k) ++ b.take(k + rng.nextInt(3) - 1))
+      ws.mkString(seps(rng.nextInt(seps.size)))
+    }
+    val texts = Seq.fill(4000) {
+      if (rng.nextInt(4) == 0) Some(nearTie())
+      else Some(Seq.fill(rng.nextInt(9))(token()).mkString(seps(rng.nextInt(seps.size))))
+    } :+ None
+    val verdicts = bothForms(texts)
+    val bad = mismatches(texts, verdicts)
+    assert(bad.isEmpty, bad.take(20).mkString("; "))
+    // the sweep reaches every shared-script member and the Latin argmax
+    val seen = verdicts.map(_._1).toSet
+    assert(Set("uk", "bg", "mk", "fa", "ur", "mr", "ne", "ja", "zh", "undetected").subsetOf(seen))
+    assert(seen.intersect(LangId.langs.toSet).size >= 25, seen)
   }
 
   test("shared-script text without distinctive words falls back to the majority language") {

@@ -8,10 +8,14 @@ import scala.collection.mutable
 import org.apache.spark.ListenerDrain
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.Alias
+import org.apache.spark.sql.catalyst.plans.logical.{Project, Window}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.SparkSpec
 import graft.etl.{AdFixture, AdPipeline}
+import graft.functions.LangIdDetect
 
 /** The Spark jobs one landing batch runs: the paper's pipeline over a
   * landing directory, then the curated snapshot upsert — the operation
@@ -19,10 +23,10 @@ import graft.etl.{AdFixture, AdPipeline}
   */
 class LandingJobsSpec extends SparkSpec {
 
-  /** Jobs a merge batch may run: 13 on the fixture and on the benchmark's
-    * batches (`plans/etl-batch-jobs/README.md` has the per-job table).
+  /** Jobs a merge batch may run: 11 on the fixture and on the benchmark's
+    * batches (`plans/etl-one-pass/README.md` has the per-job table).
     */
-  private val mergeBatchJobBudget = 13
+  private val mergeBatchJobBudget = 11
 
   private final class Recorder extends SparkListener {
     val jobs = mutable.ArrayBuffer.empty[Option[String]] // execution id per job
@@ -68,5 +72,22 @@ class LandingJobsSpec extends SparkSpec {
     assert(warm.jobs.size <= mergeBatchJobBudget)
     assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled <= 5,
       "a warm batch recompiled its generated classes")
+  }
+
+  test("persisted parse: one narrow pass, and language id is one expression node") {
+    val (parsed, _, _) = AdPipeline.curate(
+      Sources.rawAdsFromStrings(spark, Seq(("fixture", AdFixture.json))))
+    try {
+      val qe = parsed.queryExecution
+      assert(qe.optimizedPlan.collect { case w: Window => w }.isEmpty, "the parse plans a Window")
+      assert(qe.executedPlan.collect { case e: Exchange => e }.isEmpty, "the parse plans an Exchange")
+      val langIds = qe.analyzed.collect { case p: Project => p.projectList }.flatten.collect {
+        case a: Alias if a.name == "ad_lang_code" => a.child
+      }
+      assert(langIds.size === 1)
+      assert(langIds.head.isInstanceOf[LangIdDetect] &&
+        langIds.head.children.forall(_.collect { case d: LangIdDetect => d }.isEmpty),
+        s"ad_lang_code is not one classifier node: ${langIds.head.treeString}")
+    } finally parsed.unpersist()
   }
 }
